@@ -1,7 +1,15 @@
 package graft.mapreduce
 
 import graft.core.{BinPack, Chunker, PyText, Wrap}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
+
+import scala.annotation.tailrec
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
 /** The map/reduce functor — the engine's X2 extension point: a
   * stateless `String => String` text transform standing in for "the
@@ -253,74 +261,100 @@ final class MapReduceEngine(
   // ----------------------------------------------------------- distributed
   /** Distributed execution: functor calls on executors, bin-pack
     * boundaries from collected lengths only. Byte-identical to
-    * [[runLocal]] for a deterministic functor.
+    * [[runLocal]] for a deterministic functor, and calls the functor
+    * exactly as often: once per group of every level.
+    *
+    * Each level is evaluated once. One pass over the input collects
+    * `(ord, byteLen)` (its length is `n`); every later level is
+    * persisted, its `(key, byteLen)` pairs are read from that one
+    * materialization, and the level it supersedes is then released
+    * with its group-id broadcast. A level whose bin-pack yields a
+    * single group — always the last — folds in one task
+    * (`coalesce(1)`: no shuffle) and its string is collected
+    * directly. The driver holds lengths and group ids, never
+    * contents, which bounds one fold at about 1e6 chunks.
     */
   def run(spark: SparkSession, chunks: Dataset[MrChunk],
           question: String = MrTemplates.DefaultQuestion): String = {
     import spark.implicits._
     val f = functor
     val q = question
-    val n = chunks.count()
-    require(n > 0, "no chunks to fold")
-    if (n == 1) return chunks.orderBy("ord").head().wrapped
+    val lens = chunks.select($"ord", $"content")
+      .map(r => (r.getLong(0), PyText.utf8Len(r.getString(1))))
+      .collect().sortBy(_._1)
+    require(lens.nonEmpty, "no chunks to fold")
+    if (lens.length == 1) return chunks.head().wrapped
 
-    var results: Dataset[(Long, String)] =
-      if (compactMap) {
-        // order-preserving group ids from (ord, byteLen) — driver sees lengths only
-        val lens = chunks.select($"ord", $"content")
-          .map(r => (r.getLong(0), PyText.utf8Len(r.getString(1))))
-          .collect().sortBy(_._1)
-        val ids = BinPack.groupIds(
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(lens.map(_._2)),
-          chunkSize, minPerGroup = 0)
-        val ord2gid = lens.map(_._1).zip(ids).toMap
-        val bc = spark.sparkContext.broadcast(ord2gid)
-        val grouped = chunks.groupByKey(c => bc.value(c.ord))
-          .mapGroups { (gid, it) =>
-            val sorted = it.toVector.sortBy(_.ord)
-            (gid.toLong, f(MrTemplates.padChunksBeforeMap(sorted, q)))
-          }
-        // reference edge case: oversized first chunk ⇒ leading empty
-        // group gets its own functor call (mapreduce.py:70-76)
-        if (ids.nonEmpty && ids(0) == 1)
-          grouped.union(spark.createDataset(Seq(
-            (0L, f(MrTemplates.padChunksBeforeMap(Nil, q))))))
-        else grouped
-      } else {
-        chunks.map(c => (c.ord, f(MrTemplates.padChunkBeforeMap(c, q))))
-      }
-
-    var count = results.count()
-    while (count > 1) {
-      results =
-        if (compactReduce) {
-          val lens = results.map { case (ord, s) => (ord, PyText.utf8Len(s)) }
-            .collect().sortBy(_._1)
-          val ids = BinPack.groupIds(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(lens.map(_._2)),
-            chunkSize, minPerGroup = 2)
-          val ord2gid = lens.map(_._1).zip(ids).toMap
-          val bc = spark.sparkContext.broadcast(ord2gid)
-          results.groupByKey { case (ord, _) => bc.value(ord) }
-            .mapGroups { (gid, it) =>
-              val sorted = it.toVector.sortBy(_._1).map(_._2)
-              (gid.toLong, f(MrTemplates.padManyResultsForReduce(sorted, q)))
-            }
-        } else {
-          // ords are dense 0..count-1 each round by construction
-          results.groupByKey { case (ord, _) => ord / 2 }
-            .mapGroups { (pairId, it) =>
-              val sorted = it.toVector.sortBy(_._1)
-              sorted match {
-                case Vector((_, a), (_, b)) =>
-                  (pairId, f(MrTemplates.padTwoResultsForReduce(a, b, q)))
-                case Vector((_, last)) => (pairId, last)
-                case other => throw new IllegalStateException(s"bad pair $other")
-              }
-            }
-        }
-      count = results.count()
+    val sc = spark.sparkContext
+    val input = chunks.rdd.map(c => (c.ord, c))
+    // persisted levels, each with the group-id broadcast that built it
+    val held = mutable.Queue.empty[(RDD[(Long, String)], Option[Broadcast[Map[Long, Int]]])]
+    /** Group `items` (`keys` in key order) by `ids` and fold each
+      * group in key order; the result is keyed by group id. */
+    def foldLevel[T: ClassTag](items: RDD[(Long, T)], keys: Array[Long],
+                               ids: Array[Int])(fold: Seq[T] => String)
+        : (RDD[(Long, String)], Broadcast[Map[Long, Int]]) = {
+      val bc = sc.broadcast(keys.iterator.zip(ids.iterator).toMap)
+      val level = items.map { case (k, v) => (bc.value(k).toLong, (k, v)) }
+        .groupByKey(math.min(ids.last + 1, sc.defaultParallelism))
+        .mapValues(g => fold(g.toVector.sortBy(_._1).map(_._2)))
+      (level, bc)
     }
-    results.head()._2 + "\n\n"
+    val reduceGroup: Seq[String] => String =
+      if (compactReduce) g => f(MrTemplates.padManyResultsForReduce(g, q))
+      else {
+        case Seq(a, b) => f(MrTemplates.padTwoResultsForReduce(a, b, q))
+        case Seq(last) => last
+        case other => throw new IllegalStateException(s"bad pair $other")
+      }
+    @tailrec def reduce(level: RDD[(Long, String)],
+                        bc: Option[Broadcast[Map[Long, Int]]]): String = {
+      level.persist(StorageLevel.MEMORY_AND_DISK)
+      held.enqueue((level, bc))
+      val lens = level.mapValues(PyText.utf8Len).collect().sortBy(_._1)
+      if (held.size > 1) {
+        val (done, doneBc) = held.dequeue()
+        done.unpersist(blocking = false)
+        doneBc.foreach(_.unpersist(blocking = false))
+      }
+      val ids =
+        if (compactReduce)
+          BinPack.groupIds(ArraySeq.unsafeWrapArray(lens.map(_._2)), chunkSize,
+            minPerGroup = 2)
+        else Array.tabulate(lens.length)(_ / 2)
+      if (ids.last == 0) foldOne(level)(reduceGroup)
+      else {
+        val (next, nextBc) = foldLevel(level, lens.map(_._1), ids)(reduceGroup)
+        reduce(next, Some(nextBc))
+      }
+    }
+    val folded =
+      try {
+        if (!compactMap) reduce(input.mapValues(c => f(MrTemplates.padChunkBeforeMap(c, q))), None)
+        else {
+          val mapGroup = (g: Seq[MrChunk]) => f(MrTemplates.padChunksBeforeMap(g, q))
+          val ids = BinPack.groupIds(ArraySeq.unsafeWrapArray(lens.map(_._2)),
+            chunkSize, minPerGroup = 0)
+          if (ids.last == 0) foldOne(input)(mapGroup)
+          else {
+            // reference edge case: oversized first chunk ⇒ leading empty
+            // group gets its own functor call (mapreduce.py:70-76)
+            val leading = if (ids(0) == 1) Seq((0L, mapGroup(Nil))) else Nil
+            val (grouped, bc) = foldLevel(input, lens.map(_._1), ids)(mapGroup)
+            reduce(if (leading.isEmpty) grouped else grouped.union(sc.parallelize(leading, 1)),
+              Some(bc))
+          }
+        }
+      } finally held.foreach { case (level, bc) =>
+        level.unpersist(blocking = false)
+        bc.foreach(_.destroy())
+      }
+    folded + "\n\n"
   }
+
+  /** Fold all of `items` as one group, in key order, in one task. */
+  private def foldOne[T](items: RDD[(Long, T)])(fold: Seq[T] => String): String =
+    items.coalesce(1)
+      .mapPartitions(it => Iterator.single(fold(it.toVector.sortBy(_._1).map(_._2))))
+      .collect().head
 }

@@ -260,13 +260,15 @@ object Hybrid {
     * side (an absent src sub-layout IS an empty merge) while the
     * other catches up, so the pair never serves skewed for longer
     * than the retry. [[Ivf.mergeInto]]'s model check enforces that
-    * both shards were built under ONE frozen quantizer.
+    * both shards were built under ONE frozen quantizer. `vecIdCol`
+    * names the dense side's id column, which folding src's
+    * tombstones before the move reads.
     */
   def mergeInto(spark: SparkSession, dstRoot: String,
-                srcRoot: String): Unit = {
+                srcRoot: String, vecIdCol: String = "vec_id"): Unit = {
     bothSides(
       Bm25.mergeInto(spark, s"$dstRoot/bm25", s"$srcRoot/bm25"),
-      Ivf.mergeInto(spark, s"$dstRoot/ivf", s"$srcRoot/ivf"))
+      Ivf.mergeInto(spark, s"$dstRoot/ivf", s"$srcRoot/ivf", vecIdCol))
     val src = new org.apache.hadoop.fs.Path(srcRoot)
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(src, true) // now-empty root (+ any src oplog ledger)

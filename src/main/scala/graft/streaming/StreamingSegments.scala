@@ -689,12 +689,13 @@ object StreamingSegments {
     * destination inside each group must carry a dense side if any
     * member does (the [[mergeAllHybrid]] rule — a lexical-only
     * segment cannot absorb another's ivf/), falling back to the
-    * lowest batch id.
+    * lowest batch id. `vecIdCol` names the dense side's id column.
     */
   def maintainTieredHybrid(spark: SparkSession, root: String,
                            fanout: Int = 4, minTierBytes: Long = 1L << 20,
                            compact: Boolean = false,
-                           protectTail: Boolean = true): Seq[String] = {
+                           protectTail: Boolean = true,
+                           vecIdCol: String = "vec_id"): Seq[String] = {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def pick(group: Seq[String]): String = {
@@ -703,7 +704,7 @@ object StreamingSegments {
       if (dense.isEmpty) minIdSeg(group) else minIdSeg(dense)
     }
     tieredFold(spark, root, fanout, minTierBytes, pick,
-      (dst, src) => Hybrid.mergeInto(spark, dst, src),
+      (dst, src) => Hybrid.mergeInto(spark, dst, src, vecIdCol),
       dst => if (compact) Hybrid.compactIndex(spark, dst), protectTail)
   }
 
@@ -725,9 +726,11 @@ object StreamingSegments {
     * lexical-only segment cannot absorb another segment's ivf/ —
     * Ivf.mergeInto requires an existing destination); if none does,
     * the whole layout is lexical-only and any segment absorbs.
+    * `vecIdCol` names the dense side's id column.
     */
   def mergeAllHybrid(spark: SparkSession, root: String,
-                     protectTail: Boolean = true): Option[String] = {
+                     protectTail: Boolean = true,
+                     vecIdCol: String = "vec_id"): Option[String] = {
     val segs = foldable(spark, root, protectTail)
     if (segs.isEmpty) return None
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -735,7 +738,8 @@ object StreamingSegments {
     val dst = segs.find(r =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$r/ivf"))).getOrElse(segs.head)
     if (segs.sizeIs > 1) retireIds(spark, root, segs.map(segId))
-    segs.filterNot(_ == dst).foreach(src => Hybrid.mergeInto(spark, dst, src))
+    segs.filterNot(_ == dst).foreach(src =>
+      Hybrid.mergeInto(spark, dst, src, vecIdCol))
     Some(dst)
   }
 }

@@ -3,6 +3,32 @@ package graft.mapreduce
 import graft.SparkTestBase
 import graft.core.Wrap
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+/** Counts calls per `key` in a JVM-wide table, so the calls that
+  * local-mode executor tasks make are visible to the test.
+  */
+final case class CountingFunctor(inner: TextFunctor, key: String) extends TextFunctor {
+  override def apply(prompt: String): String = {
+    CountingFunctor.calls.computeIfAbsent(key, _ => new AtomicLong).incrementAndGet()
+    inner(prompt)
+  }
+}
+
+object CountingFunctor {
+  val calls = new ConcurrentHashMap[String, AtomicLong]()
+  def count(key: String): Long = Option(calls.get(key)).fold(0L)(_.get)
+}
+
+/** Fails every reduce prompt, so a fold dies after its map level. */
+case object ThrowOnReduce extends TextFunctor {
+  override def apply(prompt: String): String =
+    if (prompt.contains("contents and aggregate them"))
+      throw new IllegalStateException("functor failed")
+    else prompt
+}
+
 /** Ports the reference mapreduce invariants (tests/test_mapreduce.py:
   * 30-100) with the LossyEcho functor, and checks distributed ≡ local
   * byte-for-byte across all four mode combinations.
@@ -37,15 +63,37 @@ class MapReduceSpec extends SparkTestBase {
     for {
       compactMap <- Seq(false, true)
       compactReduce <- Seq(false, true)
-      n <- Seq(2, 7, 10)
+      n <- Seq(2, 7, 10, 64)
     } {
-      val eng = new MapReduceEngine(LossyEchoFunctor(2), chunkSize = 96,
+      val mode = s"compactMap=$compactMap compactReduce=$compactReduce n=$n"
+      def engine(side: String) = new MapReduceEngine(
+        CountingFunctor(LossyEchoFunctor(2), s"$side $mode"), chunkSize = 96,
         compactMap = compactMap, compactReduce = compactReduce)
-      val chunks = eng.chunkEntries(fixtureChunks(n))
-      val local = eng.runLocal(chunks)
-      val dist = eng.run(spark, spark.createDataset(chunks).repartition(4))
-      assert(dist == local,
-        s"mode mismatch compactMap=$compactMap compactReduce=$compactReduce n=$n")
+      val chunks = engine("chunk").chunkEntries(fixtureChunks(n))
+      val local = engine("local").runLocal(chunks)
+      val dist = engine("dist").run(spark, spark.createDataset(chunks).repartition(4))
+      assert(dist == local, s"mode mismatch $mode")
+      assert(CountingFunctor.count(s"dist $mode") == CountingFunctor.count(s"local $mode"),
+        s"run and runLocal call the functor a different number of times: $mode")
+    }
+  }
+
+  test("run releases every level it persisted, also when the functor throws") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val chunks = new MapReduceEngine(EchoFunctor, chunkSize = 96)
+      .chunkEntries(fixtureChunks(64))
+    for (compactReduce <- Seq(false, true)) {
+      val before = sc.getPersistentRDDs.size
+      new MapReduceEngine(LossyEchoFunctor(2), chunkSize = 96,
+        compactReduce = compactReduce).run(spark, spark.createDataset(chunks))
+      assert(sc.getPersistentRDDs.size == before, s"compactReduce=$compactReduce")
+      intercept[org.apache.spark.SparkException] {
+        new MapReduceEngine(ThrowOnReduce, chunkSize = 96,
+          compactReduce = compactReduce).run(spark, spark.createDataset(chunks))
+      }
+      assert(sc.getPersistentRDDs.size == before,
+        s"a failed fold left levels persisted (compactReduce=$compactReduce)")
     }
   }
 

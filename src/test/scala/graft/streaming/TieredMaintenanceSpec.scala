@@ -244,4 +244,32 @@ class TieredMaintenanceSpec extends SparkTestBase {
     assert(rset(serve(), "qid", "doc", "rk") == before)
     assert(before.nonEmpty)
   }
+
+  test("hybrid: a tail segment's tombstone stays folded under a non-default dense id column") {
+    import spark.implicits._
+    val root = tmp("tiered_hy_id")
+    val embId = emb.select(col("vec_id").as("id"), col("embedding"))
+    val model = Ivf.train(embId, "embedding", "id", nlist = 8, iters = 2)
+    Seq((0L, 150L), (150L, 300L), (300L, 450L)).zipWithIndex.foreach { case ((lo, hi), i) =>
+      StreamingSegments.processBatchHybrid(spark,
+        docs.where(col("doc_id") >= lo && col("doc_id") < hi),
+        "text", "doc_id", embId, "id", "embedding", model, root, i.toLong)
+    }
+    val gone = 400L
+    Hybrid.tombstoneDocs(spark, StreamingSegments.segmentRoots(spark, root).last,
+      Seq(gone).toDF("id"), "id")
+    val qv = embId.where(col("id") === gone)
+      .select(col("id").as("qid"), col("embedding").as("vec"))
+    def served() = Hybrid.searchSegments(spark,
+        StreamingSegments.segmentRoots(spark, root), Seq(gone -> "hash join"), qv,
+        model, "embedding", "id", kCand = 20, k = 10, nprobe = 8)
+      .select("doc").as[Long].collect().toSet
+    assert(served().nonEmpty && !served().contains(gone))
+    val survivors = StreamingSegments.maintainTieredHybrid(spark, root,
+      fanout = 3, protectTail = false, vecIdCol = "id")
+    assert(survivors.size == 1)
+    assert(spark.read.parquet(s"${survivors.head}/ivf")
+      .where(col("id") === gone).isEmpty, "the folded id is back in the dense side")
+    assert(served().nonEmpty && !served().contains(gone))
+  }
 }
