@@ -15,10 +15,11 @@ import java.sql.Timestamp
   * docstring's "24h" is wrong, code wins).
   *
   * `memoize` is the engine's version of the reference's
-  * `enable_cache`-wrapped readers (reader.py:157-175): a left-anti
-  * join finds misses, only those run the fetch, and the union is both
-  * the result and the next cache state — O(misses) fetch work,
-  * set-oriented instead of per-call.
+  * `enable_cache`-wrapped readers (reader.py:157-175): one left join
+  * of the keys against the table marks hits, only misses run the
+  * fetch, and one pinned frame is both the result and the rows
+  * appended to the cache — one table scan and O(misses) fetch work
+  * per call, set-oriented instead of per-call.
   */
 final class TtlCache(val spark: SparkSession, ttlDays: Int = 30) {
   import spark.implicits._
@@ -35,13 +36,16 @@ final class TtlCache(val spark: SparkSession, ttlDays: Int = 30) {
 
   def df: DataFrame = table
 
-  /** Each put/delete deepens the lazy plan; pin it every 32 mutations
-    * so lookup cost stays flat over a long-lived cache.
+  /** Each put/delete/memoize deepens the lazy plan and adds its
+    * frame's partitions; every 32 mutations pin the table with
+    * partitions sized by bytes ([[graft.core.Pinned.compact]]), so
+    * lookup cost stays flat over a long-lived cache instead of paying
+    * one task per appended frame.
     */
   private def maybeCompact(): Unit = {
     mutationsSinceCompact += 1
     if (mutationsSinceCompact >= 32) {
-      val fresh = table.localCheckpoint(true)
+      val fresh = graft.core.Pinned.compact(table)
       compactPin.foreach(graft.core.Pinned.release)
       compactPin = Some(fresh)
       table = fresh
@@ -87,28 +91,32 @@ final class TtlCache(val spark: SparkSession, ttlDays: Int = 30) {
   def purgeExpired(asOf: Timestamp = now()): Unit =
     table = table.where($"stamp" >= lit(asOf) - expr(s"INTERVAL $ttlDays DAYS"))
 
-  /** Memoized fetch: hits from the table, misses via `fetch`, both
-    * returned and the misses appended to the cache. The fetched rows
-    * are MATERIALIZED eagerly (localCheckpoint) — leaving the fetch
-    * UDF in the lazy plan would re-run the fetch on every later
-    * evaluation of the returned frame or of the cache table.
+  /** Memoized fetch: one row per distinct key, hits from the table,
+    * misses via `fetch`, and the misses appended to the cache. The
+    * distinct keys are left-joined against the table once, carrying a
+    * hit marker (a cached `null` value is still a hit); `fetch` runs
+    * only where the marker is null, so once per miss. The joined rows
+    * are MATERIALIZED eagerly (one localCheckpoint) and that one
+    * pinned frame is both the returned `(key, value)` frame and the
+    * source of the appended rows — leaving the fetch UDF in the lazy
+    * plan would re-run it on every later read of either.
     */
   def memoize(keys: DataFrame, fetch: String => String): DataFrame = {
-    val k = keys.select($"key").distinct()
-    val hits = k.join(table, Seq("key"), "inner").select($"key", $"value")
-    val misses = k.join(table, Seq("key"), "left_anti")
     val fetchUdf = udf(fetch)
     // Stamp with a driver-side literal INSIDE the checkpointed frame:
     // a lazy current_timestamp() added after the checkpoint would
     // re-evaluate to 'now' on every later read of `table`, so memoized
     // entries would drift forward and never expire via purgeExpired
     // (the reference stamps at insert time, cache.py:68-74).
-    val fetched = misses
-      .select($"key", fetchUdf($"key").as("value"), lit(now()).as("stamp"))
+    val looked = keys.select($"key").distinct()
+      .join(table.select($"key", $"value", lit(true).as("hit")), Seq("key"), "left")
+      .select($"key",
+        when($"hit".isNull, fetchUdf($"key")).otherwise($"value").as("value"),
+        lit(now()).as("stamp"), $"hit")
       .localCheckpoint(true)
-    table = table.unionByName(fetched)
+    table = table.unionByName(looked.where($"hit".isNull).drop("hit"))
     maybeCompact()
-    hits.unionByName(fetched.select($"key", $"value"))
+    looked.select($"key", $"value")
   }
 
   def load(path: String): Unit = table = spark.read.parquet(path)

@@ -1,5 +1,11 @@
 package graft.core
 
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
+
+import scala.concurrent.Future
+import scala.util.Try
+
 /** Run independent DRIVER-SIDE actions concurrently — the
   * [[graft.pipeline.Hybrid]] bothSides discipline as a shared core
   * helper, for query compositions whose phases are independent jobs
@@ -42,12 +48,37 @@ object Par {
           }
         }))
 
+  // Spark's job description, group, interrupt flag and scheduler pool
+  // live in inheritable thread-locals, so a pooled thread keeps the
+  // values of whichever caller created it and would attribute a later
+  // caller's jobs to it. They are copied from the caller at submit
+  // time instead. `spark.sql.execution.id` is never copied: a worker
+  // inheriting its caller's execution id would nest its queries under
+  // a running one.
+  private val CallerProperties = Seq("spark.job.description",
+    "spark.jobGroup.id", "spark.job.interruptOnCancel", "spark.scheduler.pool")
+
+  /** Start `a` on the pool under the caller's job properties, which
+    * are restored on the worker once `a` settles.
+    */
+  private def submit[A](a: () => A): Future[Try[A]] = {
+    val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    def current = sc.toSeq.flatMap(c => CallerProperties.map(k => (c, k, c.getLocalProperty(k))))
+    def set(ps: Seq[(SparkContext, String, String)]): Unit =
+      ps.foreach { case (c, k, v) => c.setLocalProperty(k, v) }
+    val caller = current
+    Future {
+      val saved = current
+      set(caller)
+      try Try(a()) finally set(saved)
+    }(ec)
+  }
+
   def all(actions: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    import scala.util.Try
-    val settled = actions.map(a => Future(Try(a()))(ec))
-      .map(Await.result(_, Duration.Inf))
+    val settled = actions.map(submit(_)).map(Await.result(_, Duration.Inf))
     settled.foreach(_.get)
   }
 
@@ -56,11 +87,10 @@ object Par {
     * await-all-then-rethrow settlement.
     */
   def both[A, B](a: () => A, b: () => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
-    import scala.util.Try
-    val fa = Future(Try(a()))(ec)
-    val fb = Future(Try(b()))(ec)
+    val fa = submit(a)
+    val fb = submit(b)
     val ra = Await.result(fa, Duration.Inf)
     val rb = Await.result(fb, Duration.Inf)
     (ra.get, rb.get)

@@ -32,8 +32,12 @@ import java.math.{MathContext, RoundingMode}
 final class MessageLog(val spark: SparkSession, val embedder: EmbeddingModel) {
   import spark.implicits._
 
-  private var table: DataFrame = spark.emptyDataset[Message].toDF()
-  private var appendsSinceCompact = 0
+  // the log is `base` (the pinned snapshot, plus any later deletes
+  // as lazy filters) followed by `tail`, the messages appended since
+  // the last compact, held on the driver
+  private var base: DataFrame = spark.emptyDataset[Message].toDF()
+  private val tail = scala.collection.mutable.ArrayBuffer.empty[Message]
+  private var view: Option[DataFrame] = None
   // the live compact snapshot — released when the NEXT compact
   // supersedes it, or a long-lived log accumulates one dead
   // log-sized block set per 32 appends (the Pinned.scala leak
@@ -42,42 +46,64 @@ final class MessageLog(val spark: SparkSession, val embedder: EmbeddingModel) {
   // holding [[df]] across 32+ appends must re-read it.
   private var compactPin: Option[DataFrame] = None
 
-  def df: DataFrame = table
-
-  /** Appends grow the union plan linearly; pin the table every 32
-    * appends so analysis cost stays O(1) per query over a long
-    * conversation.
+  /** The whole log: `base ∪ one LocalRelation(tail)`, built once per
+    * change and reused by every reader until the next append, delete
+    * or load — so a query's plan has two children whatever the
+    * number of appends since the last compact. Synchronized with the
+    * writers, so a reader never copies a tail being appended to (the
+    * streaming ingest appends from its own thread).
     */
-  private def maybeCompact(): Unit = {
-    appendsSinceCompact += 1
-    if (appendsSinceCompact >= 32) {
-      val fresh = table.localCheckpoint(true)
-      compactPin.foreach(graft.core.Pinned.release)
-      compactPin = Some(fresh)
-      table = fresh
-      appendsSinceCompact = 0
+  def df: DataFrame = synchronized {
+    view.getOrElse {
+      val v = if (tail.isEmpty) base else base.unionByName(tail.toSeq.toDF())
+      view = Some(v)
+      v
     }
   }
 
+  private def replace(b: DataFrame): Unit = {
+    base = b
+    tail.clear()
+    view = None
+  }
+
+  /** When the driver-side tail reaches 32 messages, pin the whole log
+    * with partitions sized by bytes ([[graft.core.Pinned.compact]])
+    * and empty the tail: the plan stays two children deep and a scan
+    * runs a few tasks however long the conversation, where a
+    * per-append union would add a plan node and a partition per
+    * message.
+    */
+  private def maybeCompact(): Unit =
+    if (tail.size >= 32) {
+      val fresh = graft.core.Pinned.compact(df)
+      compactPin.foreach(graft.core.Pinned.release)
+      compactPin = Some(fresh)
+      replace(fresh)
+    }
+
   /** M1: validate → embed → append (app.py:189-237). Role outside
-    * {user, assistant} is an error (app.py:195-197).
+    * {user, assistant} is an error (app.py:195-197). The message joins
+    * the driver-side tail (at most 32 rows) — no Spark work until the
+    * tail is compacted.
     */
   def append(id: String, conversationId: String, role: String, text: String,
              timestamp: Long): Unit = {
     require(Schemas.ServiceRoles.contains(role),
       s"role must be one of ${Schemas.ServiceRoles.mkString("/")}, got $role")
-    val vec = embedder.embed(text)
-    table = table.unionByName(
-      Seq(Message(id, conversationId, role, text, timestamp, vec)).toDF())
-    maybeCompact()
+    val msg = Message(id, conversationId, role, text, timestamp, embedder.embed(text))
+    synchronized {
+      tail += msg
+      view = None
+      maybeCompact()
+    }
   }
 
   /** M2: filtered cosine top-k with payload (app.py:239-277). */
   def context(query: String, conversationId: Option[String] = None,
               topK: Int = 5): DataFrame = {
     val qv = embedder.embed(query)
-    val base = conversationId.fold(table)(c => table.where($"conversationId" === c))
-    base
+    conversationId.fold(df)(c => df.where($"conversationId" === c))
       .select(cosineSimD($"vector", vecLit(qv)).as("score"),
         $"id", $"conversationId", $"role", $"text", $"timestamp")
       .orderBy($"score".desc, $"timestamp".asc, $"id".asc)
@@ -86,28 +112,30 @@ final class MessageLog(val spark: SparkSession, val embedder: EmbeddingModel) {
 
   /** P5: history with limit (app.py:279-298, default limit 200). */
   def history(conversationId: String, limit: Int = 200): DataFrame =
-    table.where($"conversationId" === conversationId)
+    df.where($"conversationId" === conversationId)
       .orderBy($"timestamp".asc, $"id".asc).limit(limit)
       .select($"id", $"role", $"text", $"timestamp")
 
   /** A5: last-N window in chronological order (app.py:341-349). */
   def lastN(conversationId: String, n: Int = 20): DataFrame =
-    table.where($"conversationId" === conversationId)
+    df.where($"conversationId" === conversationId)
       .orderBy($"timestamp".desc, $"id".desc).limit(n)
       .orderBy($"timestamp".asc, $"id".asc)
       .select($"role", $"text", $"timestamp")
 
   /** S18: ordered export (app.py:316-331). */
   def export(conversationId: String): DataFrame =
-    table.where($"conversationId" === conversationId)
+    df.where($"conversationId" === conversationId)
       .orderBy($"timestamp".asc, $"id".asc)
       .select($"id", $"role", $"text", $"timestamp")
 
   /** M5/J2: conversation delete — a single anti-filter rewrite where
     * the reference needed a cross-store semi-join (app.py:300-314).
+    * The filter covers the tail too, so the tail joins `base`.
     */
-  def deleteConversation(conversationId: String): Unit =
-    table = table.where($"conversationId" =!= conversationId)
+  def deleteConversation(conversationId: String): Unit = synchronized {
+    replace(df.where($"conversationId" =!= conversationId))
+  }
 
   /** M3: context-injection prompt (frontend.py:242-257), verbatim. */
   def contextPrompt(results: Seq[(String, Option[Double], String)]): Option[String] = {
@@ -140,8 +168,8 @@ final class MessageLog(val spark: SparkSession, val embedder: EmbeddingModel) {
   private def fmt3(x: Double): String =
     new java.math.BigDecimal(x).setScale(3, RoundingMode.HALF_EVEN).toPlainString
 
-  def load(path: String): Unit = table = spark.read.parquet(path)
-  def save(path: String): Unit = table.write.mode("overwrite").parquet(path)
+  def load(path: String): Unit = synchronized { replace(spark.read.parquet(path)) }
+  def save(path: String): Unit = df.write.mode("overwrite").parquet(path)
 
   /** M4 `/generate` (app.py:333-356): last-20 history joined as
     * `role: text` lines + the user prompt, through the functor, the

@@ -36,9 +36,14 @@ final class VectorStore(val spark: SparkSession, val path: String,
     StructField("text", StringType, nullable = true),
     StructField("vector", ArrayType(FloatType, containsNull = false), nullable = false)))
 
+  /** The live store. Runs the [[graft.core.DirSwap]] recovery
+    * preamble first: a crash inside a [[deleteById]] rewrite may have
+    * left the store parked at `<path>__old` with no live directory.
+    */
   def df: DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.core.DirSwap.recover(fs, p)
     if (fs.exists(p)) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -47,7 +52,10 @@ final class VectorStore(val spark: SparkSession, val path: String,
   def count(): Long = df.count()
 
   /** Append rows of `(source, text, vector)`, normalizing + truncating
-    * and assigning dense ids after the current max.
+    * and assigning dense ids after the current max. Reads the max
+    * through [[df]] first, so a parked store is recovered before
+    * anything is appended (an append to a fresh live dir beside a
+    * parked copy could never be healed).
     */
   def add(rows: DataFrame): Unit = {
     val maxId = df.agg(coalesce(max($"id"), lit(0L))).as[Long].head()
@@ -77,14 +85,16 @@ final class VectorStore(val spark: SparkSession, val path: String,
   /** Anti-join rewrite of the store (reference vectordb.py:174-182). */
   def deleteById(ids: Long*): Unit = rewrite(df.where(!$"id".isin(ids: _*)))
 
+  /** Write `newDf` beside the store, then swap it in with
+    * [[graft.core.DirSwap.promote]]: a crash at any step leaves a
+    * complete copy live or parked, which [[df]] recovers.
+    */
   private def rewrite(newDf: DataFrame): Unit = {
-    val tmp = path + ".tmp"
-    newDf.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
+    newDf.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val p = new org.apache.hadoop.fs.Path(path)
-    fs.delete(p, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), p)
+    graft.core.DirSwap.promote(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, tmp)
   }
 
   /** Flagship exact cosine top-k (reference vectordb.py:190-214).

@@ -200,4 +200,91 @@ class MemorySpec extends SparkTestBase {
       System.currentTimeMillis() + 100L * 24 * 3600 * 1000))
     assert(!c.contains("m"))
   }
+
+  test("cache memoize: hits never reach the fetch; duplicate keys give one row each") {
+    import spark.implicits._
+    val c = new TtlCache(spark)
+    c.put("a", "cached_a")
+    c.put("b", "cached_b")
+    val keys = spark.createDataset(Seq("a", "b", "c", "a", "c", "b", "d")).toDF("key")
+    val out = c.memoize(keys, k =>
+      if (k == "a" || k == "b") throw new IllegalStateException(s"fetched cached key $k")
+      else s"fetched_$k").as[(String, String)].collect()
+    assert(out.sorted.toSeq == Seq("a" -> "cached_a", "b" -> "cached_b",
+      "c" -> "fetched_c", "d" -> "fetched_d"))
+    assert(c.size() == 4)
+  }
+
+  test("cache memoize: a cached null value is a hit") {
+    import spark.implicits._
+    val c = new TtlCache(spark)
+    c.put("n", null)
+    val calls = spark.sparkContext.longAccumulator("null_fetches")
+    val out = c.memoize(Seq("n").toDF("key"), k => { calls.add(1); s"fetched_$k" })
+      .as[(String, String)].collect()
+    assert(out.toSeq == Seq("n" -> null))
+    assert(calls.value == 0, s"fetch ran ${calls.value} times for a cached null")
+  }
+
+  test("cache memoize: re-reading the result and the table runs no further fetch") {
+    import spark.implicits._
+    val c = new TtlCache(spark)
+    c.put("hot", "cached")
+    val calls = spark.sparkContext.longAccumulator("reread_fetches")
+    val result = c.memoize(Seq("hot", "x", "y").toDF("key"),
+      k => { calls.add(1); s"fetched_$k" })
+    val first = result.as[(String, String)].collect().sorted
+    val second = result.as[(String, String)].collect().sorted
+    val table = c.df.select($"key", $"value").as[(String, String)].collect().sorted
+    assert(first.toSeq == second.toSeq)
+    assert(table.toSeq == Seq("hot" -> "cached", "x" -> "fetched_x", "y" -> "fetched_y"))
+    assert(calls.value == 2, s"fetch ran ${calls.value} times for 2 misses")
+  }
+
+  test("cache memoize: one call stamps its fetched rows once, and compaction keeps them") {
+    import spark.implicits._
+    val c = new TtlCache(spark)
+    c.memoize(Seq("p", "q", "r").toDF("key"), k => s"v_$k")
+    def stamps() = c.df.where($"key".isin("p", "q", "r"))
+      .select($"key", $"stamp").as[(String, java.sql.Timestamp)].collect().toMap
+    val before = stamps()
+    assert(before.size == 3 && before.values.toSet.size == 1, s"stamps $before")
+    Thread.sleep(30)
+    (1 to 32).foreach(i => c.memoize(Seq(s"k$i").toDF("key"), k => s"v_$k"))
+    assert(stamps() == before, "stamps drifted across reads and a compaction")
+  }
+
+  test("compaction: partitions stay few after 100 appends or memoizes; reads unchanged") {
+    import spark.implicits._
+    val bound = 1 + spark.sparkContext.defaultParallelism
+    val log = new MessageLog(spark, LengthEmbedding)
+    // equal text lengths tie the scores and paired timestamps tie the
+    // time, so the id tie-breaks order the reads
+    def msg(i: Int) = log.append(f"m$i%03d", "long",
+      if (i % 2 == 0) "user" else "assistant", f"message $i%03d", (i / 2).toLong)
+    def reads() = Seq(
+      log.context("message 050", Some("long"), topK = 10),
+      log.lastN("long", 20), log.history("long", 50), log.export("long"))
+      .map(_.collect().toSeq)
+    (1 to 63).foreach(msg)
+    val before = reads()
+    // the 64th append fills the tail and compacts; it joins another
+    // conversation, so the reads over "long" must not change
+    log.append("z", "other", "user", "elsewhere", 0L)
+    assert(reads() == before)
+    (64 to 99).foreach(msg)
+    assert(log.df.count() == 100)
+    assert(log.df.rdd.getNumPartitions <= bound,
+      s"${log.df.rdd.getNumPartitions} partitions after 100 appends")
+
+    val c = new TtlCache(spark)
+    (1 to 100).foreach(i => c.memoize(Seq("hot", s"k$i").toDF("key"), k => s"v_$k"))
+    assert(c.size() == 101)
+    assert(c.df.rdd.getNumPartitions <= bound,
+      s"${c.df.rdd.getNumPartitions} partitions after 100 memoizes")
+    val all = c.memoize(((1 to 100).map(i => s"k$i") :+ "hot").toDF("key"),
+      k => throw new IllegalStateException(s"refetched $k"))
+    assert(all.as[(String, String)].collect().toMap ==
+      ((1 to 100).map(i => s"k$i") :+ "hot").map(k => k -> s"v_$k").toMap)
+  }
 }

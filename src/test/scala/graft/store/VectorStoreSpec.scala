@@ -89,4 +89,31 @@ class VectorStoreSpec extends SparkTestBase {
     val v = store.df.select($"vector").as[Array[Float]].head()
     assert(v.length == dim)
   }
+
+  test("a store parked mid-rewrite is recovered; a retried deleteById converges") {
+    val store = freshStore()
+    store.add(fixtureRows())
+    val live = new org.apache.hadoop.fs.Path(store.path)
+    val parked = new org.apache.hadoop.fs.Path(store.path + "__old")
+    val tmp = new org.apache.hadoop.fs.Path(store.path + ".tmp")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import spark.implicits._
+    // a deleteById(1) that crashed between park and promote: its
+    // rewrite sits in .tmp and the live store is parked
+    def crashDelete(): Unit = {
+      store.df.where($"id" =!= 1L).write.parquet(tmp.toString)
+      assert(fs.rename(live, parked))
+    }
+    crashDelete()
+    assert(store.count() == 11)
+    assert(!fs.exists(parked))
+    assert(store.retrieve(Array.fill(dim)(1.0f), topk = 1).collect().head._2 == "ones")
+    fs.delete(tmp, true)
+    crashDelete()
+    store.deleteById(1L)
+    store.deleteById(1L)
+    assert(store.count() == 10)
+    assert(store.df.where($"id" === 1L).count() == 0)
+    assert(!fs.exists(parked) && !fs.exists(tmp))
+  }
 }
