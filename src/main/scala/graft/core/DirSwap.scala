@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * this ([[ParquetCompact.rewrite]], Bm25's stats swap, the drift
   * baseline); a protocol whose safety lives in subtle ordering must
   * not exist in divergent copies — the consolidation argument of
-  * openRun and maybeCompact, applied to crash safety itself.
+  * openRun and afterBatch, applied to crash safety itself.
   */
 object DirSwap {
 

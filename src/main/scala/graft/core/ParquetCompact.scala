@@ -189,16 +189,24 @@ object ParquetCompact {
     if (dirs == 0) 0.0 else files.toDouble / dirs
   }
 
-  /** The file-count maintenance trigger shared by the streaming
-    * ingests: run `compact` iff the measured append debris exceeds
-    * `threshold` files per leaf dir. One helper so the eight ingest
-    * entry points can't drift apart on the rule (the openRun
-    * consolidation's argument, applied here).
+  /** The per-batch compaction rule shared by the streamed ingests:
+    * run `compact` after every `every`-th batch (0 = off; never after
+    * batch 0), and again when any of `paths` trips the file-count
+    * alarm — measured append debris above `filesPerDir` files per
+    * leaf dir (0 = off). A multi-path alarm compacts ONCE however
+    * many paths fire (a paired layout compacts both sides together;
+    * compaction is contents-invariant, so the quieter side's pass is
+    * harmless). One helper so the ingests can't drift apart on the
+    * rule.
     */
-  def maybeCompact(spark: SparkSession, path: String, threshold: Double)
-                  (compact: => Unit): Unit =
-    if (threshold > 0 && meanFilesPerDir(spark, path) > threshold)
+  def afterBatch(spark: SparkSession, batchId: Long, every: Int,
+                 filesPerDir: Double, paths: String*)
+                (compact: => Unit): Unit = {
+    if (every > 0 && batchId > 0 && batchId % every == 0) compact
+    if (filesPerDir > 0 &&
+        paths.exists(p => meanFilesPerDir(spark, p) > filesPerDir))
       compact
+  }
 
   /** Any actual parquet data file under `dir` (recursive)? A zero-row
     * dynamic-partition write leaves only `_SUCCESS`.

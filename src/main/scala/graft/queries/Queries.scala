@@ -2085,7 +2085,7 @@ object Queries {
     */
   /** The drift replay's shared CTE chain over any staged CTE body
     * that exposes `doc_id` and `dim` (other columns ride along into
-    * `bd`): Staging.idRangeSplits' equal-width batching replayed
+    * `bd`): Staging.stageWithKey's equal-width batching replayed
     * FAITHFULLY — span = max(1, (hi−lo) div n + 1) from the MIN id
     * (not 0), and empty ranges produce no staged file so the file
     * stream renumbers batch ids DENSELY over the non-empty ranges —
@@ -9463,7 +9463,7 @@ object Queries {
 
     // late iff the straggler lands in batch ≥ 1 (its 28h lag dwarfs
     // the id range + 1h delay, and batch 0 has no watermark yet);
-    // batch of d replays Staging.idRangeSplits' least(n−1, (d−lo) div
+    // batch of d replays Staging.stageWithKey's least(n−1, (d−lo) div
     // span) with span = (hi−lo) div n + 1; kept = the curation
     // composition over the on-time corpus
     "stream_watermarked_curation" ->

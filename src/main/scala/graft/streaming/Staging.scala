@@ -3,14 +3,14 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** File-stream staging for the streaming-ingest queries: split a
-  * single-file parquet table into `n` id-range parquet files in a
-  * fresh temp dir, mtime-ordered so a file stream with
-  * `maxFilesPerTrigger=1` replays them as id-ordered microbatches.
-  * The single-file copy the earlier ingests stage collapses the
-  * whole table into one batch; this makes the ORACLED streaming rows
-  * actually exercise the multi-batch probe/append path, not just the
-  * first-batch build branch.
+/** File-stream staging for the streamed ingests ([[StagedIngest]]):
+  * split a parquet table into `n` id-range parquet files in a fresh
+  * temp dir, mtime-ordered so a file stream with
+  * `maxFilesPerTrigger=1` replays them as id-ordered microbatches
+  * ([[stageWithKey]]) — so the ORACLED streaming rows exercise the
+  * multi-batch probe/append path, not just the first-batch build
+  * branch — or copy it whole for the single-batch ingests
+  * ([[copy]]).
   */
 private[streaming] object Staging {
 
@@ -40,9 +40,9 @@ private[streaming] object Staging {
   }
 
   /** The key derivation shared by [[runKey]] and [[stageWithKey]] —
-    * ONE definition so a fused-scan ingest open derives byte-identical
-    * keys to the two-scan form (a drifted key would orphan every
-    * completed marker of a crashed run).
+    * ONE definition so both stagings derive byte-identical keys (a
+    * drifted key would orphan every completed marker of a crashed
+    * run).
     */
   private def keyOf(kind: String, src: String, idCol: String,
                     nBatches: Int, cnt: Long, lo: Option[Long],
@@ -61,14 +61,19 @@ private[streaming] object Staging {
     f"$kind%s-$h%016x"
   }
 
-  /** ONE (count, min, max) pass serving BOTH the ledger run key and
-    * the id-range split staging — the ledgered ingest open used to
-    * scan the source twice ([[runKey]]'s fingerprint agg, then
-    * [[idRangeSplits]]' own min/max agg) before the staging write's
-    * unavoidable third pass. Key ≡ [[runKey]] (shared [[keyOf]]);
-    * staging ≡ [[idRangeSplits]] (shared [[splitsInto]]). The key's
-    * min/max ride the cast-to-long legs and the split ranges the
-    * uncast ones, exactly as the two separate entry points read them.
+  /** Split `src` (a parquet file or directory) into up to `n`
+    * equal-width ranges of the long `idCol`, one mtime-ordered file
+    * per range in a fresh stage dir, and derive the ledger run key —
+    * ONE (count, min, max) pass serves both. Key ≡ [[runKey]]
+    * (shared [[keyOf]]): the key's min/max ride the cast-to-long
+    * legs and the split ranges the uncast ones.
+    *
+    * An EMPTY range yields NO staged file (the dynamic-partition
+    * write creates no dir for it), so the file stream delivers fewer
+    * batches and batchIds renumber DENSELY over the non-empty ranges
+    * — the drift oracles (Queries.driftCtes) load-bear on exactly
+    * this renumbering, so don't "fix" it to emit 0-row files without
+    * updating them. An empty source stages no file at all.
     */
   def stageWithKey(spark: SparkSession, src: String, idCol: String,
                    n: Int, kind: String)
@@ -82,13 +87,14 @@ private[streaming] object Staging {
     val key = keyOf(kind, src, idCol, n, r.getLong(0),
       if (r.isNullAt(1)) None else Some(r.getLong(1)),
       if (r.isNullAt(2)) None else Some(r.getLong(2)))
-    val stage = java.nio.file.Files.createTempDirectory("graft_stage")
-    if (!r.isNullAt(3)) splitsInto(df, idCol, n, r.getLong(3),
-      r.getLong(4), stage)
+    val stage = fresh { stage =>
+      if (!r.isNullAt(3)) splitsInto(df, idCol, n, r.getLong(3),
+        r.getLong(4), stage)
+    }
     (stage, key)
   }
 
-  /** Any staged batch file present? ([[idRangeSplits]] writes no
+  /** Any staged batch file present? ([[stageWithKey]] writes no
     * file for an empty source, and a model/pair save with nothing
     * to ingest would conjure up a sidecar-only layout dir.)
     */
@@ -97,29 +103,31 @@ private[streaming] object Staging {
     try l.findFirst().isPresent finally l.close()
   }
 
-  /** Returns the stage dir containing mtime-ordered split files of
-    * `src` (a parquet file or directory), partitioned by up to `n`
-    * equal-width ranges of the long `idCol`. An EMPTY range yields
-    * NO staged file (the dynamic-partition write creates no dir for
-    * it), so the file stream delivers fewer batches and batchIds
-    * renumber DENSELY over the non-empty ranges — the drift oracles
-    * (Queries.driftCtes) load-bear on exactly this renumbering, so
-    * don't "fix" it to emit 0-row files without updating them.
+  /** A fresh stage dir holding a verbatim copy of `src`'s parquet
+    * data: the file itself, or every part file of a Spark-written
+    * directory. The whole-source staging of the single-batch ingests
+    * (no split write job); removed again if the copy fails.
     */
-  def idRangeSplits(spark: SparkSession, src: String, idCol: String,
-                    n: Int): java.nio.file.Path = {
-    require(n >= 1, "need at least one split")
-    val df = spark.read.parquet(src)
-    val r = df.agg(min(col(idCol)), max(col(idCol))).head()
-    val stage = java.nio.file.Files.createTempDirectory("graft_stage")
-    if (r.isNullAt(0)) return stage // empty table: zero batches
-    splitsInto(df, idCol, n, r.getLong(0), r.getLong(1), stage)
-    stage
+  def copy(src: String): java.nio.file.Path = fresh { stage =>
+    val from = java.nio.file.Paths.get(src)
+    if (java.nio.file.Files.isDirectory(from)) {
+      val s = java.nio.file.Files.list(from)
+      try s.filter(_.toString.endsWith(".parquet")).forEach { f =>
+        java.nio.file.Files.copy(f, stage.resolve(f.getFileName))
+      } finally s.close()
+    } else java.nio.file.Files.copy(from, stage.resolve(from.getFileName))
   }
 
-  /** The split-staging body shared by [[idRangeSplits]] and
-    * [[stageWithKey]] (given a precomputed id range).
+  /** A new `graft_stage` temp dir filled by `fill`; deleted if `fill`
+    * throws, so a failed staging leaves nothing behind.
     */
+  private def fresh(fill: java.nio.file.Path => Unit): java.nio.file.Path = {
+    val stage = java.nio.file.Files.createTempDirectory("graft_stage")
+    try { fill(stage); stage }
+    catch { case t: Throwable => EventStream.deleteScratch(stage); throw t }
+  }
+
+  /** [[stageWithKey]]'s split write, given the source's id range. */
   private def splitsInto(df: org.apache.spark.sql.DataFrame,
                          idCol: String, n: Int, lo: Long, hi: Long,
                          stage: java.nio.file.Path): Unit = {
@@ -130,33 +138,34 @@ private[streaming] object Staging {
     // batch lands as a single file in its directory — vs a
     // scan-per-split loop, which reads the source n times
     val tmp = java.nio.file.Files.createTempDirectory("graft_stage_w")
-    df.withColumn("__b",
-        least(lit(n - 1), expr(s"(`$idCol` - $lo) div $span").cast("int")))
-      .repartition(n, col("__b"))
-      .write.partitionBy("__b").mode("overwrite").parquet(tmp.toString)
-    for (i <- 0 until n) {
-      val dir = tmp.resolve(s"__b=$i")
-      if (java.nio.file.Files.isDirectory(dir)) { // empty ranges: no dir
-        val part = {
-          val s = java.nio.file.Files.list(dir)
-          try {
-            val it = s.iterator()
-            var found: java.nio.file.Path = null
-            while (it.hasNext && found == null) {
-              val p = it.next()
-              if (p.getFileName.toString.endsWith(".parquet")) found = p
-            }
-            found
-          } finally s.close()
+    try {
+      df.withColumn("__b",
+          least(lit(n - 1), expr(s"(`$idCol` - $lo) div $span").cast("int")))
+        .repartition(n, col("__b"))
+        .write.partitionBy("__b").mode("overwrite").parquet(tmp.toString)
+      for (i <- 0 until n) {
+        val dir = tmp.resolve(s"__b=$i")
+        if (java.nio.file.Files.isDirectory(dir)) { // empty ranges: no dir
+          val part = {
+            val s = java.nio.file.Files.list(dir)
+            try {
+              val it = s.iterator()
+              var found: java.nio.file.Path = null
+              while (it.hasNext && found == null) {
+                val p = it.next()
+                if (p.getFileName.toString.endsWith(".parquet")) found = p
+              }
+              found
+            } finally s.close()
+          }
+          val dst = stage.resolve(f"b$i%04d.parquet")
+          java.nio.file.Files.move(part, dst)
+          // distinct, increasing mtimes: the file source orders new
+          // files by timestamp, so the replay is deterministic and
+          // id-ordered
+          dst.toFile.setLastModified(1700000000000L + i * 60000L)
         }
-        val dst = stage.resolve(f"b$i%04d.parquet")
-        java.nio.file.Files.move(part, dst)
-        // distinct, increasing mtimes: the file source orders new
-        // files by timestamp, so the replay is deterministic and
-        // id-ordered
-        dst.toFile.setLastModified(1700000000000L + i * 60000L)
       }
-    }
-    EventStream.deleteScratch(tmp)
+    } finally EventStream.deleteScratch(tmp)
   }
 }

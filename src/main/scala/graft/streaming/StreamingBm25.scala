@@ -45,44 +45,21 @@ object StreamingBm25 {
     */
   def ingest(spark: SparkSession, dir: String, indexPath: String,
              nBatches: Int = 4, compactEvery: Int = 0,
-             compactFilesPerDir: Double = 0.0): Unit = {
-    val src = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "doc_id",
-      nBatches, kind = "bm25")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sbm25_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under foreachBatch's same-batchId replay: the
-        // ledger makes a re-delivered completed batch a no-op instead
-        // of a double append
-        BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
-          processBatch(batch.sparkSession, batch, "text", "doc_id", indexPath,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+             compactFilesPerDir: Double = 0.0): Unit =
+    StagedIngest.run(spark, s"$dir/documents.parquet",
+        StagedIngest.Split("doc_id", nBatches), "bm25") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+        dataPath = indexPath)
+      (batch, batchId) => {
+        val s = batch.sparkSession
+        BatchLedger.once(s, indexPath, runId, batchId) {
+          processBatch(s, batch, "text", "doc_id", indexPath,
+            knownNonEmpty = true)
         }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Bm25.compactIndex(batch.sparkSession, indexPath)
-        // file-count alarm: compact when measured append debris
-        // says so, not a blind cadence
-        graft.core.ParquetCompact.maybeCompact(
-          batch.sparkSession, indexPath, compactFilesPerDir) {
-          Bm25.compactIndex(batch.sparkSession, indexPath)
+        graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
+            compactFilesPerDir, indexPath) {
+          Bm25.compactIndex(s, indexPath)
         }
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

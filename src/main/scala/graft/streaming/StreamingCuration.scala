@@ -42,34 +42,15 @@ object StreamingCuration {
   def ingest(spark: SparkSession, dir: String,
              decorate: DataFrame => DataFrame, blocklist: Seq[String],
              minQuality: Double, indexPath: String, outPath: String,
-             urlCol: String = "url", nBatches: Int = 3): Unit = {
-    val src = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "doc_id",
-      nBatches, kind = "cur")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_scur_ckpt_")
-    val runId = BatchLedger.openRun(spark, indexPath,
-      stageKey)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under same-batchId replay (see BatchLedger)
+             urlCol: String = "url", nBatches: Int = 3): Unit =
+    StagedIngest.run(spark, s"$dir/documents.parquet",
+        StagedIngest.Split("doc_id", nBatches), "cur") { (runKey, _) =>
+      val runId = BatchLedger.openRun(spark, indexPath, runKey)
+      (batch, batchId) =>
         BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
           processBatch(batch.sparkSession, decorate(batch), "text",
             "doc_id", urlCol, blocklist, minQuality, indexPath, outPath,
-            knownNonEmpty = true) // one idRangeSplits file, decorated
+            knownNonEmpty = true)
         }
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

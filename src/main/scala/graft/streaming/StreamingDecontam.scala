@@ -51,35 +51,15 @@ object StreamingDecontam {
              textCol: String, eval: DataFrame, outPath: String,
              w: Int = 3, threshold: Double = 0.2,
              nBatches: Int = 4, fpp: Double = 0.01): Unit = {
-    val schema = spark.read.parquet(srcParquet).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, srcParquet, idCol,
-      nBatches, kind = "decon")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sdecon_ckpt_")
-    val runId = BatchLedger.openRun(spark, outPath,
-      stageKey)
     // the per-run eval artifact: built once, probed by every batch
     val ev = Dedup.decontamEval(eval, textCol, idCol, w, fpp)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under foreachBatch's same-batchId replay (see
-        // BatchLedger): a re-delivered completed batch is a no-op
+    try StagedIngest.run(spark, srcParquet,
+        StagedIngest.Split(idCol, nBatches), "decon") { (runKey, _) =>
+      val runId = BatchLedger.openRun(spark, outPath, runKey)
+      (batch, batchId) =>
         BatchLedger.once(batch.sparkSession, outPath, runId, batchId) {
-          processBatch(batch, ev, threshold, outPath,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+          processBatch(batch, ev, threshold, outPath, knownNonEmpty = true)
         }
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      Dedup.releaseDecontamEval(ev)
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
-    }
+    } finally Dedup.releaseDecontamEval(ev)
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** DISTRIBUTION-SHIFT MONITOR for training-data ingest: every
   * microbatch's categorical profile (language, source, …) is
@@ -41,26 +40,18 @@ object StreamingDrift {
   def ingest(spark: SparkSession, srcParquet: String, idCol: String,
              dimCol: String, outPath: String, nBatches: Int = 4,
              alertTv: Double = 0.3): Unit = {
-    val schema = spark.read.parquet(srcParquet).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, srcParquet, idCol,
-      nBatches, kind = "drift")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sdrift_ckpt_")
-    val runId = BatchLedger.openRun(spark, outPath,
-      stageKey)
     // accumulated counts of everything BEFORE the current batch —
     // low-cardinality by contract, driver-held for the run, seeded
     // from the persisted cross-run baseline (a second run compares
     // against everything earlier runs observed) and re-persisted at
-    // successful run close
-    val acc = DriftState.load(spark, outPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // successful run close (a crashed run leaves the previous
+    // baseline intact)
+    val acc = scala.collection.mutable.Map.empty[String, Long]
+    StagedIngest.run(spark, srcParquet,
+        StagedIngest.Split(idCol, nBatches), "drift") { (runKey, _) =>
+      val runId = BatchLedger.openRun(spark, outPath, runKey)
+      acc ++= DriftState.load(spark, outPath)
+      (batch, batchId) => {
         val s = batch.sparkSession
         // replay-guarded: a re-delivered batch neither re-alerts nor
         // double-counts into the baseline (both live in this body)
@@ -80,16 +71,7 @@ object StreamingDrift {
           }
         }
       }
-      .start()
-    try {
-      q.processAllAvailable()
-      // successful close: persist the baseline for the next run (a
-      // crashed run leaves the previous baseline intact)
-      DriftState.save(spark, outPath, acc)
-    } finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
+    DriftState.save(spark, outPath, acc)
   }
 }

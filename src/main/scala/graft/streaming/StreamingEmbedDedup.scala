@@ -50,44 +50,22 @@ object StreamingEmbedDedup {
              outPath: String, dim: Int = 64, bits: Int = 8,
              threshold: Double = 0.3, nBatches: Int = 3,
              compactEvery: Int = 0,
-             compactFilesPerDir: Double = 0.0): Unit = {
-    val src = s"$dir/embeddings.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "vec_id",
-      nBatches, kind = "edup")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sededup_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under foreachBatch's same-batchId replay (see
-        // BatchLedger): guards the index append and the kept-id write
-        BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
-          processBatch(batch.sparkSession, batch, "embedding", "vec_id",
-            indexPath, outPath, dim, bits, threshold,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+             compactFilesPerDir: Double = 0.0): Unit =
+    StagedIngest.run(spark, s"$dir/embeddings.parquet",
+        StagedIngest.Split("vec_id", nBatches), "edup") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+        dataPath = indexPath)
+      (batch, batchId) => {
+        val s = batch.sparkSession
+        // guards the index append and the kept-id write together
+        BatchLedger.once(s, indexPath, runId, batchId) {
+          processBatch(s, batch, "embedding", "vec_id", indexPath, outPath,
+            dim, bits, threshold, knownNonEmpty = true)
         }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          EmbedDedupIndex.compactIndex(batch.sparkSession, indexPath)
-        // file-count alarm: compact when measured append debris
-        // says so, not a blind cadence
-        graft.core.ParquetCompact.maybeCompact(
-          batch.sparkSession, indexPath, compactFilesPerDir) {
-          EmbedDedupIndex.compactIndex(batch.sparkSession, indexPath)
+        graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
+            compactFilesPerDir, indexPath) {
+          EmbedDedupIndex.compactIndex(s, indexPath)
         }
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

@@ -52,39 +52,21 @@ object StreamingExactDedup {
     */
   def ingest(spark: SparkSession, dir: String, indexPath: String,
              outPath: String, compactEvery: Int = 0,
-             compactFilesPerDir: Double = 0.0): Unit = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stage = java.nio.file.Files.createTempDirectory("graft_sxdedup")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"),
-      stage.resolve("documents.parquet"))
-    val stream = spark.readStream.schema(schema).parquet(stage.toString)
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sxdedup_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      Staging.runKey(spark, s"$dir/documents.parquet", "doc_id", 1, kind = "xdup"),
-      dataPath = indexPath)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under foreachBatch's same-batchId replay (see
-        // BatchLedger): guards the fp append and the kept-id write
-        BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
-          processBatch(batch.sparkSession, batch, "text", "doc_id",
-            indexPath, outPath)
+             compactFilesPerDir: Double = 0.0): Unit =
+    StagedIngest.run(spark, s"$dir/documents.parquet",
+        StagedIngest.Whole("doc_id"), "xdup") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+        dataPath = indexPath)
+      (batch, batchId) => {
+        val s = batch.sparkSession
+        // guards the fp append and the kept-id write together
+        BatchLedger.once(s, indexPath, runId, batchId) {
+          processBatch(s, batch, "text", "doc_id", indexPath, outPath)
         }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          DedupIndex.compactIndex(batch.sparkSession, indexPath)
-        // file-count alarm: compact when measured append debris
-        // says so, not a blind cadence
-        graft.core.ParquetCompact.maybeCompact(
-          batch.sparkSession, indexPath, compactFilesPerDir) {
-          DedupIndex.compactIndex(batch.sparkSession, indexPath)
+        graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
+            compactFilesPerDir, indexPath) {
+          DedupIndex.compactIndex(s, indexPath)
         }
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
     }
-  }
 }

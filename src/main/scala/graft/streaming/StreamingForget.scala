@@ -46,25 +46,14 @@ object StreamingForget {
   def ingest(spark: SparkSession, srcParquet: String, idCol: String,
              indexPath: String, nBatches: Int = 4,
              foldEvery: Int = 0): Unit = {
-    val schema = spark.read.parquet(srcParquet).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, srcParquet, idCol,
-      nBatches, kind = "forget")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sforget_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
-    var sinceFold = 0
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StagedIngest.run(spark, srcParquet,
+        StagedIngest.Split(idCol, nBatches), "forget") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+        dataPath = indexPath)
+      var sinceFold = 0
+      (batch, batchId) => {
         BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
-          processBatch(batch, idCol, indexPath,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+          processBatch(batch, idCol, indexPath, knownNonEmpty = true)
         }
         sinceFold += 1
         if (foldEvery > 0 && sinceFold >= foldEvery) {
@@ -74,11 +63,6 @@ object StreamingForget {
           sinceFold = 0
         }
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
     // close the run with an empty mask: erasure is complete physical
     // removal once the ingest returns, not a promise deferred to an

@@ -66,58 +66,39 @@ object StreamingHybrid {
              root: String, nBatches: Int = 4,
              compactEvery: Int = 0,
              compactFilesPerDir: Double = 0.0): Unit = {
-    val src = s"$dir/documents.parquet"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "doc_id",
-      nBatches, kind = "hybrid")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_shyb_ckpt_")
-    // the hybrid ledger lives at root/oplog (appendDocs' contract);
-    // openRun GCs dead runs' markers there under the same
-    // single-writer argument as the per-index ingests. The staleness
-    // witnesses are the PAIRED SUB-LAYOUTS, not $root — the ledger
-    // lives inside $root, so witnessing the root itself could never
-    // fire (stale markers imply the root exists) and a re-ingest
-    // after a delete-everything pass would skip every batch
-    val runId = BatchLedger.openRunForIndex(spark, s"$root/oplog",
-      stageKey,
-      dataPaths = Seq(s"$root/bm25", s"$root/ivf"))
-    // first contact creates the layouts via append mode, which never
-    // persists the quantizer — persist-or-VERIFY it here so the
-    // (layout, model) pair is recoverable from the root alone
-    // (Hybrid.loadModel) and a re-ingest under a DIFFERENT model
-    // fails loudly instead of silently skewing every old vector's
-    // probes (Ivf.ensurePair); gated on a non-empty stage so an
-    // empty ingest can't conjure a sidecar-only layout dir
-    if (Staging.nonEmpty(stage))
-      graft.pipeline.Ivf.ensurePair(spark, model, None, s"$root/ivf")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under foreachBatch's same-batchId replay via
-        // appendDocs' OWN per-side markers — no outer wrapper, so a
-        // one-sided crash replays into a heal instead of a skip
-        processBatch(batch.sparkSession, batch, "text", "doc_id", emb,
-          "vec_id", "embedding", model, root, runId, batchId,
-          knownNonEmpty = true) // one idRangeSplits file per batch
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Hybrid.compactIndex(batch.sparkSession, root)
-        if (compactFilesPerDir > 0 && Seq(s"$root/bm25", s"$root/ivf")
-              .exists(p => graft.core.ParquetCompact
-                .meanFilesPerDir(batch.sparkSession, p) > compactFilesPerDir))
-          Hybrid.compactIndex(batch.sparkSession, root) // either side's alarm compacts both
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
+    StagedIngest.run(spark, s"$dir/documents.parquet",
+        StagedIngest.Split("doc_id", nBatches), "hybrid") {
+      (runKey, stageNonEmpty) =>
+        // the hybrid ledger lives at root/oplog (appendDocs' contract).
+        // The staleness witnesses are the PAIRED SUB-LAYOUTS, not
+        // $root — the ledger lives inside $root, so witnessing the
+        // root itself could never fire (stale markers imply the root
+        // exists) and a re-ingest after a delete-everything pass
+        // would skip every batch
+        val runId = BatchLedger.openRunForIndex(spark, s"$root/oplog",
+          runKey, dataPaths = Seq(s"$root/bm25", s"$root/ivf"))
+        // first contact creates the layouts via append mode, which
+        // never persists the quantizer — persist-or-VERIFY it here so
+        // the (layout, model) pair is recoverable from the root alone
+        // (Hybrid.loadModel) and a re-ingest under a DIFFERENT model
+        // fails loudly instead of silently skewing every old vector's
+        // probes (Ivf.ensurePair); gated on a non-empty stage so an
+        // empty ingest can't conjure a sidecar-only layout dir
+        if (stageNonEmpty)
+          graft.pipeline.Ivf.ensurePair(spark, model, None, s"$root/ivf")
+        (batch, batchId) => {
+          val s = batch.sparkSession
+          // no outer BatchLedger.once: appendDocs' OWN per-side markers
+          // make a one-sided crash replay into a heal instead of a skip
+          processBatch(s, batch, "text", "doc_id", emb, "vec_id",
+            "embedding", model, root, runId, batchId, knownNonEmpty = true)
+          graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
+              compactFilesPerDir, s"$root/bm25", s"$root/ivf") {
+            Hybrid.compactIndex(s, root)
+          }
+        }
     }
   }
 }

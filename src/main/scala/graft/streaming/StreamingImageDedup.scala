@@ -54,43 +54,22 @@ object StreamingImageDedup {
              compactEvery: Int = 0,
              compactFilesPerDir: Double = 0.0,
              hasher: org.apache.spark.sql.Column =>
-               org.apache.spark.sql.Column = PHashIndex.ImageHasher): Unit = {
-    val schema = spark.read.parquet(srcParquet).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, srcParquet, idCol,
-      nBatches, kind = "pdup")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_simgdedup_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under foreachBatch's same-batchId replay (see
-        // BatchLedger): guards the band append and the kept-id write
-        BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
-          processBatch(batch.sparkSession, batch, bytesCol, idCol,
-            indexPath, outPath, maxDist, hasher,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+               org.apache.spark.sql.Column = PHashIndex.ImageHasher): Unit =
+    StagedIngest.run(spark, srcParquet,
+        StagedIngest.Split(idCol, nBatches), "pdup") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+        dataPath = indexPath)
+      (batch, batchId) => {
+        val s = batch.sparkSession
+        // guards the band append and the kept-id write together
+        BatchLedger.once(s, indexPath, runId, batchId) {
+          processBatch(s, batch, bytesCol, idCol, indexPath, outPath,
+            maxDist, hasher, knownNonEmpty = true)
         }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          PHashIndex.compactIndex(batch.sparkSession, indexPath)
-        // file-count alarm: compact when measured append debris
-        // says so, not a blind cadence
-        graft.core.ParquetCompact.maybeCompact(
-          batch.sparkSession, indexPath, compactFilesPerDir) {
-          PHashIndex.compactIndex(batch.sparkSession, indexPath)
+        graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
+            compactFilesPerDir, indexPath) {
+          PHashIndex.compactIndex(s, indexPath)
         }
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

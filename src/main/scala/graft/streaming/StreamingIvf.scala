@@ -72,58 +72,36 @@ object StreamingIvf {
              compactEvery: Int = 0,
              reclusterImbalance: Double = 0.0,
              compactFilesPerDir: Double = 0.0): IvfModel = {
-    val src = s"$dir/embeddings.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "vec_id",
-      nBatches, kind = "ivf")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sivf_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
     // the quantizer the index is currently assigned under; replaced
     // when the drift alarm fires (foreachBatch runs batches
     // sequentially in one thread — plain var is safe)
     var current = model
-    if (reclusterImbalance > 0 && Staging.nonEmpty(stage))
-      // persist-or-verify (a restarted run must pass the persisted
-      // model, which recluster may have replaced — see ensurePair)
-      Ivf.ensurePair(spark, current, None, indexPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        // idempotent under foreachBatch's same-batchId replay (see
-        // BatchLedger): a re-delivered completed batch is a no-op
-        BatchLedger.once(s, indexPath, runId, batchId) {
-          processBatch(batch, "embedding", current, indexPath,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+    StagedIngest.run(spark, s"$dir/embeddings.parquet",
+        StagedIngest.Split("vec_id", nBatches), "ivf") {
+      (runKey, stageNonEmpty) =>
+        val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+          dataPath = indexPath)
+        if (reclusterImbalance > 0 && stageNonEmpty)
+          // persist-or-verify (a restarted run must pass the persisted
+          // model, which recluster may have replaced — see ensurePair)
+          Ivf.ensurePair(spark, current, None, indexPath)
+        (batch, batchId) => {
+          val s = batch.sparkSession
+          BatchLedger.once(s, indexPath, runId, batchId) {
+            processBatch(batch, "embedding", current, indexPath,
+              knownNonEmpty = true)
+          }
+          graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
+              compactFilesPerDir, indexPath) {
+            Ivf.compactIndex(s, indexPath)
+          }
+          if (reclusterImbalance > 0 &&
+              Ivf.imbalance(s, indexPath) > reclusterImbalance)
+            // recluster persists the retrained quantizer inside the
+            // swap; keep the index's cost class (flat vs hierarchical)
+            current = Ivf.recluster(s, indexPath, "embedding", "vec_id",
+              nlist = current.nlist, hierarchical = current.hierarchical)
         }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Ivf.compactIndex(s, indexPath)
-        // the FILE-COUNT alarm, symmetric to the imbalance alarm: a
-        // directory listing decides when append debris is worth a
-        // compaction pass, instead of a blind cadence
-        graft.core.ParquetCompact.maybeCompact(s, indexPath,
-            compactFilesPerDir) {
-          Ivf.compactIndex(s, indexPath)
-        }
-        if (reclusterImbalance > 0 &&
-            Ivf.imbalance(s, indexPath) > reclusterImbalance)
-          // recluster persists the retrained quantizer inside the
-          // swap; keep the index's cost class (flat vs hierarchical)
-          current = Ivf.recluster(s, indexPath, "embedding", "vec_id",
-            nlist = current.nlist, hierarchical = current.hierarchical)
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
     current
   }
@@ -170,47 +148,28 @@ object StreamingIvf {
                             indexPath: String, nBatches: Int,
                             compactEvery: Int,
                             compactFilesPerDir: Double, kind: String)
-                           (append: (DataFrame, IvfModel) => Unit): Unit = {
-    val src = s"$dir/embeddings.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "vec_id",
-      nBatches, kind = kind)
-    val ckpt = EventStream.scratchCheckpointDir(spark, s"graft_s${kind}_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
-    // persist-or-verify, and only when there is data to ingest — a
-    // save on an empty source would conjure a sidecar-only layout
-    // dir that poisons the missing-dir-is-empty convention, and an
-    // unconditional save would silently invalidate codes a prior
-    // run already encoded under a different pair (ensurePair errors
-    // loudly instead)
-    if (Staging.nonEmpty(stage))
-      Ivf.ensurePair(spark, model, pq, indexPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        BatchLedger.once(s, indexPath, runId, batchId) {
-          append(batch, model) // one idRangeSplits file: non-empty
+                           (append: (DataFrame, IvfModel) => Unit): Unit =
+    StagedIngest.run(spark, s"$dir/embeddings.parquet",
+        StagedIngest.Split("vec_id", nBatches), kind) {
+      (runKey, stageNonEmpty) =>
+        val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+          dataPath = indexPath)
+        // persist-or-verify, and only when there is data to ingest — a
+        // save on an empty source would conjure a sidecar-only layout
+        // dir that poisons the missing-dir-is-empty convention, and an
+        // unconditional save would silently invalidate codes a prior
+        // run already encoded under a different pair (ensurePair
+        // errors loudly instead)
+        if (stageNonEmpty) Ivf.ensurePair(spark, model, pq, indexPath)
+        (batch, batchId) => {
+          val s = batch.sparkSession
+          BatchLedger.once(s, indexPath, runId, batchId) {
+            append(batch, model)
+          }
+          graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
+              compactFilesPerDir, indexPath) {
+            Ivf.compactIndex(s, indexPath)
+          }
         }
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Ivf.compactIndex(s, indexPath)
-        graft.core.ParquetCompact.maybeCompact(s, indexPath,
-            compactFilesPerDir) {
-          Ivf.compactIndex(s, indexPath)
-        }
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

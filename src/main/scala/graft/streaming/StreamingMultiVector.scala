@@ -39,40 +39,25 @@ object StreamingMultiVector {
     */
   def ingest(spark: SparkSession, dir: String, root: String,
              model: IvfModel, nBatches: Int = 4, vecsPerDoc: Int = 4,
-             compactFilesPerDir: Double = 0.0): Unit = {
-    val src = s"$dir/embeddings.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "vec_id",
-      nBatches, kind = "multivec")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_smv_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, root,
-      stageKey,
-      dataPath = s"$root/ivf")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchLedger.once(batch.sparkSession, root, runId, batchId) {
-          processBatch(batch.sparkSession, batch, model, root, vecsPerDoc,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+             compactFilesPerDir: Double = 0.0): Unit =
+    StagedIngest.run(spark, s"$dir/embeddings.parquet",
+        StagedIngest.Split("vec_id", nBatches), "multivec") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, root, runKey,
+        dataPath = s"$root/ivf")
+      (batch, batchId) => {
+        val s = batch.sparkSession
+        BatchLedger.once(s, root, runId, batchId) {
+          processBatch(s, batch, model, root, vecsPerDoc,
+            knownNonEmpty = true)
         }
-        Seq(s"$root/ivf", s"$root/docs").foreach { sub =>
-          graft.core.ParquetCompact.maybeCompact(
-            batch.sparkSession, sub, compactFilesPerDir) {
-            graft.core.ParquetCompact.compact(batch.sparkSession, sub,
-              if (sub.endsWith("ivf")) Seq("cluster") else Seq("db"), Nil)
-          }
+        // each side's alarm compacts only that side
+        Seq(s"$root/ivf" -> "cluster", s"$root/docs" -> "db").foreach {
+          case (sub, part) =>
+            graft.core.ParquetCompact.afterBatch(s, batchId, 0,
+                compactFilesPerDir, sub) {
+              graft.core.ParquetCompact.compact(s, sub, Seq(part), Nil)
+            }
         }
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

@@ -48,32 +48,13 @@ object StreamingProfile {
     */
   def ingest(spark: SparkSession, dir: String, cols: Seq[String],
              statsPath: String, nBatches: Int = 3): DataFrame = {
-    val src = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "doc_id",
-      nBatches, kind = "prof")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sprof_ckpt_")
-    val runId = BatchLedger.openRun(spark, statsPath,
-      stageKey)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under same-batchId replay (see BatchLedger)
+    StagedIngest.run(spark, s"$dir/documents.parquet",
+        StagedIngest.Split("doc_id", nBatches), "prof") { (runKey, _) =>
+      val runId = BatchLedger.openRun(spark, statsPath, runKey)
+      (batch, batchId) =>
         BatchLedger.once(batch.sparkSession, statsPath, runId, batchId) {
-          processBatch(batch, cols, statsPath,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+          processBatch(batch, cols, statsPath, knownNonEmpty = true)
         }
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
     summary(spark, statsPath)
   }

@@ -37,24 +37,15 @@ object StreamingQuarantine {
              minQuality: Double, indexPath: String, outPath: String,
              quarantinePath: String, alertTv: Double = 0.3,
              urlCol: String = "url", nBatches: Int = 4): Unit = {
-    val schema = spark.read.parquet(srcParquet).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, srcParquet, idCol,
-      nBatches, kind = "quar")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_squar_ckpt_")
-    val runId = BatchLedger.openRun(spark, indexPath,
-      stageKey)
     // counts of everything OBSERVED before the current batch (see
     // the baseline-policy note above), seeded from the persisted
     // cross-run baseline and re-persisted at run close (DriftState)
-    val acc = DriftState.load(spark, outPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val acc = scala.collection.mutable.Map.empty[String, Long]
+    StagedIngest.run(spark, srcParquet,
+        StagedIngest.Split(idCol, nBatches), "quar") { (runKey, _) =>
+      val runId = BatchLedger.openRun(spark, indexPath, runKey)
+      acc ++= DriftState.load(spark, outPath)
+      (batch, batchId) => {
         val s = batch.sparkSession
         // replay-guarded: divert/curate/baseline all live in one body
         BatchLedger.once(s, indexPath, runId, batchId) {
@@ -67,20 +58,13 @@ object StreamingQuarantine {
           else
             StreamingCuration.processBatch(s, decorate(batch), textCol,
               idCol, urlCol, blocklist, minQuality, indexPath, outPath,
-              knownNonEmpty = true) // one idRangeSplits file, decorated
+              knownNonEmpty = true)
           counts.foreach { case (v, c) =>
             acc.update(v, acc.getOrElse(v, 0L) + c)
           }
         }
       }
-      .start()
-    try {
-      q.processAllAvailable()
-      DriftState.save(spark, outPath, acc)
-    } finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
+    DriftState.save(spark, outPath, acc)
   }
 }

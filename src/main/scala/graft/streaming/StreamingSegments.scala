@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions.col
   * (gate-pinned both stages against the one-shot goldens).
   *
   * ONE ordering caveat closes the exactly-once story when maintenance
-  * and the stream overlap: [[promoteSegment]] promotes BEFORE the
+  * and the stream overlap: [[promoteBatch]] promotes BEFORE the
   * stream's checkpoint commits the batch, so the NEWEST segment may
   * belong to a batch whose commit never landed. If maintenance
   * absorbed that segment into a survivor and the stream then crashed,
@@ -157,20 +157,30 @@ object StreamingSegments {
     require(fs.rename(tmp, dst), s"retire rename $tmp -> $dst failed")
   }
 
-  /** The hidden-build-then-promote protocol every tier's segment
-    * write shares: `build` lands the complete segment (data AND its
-    * metadata sidecars) under `.seg=<id>__building` — the dot prefix
-    * keeps [[segmentRoots]] and Spark's file index blind to it —
-    * then ONE rename promotes it, so a concurrent serve never
-    * observes data without its witness or a replay's half-overwritten
-    * segment. A crash mid-build leaves only the hidden dir (swept by
-    * the next replay of the same batch); a crash in the
-    * delete→rename window leaves the segment absent — an empty
-    * segment to readers — until the uncommitted batch replays, which
-    * regenerates it.
+  /** The guard and hidden-build-then-promote protocol every tier's
+    * processBatch* shares. An empty batch (unless the caller knows it
+    * is non-empty) creates no segment — the empty-layout landmine: a
+    * zero-row write would leave a _SUCCESS-only root that every later
+    * segments read dies on — and a [[retiredIds]] batch id no-ops
+    * (the deep-rewind guard in the class doc). Otherwise `build` lands
+    * the complete segment (data AND its metadata sidecars) under
+    * `.seg=<id>__building` — the dot prefix keeps [[segmentRoots]] and
+    * Spark's file index blind to it — then ONE rename promotes it, so
+    * a concurrent serve never observes data without its witness or a
+    * replay's half-overwritten segment. A crash mid-build leaves only
+    * the hidden dir (swept by the next replay of the same batch); a
+    * crash in the delete→rename window leaves the segment absent — an
+    * empty segment to readers — until the uncommitted batch replays,
+    * which regenerates it. Returns whether a segment was promoted
+    * (the ingest cadence counter's signal).
     */
-  private def promoteSegment(spark: SparkSession, root: String,
-                             batchId: Long)(build: String => Unit): Unit = {
+  private def promoteBatch(spark: SparkSession, batch: DataFrame,
+                           root: String, batchId: Long,
+                           knownNonEmpty: Boolean)
+                          (build: String => Unit): Boolean = {
+    if ((!knownNonEmpty && batch.isEmpty) ||
+        retiredIds(spark, root).contains(batchId))
+      return false
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(s"$root/.seg=${batchId}__building")
@@ -179,58 +189,33 @@ object StreamingSegments {
     val dst = new org.apache.hadoop.fs.Path(s"$root/seg=$batchId")
     fs.delete(dst, true) // replay: retire the old copy whole
     require(fs.rename(tmp, dst), s"promote $tmp -> $dst failed")
+    true
   }
 
-  /** The shared foreachBatch wiring: replay `src` as id-ordered
-    * microbatches through `perBatch`. Every microbatch is exactly one
-    * [[Staging.idRangeSplits]] file and idRangeSplits writes NO file
-    * for an empty id range, so batches on this path are NON-EMPTY BY
-    * CONSTRUCTION — the ingest lambdas pass `knownNonEmpty = true` to
-    * skip the per-batch emptiness job (~55 ms of pure fixed cost per
-    * batch) while the processBatch* entry points keep the public
-    * empty-batch contract for direct callers (default false).
+  /** Replay `src` as `nBatches` id-ordered microbatches through
+    * `perBatch` ([[StagedIngest]]; no ledger — the segment names are
+    * the replay guard, so the run key goes unused).
     */
   private def runIngest(spark: SparkSession, src: String, idCol: String,
-                        nBatches: Int, ckptPrefix: String)
-                       (perBatch: (DataFrame, Long) => Unit): Unit = {
-    val schema = spark.read.parquet(src).schema
-    val stage = Staging.idRangeSplits(spark, src, idCol, nBatches)
-    val ckpt = EventStream.scratchCheckpointDir(spark, ckptPrefix)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch(perBatch)
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
-    }
-  }
+                        nBatches: Int, kind: String)
+                       (perBatch: (DataFrame, Long) => Unit): Unit =
+    StagedIngest.run(spark, src, StagedIngest.Split(idCol, nBatches),
+      kind)((_, _) => perBatch)
 
   /** One DENSE microbatch: assign under the frozen model, write the
     * batch's own int8 segment + its `_model` witness
     * (readSegmentsServing hard-requires it). Exposed for testing.
-    * Empty batches create no segment (the empty-layout landmine: a
-    * zero-row write would leave a _SUCCESS-only root that every
-    * later segments read dies on). Returns whether a segment was
-    * promoted (the ingest cadence counter's signal).
+    * Empty batches create no segment ([[promoteBatch]]). Returns
+    * whether a segment was promoted.
     */
   def processBatch(spark: SparkSession, batch: DataFrame, vecCol: String,
                    root: String, model: graft.pipeline.IvfModel,
                    batchId: Long,
-                   knownNonEmpty: Boolean = false): Boolean = {
-    if ((!knownNonEmpty && batch.isEmpty) ||
-        retiredIds(spark, root).contains(batchId))
-      return false
-    promoteSegment(spark, root, batchId) { tmp =>
+                   knownNonEmpty: Boolean = false): Boolean =
+    promoteBatch(spark, batch, root, batchId, knownNonEmpty) { tmp =>
       Ivf.writeIndexInt8(Ivf.assign(batch, vecCol, model), vecCol, tmp,
         model = Some(model))
     }
-    true
-  }
 
   /** The per-ingest maintenance cadence: after every `maintainEvery`
     * promotes (0 = maintenance off, the default) run the tier's
@@ -266,7 +251,7 @@ object StreamingSegments {
     val tick = maintainCadence(maintainEvery)(() =>
       maintainTiered(spark, root, fanout, minTierBytes))
     runIngest(spark, s"$dir/embeddings.parquet", "vec_id", nBatches,
-      "graft_ssegs_ckpt_") { (batch, batchId) =>
+      "segs") { (batch, batchId) =>
       if (processBatch(batch.sparkSession, batch, "embedding", root, model,
         batchId, knownNonEmpty = true)) tick()
     }
@@ -289,14 +274,26 @@ object StreamingSegments {
     */
   def mergeAll(spark: SparkSession, root: String,
                idCol: String = "vec_id",
-               protectTail: Boolean = true): Option[String] = {
+               protectTail: Boolean = true): Option[String] =
+    foldAll(spark, root, protectTail, minIdSeg)(
+      Ivf.mergeInto(spark, _, _, idCol))
+
+  /** The fold every mergeAll* shares: retire the whole group (the
+    * destination's id too — see [[retireIds]]'s survivor-rewind doc)
+    * when there is anything to absorb, then merge every other
+    * foldable segment into `pickDst`'s choice. None when no segment
+    * may be touched.
+    */
+  private def foldAll(spark: SparkSession, root: String,
+                      protectTail: Boolean,
+                      pickDst: Seq[String] => String)
+                     (merge: (String, String) => Unit): Option[String] = {
     val segs = foldable(spark, root, protectTail)
-    segs.headOption.map { dst =>
-      // the destination id too — see [[retireIds]]'s survivor-rewind doc
-      if (segs.tail.nonEmpty) retireIds(spark, root, segs.map(segId))
-      segs.tail.foreach(src => Ivf.mergeInto(spark, dst, src, idCol))
-      dst
-    }
+    if (segs.isEmpty) return None
+    val dst = pickDst(segs)
+    if (segs.sizeIs > 1) retireIds(spark, root, segs.map(segId))
+    segs.filterNot(_ == dst).foreach(merge(dst, _))
+    Some(dst)
   }
 
   /** The segment roots a maintenance pass may touch: all of them when
@@ -325,15 +322,10 @@ object StreamingSegments {
   def processBatchBm25(spark: SparkSession, batch: DataFrame,
                        textCol: String, idCol: String, root: String,
                        batchId: Long,
-                       knownNonEmpty: Boolean = false): Boolean = {
-    if ((!knownNonEmpty && batch.isEmpty) ||
-        retiredIds(spark, root).contains(batchId))
-      return false
-    promoteSegment(spark, root, batchId) { tmp =>
+                       knownNonEmpty: Boolean = false): Boolean =
+    promoteBatch(spark, batch, root, batchId, knownNonEmpty) { tmp =>
       Bm25.writeIndex(spark, batch, textCol, idCol, tmp)
     }
-    true
-  }
 
   /** Stream the documents table into a BM25 segment-per-batch layout
     * under `root`; serve with
@@ -347,7 +339,7 @@ object StreamingSegments {
     val tick = maintainCadence(maintainEvery)(() =>
       maintainTieredBm25(spark, root, fanout, minTierBytes))
     runIngest(spark, s"$dir/documents.parquet", "doc_id", nBatches,
-      "graft_ssegbm_ckpt_") { (batch, batchId) =>
+      "segbm") { (batch, batchId) =>
       if (processBatchBm25(batch.sparkSession, batch, "text", "doc_id", root,
         batchId, knownNonEmpty = true)) tick()
     }
@@ -358,14 +350,8 @@ object StreamingSegments {
     * merged layout is bit-identical to serving the segments).
     */
   def mergeAllBm25(spark: SparkSession, root: String,
-                   protectTail: Boolean = true): Option[String] = {
-    val segs = foldable(spark, root, protectTail)
-    segs.headOption.map { dst =>
-      if (segs.tail.nonEmpty) retireIds(spark, root, segs.map(segId))
-      segs.tail.foreach(src => Bm25.mergeInto(spark, dst, src))
-      dst
-    }
-  }
+                   protectTail: Boolean = true): Option[String] =
+    foldAll(spark, root, protectTail, minIdSeg)(Bm25.mergeInto(spark, _, _))
 
   /** One SPARSE microbatch: sparsify under the frozen (tau, scale)
     * contract, write the batch's own dim-bucketed segment. Exposed
@@ -375,16 +361,11 @@ object StreamingSegments {
                          vecCol: String, idCol: String, root: String,
                          batchId: Long, tau: Double,
                          scale: Double,
-                         knownNonEmpty: Boolean = false): Boolean = {
-    if ((!knownNonEmpty && batch.isEmpty) ||
-        retiredIds(spark, root).contains(batchId))
-      return false
-    promoteSegment(spark, root, batchId) { tmp =>
+                         knownNonEmpty: Boolean = false): Boolean =
+    promoteBatch(spark, batch, root, batchId, knownNonEmpty) { tmp =>
       Sparse.writeIndex(Sparse.sparsify(batch, vecCol, idCol, tau, scale),
         tmp)
     }
-    true
-  }
 
   /** Stream the embeddings table into a sparse segment-per-batch
     * layout under `root`; serve with
@@ -400,7 +381,7 @@ object StreamingSegments {
     val tick = maintainCadence(maintainEvery)(() =>
       maintainTieredSparse(spark, root, fanout, minTierBytes))
     runIngest(spark, s"$dir/embeddings.parquet", "vec_id", nBatches,
-      "graft_ssegsp_ckpt_") { (batch, batchId) =>
+      "segsp") { (batch, batchId) =>
       if (processBatchSparse(batch.sparkSession, batch, "embedding", "vec_id",
         root, batchId, tau, scale, knownNonEmpty = true)) tick()
     }
@@ -410,14 +391,9 @@ object StreamingSegments {
     * pure file moves — per-doc postings, no cross-doc statistics).
     */
   def mergeAllSparse(spark: SparkSession, root: String,
-                     protectTail: Boolean = true): Option[String] = {
-    val segs = foldable(spark, root, protectTail)
-    segs.headOption.map { dst =>
-      if (segs.tail.nonEmpty) retireIds(spark, root, segs.map(segId))
-      segs.tail.foreach(src => Sparse.mergeInto(spark, dst, src))
-      dst
-    }
-  }
+                     protectTail: Boolean = true): Option[String] =
+    foldAll(spark, root, protectTail, minIdSeg)(
+      Sparse.mergeInto(spark, _, _))
 
   /** One HYBRID microbatch: the batch's documents to a bm25/ sub-root
     * and their id-matched vectors to an ivf/ sub-root (float postings
@@ -437,12 +413,10 @@ object StreamingSegments {
                          vecIdCol: String, vecCol: String,
                          model: graft.pipeline.IvfModel, root: String,
                          batchId: Long,
-                         knownNonEmpty: Boolean = false): Boolean = {
-    if ((!knownNonEmpty && batch.isEmpty) ||
-        retiredIds(spark, root).contains(batchId))
-      return false
-    val vecs = emb.join(batch.select(col(idCol).as(vecIdCol)), Seq(vecIdCol))
-    promoteSegment(spark, root, batchId) { tmp =>
+                         knownNonEmpty: Boolean = false): Boolean =
+    promoteBatch(spark, batch, root, batchId, knownNonEmpty) { tmp =>
+      val vecs = emb.join(batch.select(col(idCol).as(vecIdCol)),
+        Seq(vecIdCol))
       // the two sides are independent builds over disjoint sub-roots
       // (bm25/ vs ivf/, no session-conf mutation in either) inside ONE
       // hidden build+promote — run them concurrently (the
@@ -458,8 +432,6 @@ object StreamingSegments {
           Ivf.saveModel(spark, model, Ivf.modelPath(s"$tmp/ivf"))
         })
     }
-    true
-  }
 
   /** Stream the documents table into a PAIRED segment-per-batch
     * layout under `root` against the pre-trained frozen `model`,
@@ -479,7 +451,7 @@ object StreamingSegments {
     val tick = maintainCadence(maintainEvery)(() =>
       maintainTieredHybrid(spark, root, fanout, minTierBytes))
     runIngest(spark, s"$dir/documents.parquet", "doc_id", nBatches,
-      "graft_sseghy_ckpt_") { (batch, batchId) =>
+      "seghy") { (batch, batchId) =>
       if (processBatchHybrid(batch.sparkSession, batch, "text", "doc_id", emb,
         "vec_id", "embedding", model, root, batchId,
         knownNonEmpty = true)) tick()
@@ -499,15 +471,10 @@ object StreamingSegments {
   def processBatchMultiVec(spark: SparkSession, batch: DataFrame,
                            model: graft.pipeline.IvfModel, root: String,
                            batchId: Long,
-                           knownNonEmpty: Boolean = false): Boolean = {
-    if ((!knownNonEmpty && batch.isEmpty) ||
-        retiredIds(spark, root).contains(batchId))
-      return false
-    promoteSegment(spark, root, batchId) { tmp =>
+                           knownNonEmpty: Boolean = false): Boolean =
+    promoteBatch(spark, batch, root, batchId, knownNonEmpty) { tmp =>
       graft.pipeline.MultiVector.writeIndex(spark, batch, model, tmp)
     }
-    true
-  }
 
   /** Stream the embeddings table (docs = `vecsPerDoc`-vector groups)
     * into a late-interaction segment-per-batch layout under `root`.
@@ -532,7 +499,7 @@ object StreamingSegments {
       .write.parquet(staged)
     val tick = maintainCadence(maintainEvery)(() =>
       maintainTieredMultiVec(spark, root, fanout, minTierBytes))
-    try runIngest(spark, staged, "doc", nBatches, "graft_ssegmv_ckpt_") {
+    try runIngest(spark, staged, "doc", nBatches, "segmv") {
       (batch, batchId) =>
         if (processBatchMultiVec(batch.sparkSession, batch, model, root,
           batchId, knownNonEmpty = true)) tick()
@@ -544,15 +511,9 @@ object StreamingSegments {
     * witness-verified [[MultiVector.mergeInto]].
     */
   def mergeAllMultiVec(spark: SparkSession, root: String,
-                       protectTail: Boolean = true): Option[String] = {
-    val segs = foldable(spark, root, protectTail)
-    segs.headOption.map { dst =>
-      if (segs.tail.nonEmpty) retireIds(spark, root, segs.map(segId))
-      segs.tail.foreach(src =>
-        graft.pipeline.MultiVector.mergeInto(spark, dst, src))
-      dst
-    }
-  }
+                       protectTail: Boolean = true): Option[String] =
+    foldAll(spark, root, protectTail, minIdSeg)(
+      graft.pipeline.MultiVector.mergeInto(spark, _, _))
 
   // ------------------------------------------------------------------
   // Size-tiered maintenance — the LSM compaction POLICY over the
@@ -685,27 +646,31 @@ object StreamingSegments {
       (dst, src) => Sparse.mergeInto(spark, dst, src),
       dst => if (compact) Sparse.compactIndex(spark, dst), protectTail)
 
-  /** Size-tiered maintenance over a HYBRID pair layout. The merge
-    * destination inside each group must carry a dense side if any
-    * member does (the [[mergeAllHybrid]] rule — a lexical-only
-    * segment cannot absorb another's ivf/), falling back to the
-    * lowest batch id. `vecIdCol` names the dense side's id column.
+  /** Size-tiered maintenance over a HYBRID pair layout, each group
+    * merging into its [[denseFirstSeg]] member. `vecIdCol` names the
+    * dense side's id column.
     */
   def maintainTieredHybrid(spark: SparkSession, root: String,
                            fanout: Int = 4, minTierBytes: Long = 1L << 20,
                            compact: Boolean = false,
                            protectTail: Boolean = true,
-                           vecIdCol: String = "vec_id"): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def pick(group: Seq[String]): String = {
-      val dense = group.filter(r =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$r/ivf")))
-      if (dense.isEmpty) minIdSeg(group) else minIdSeg(dense)
-    }
-    tieredFold(spark, root, fanout, minTierBytes, pick,
+                           vecIdCol: String = "vec_id"): Seq[String] =
+    tieredFold(spark, root, fanout, minTierBytes, denseFirstSeg(spark, _),
       (dst, src) => Hybrid.mergeInto(spark, dst, src, vecIdCol),
       dst => if (compact) Hybrid.compactIndex(spark, dst), protectTail)
+
+  /** The hybrid merge destination: the min-id member CARRYING A DENSE
+    * SIDE (a lexical-only segment cannot absorb another segment's
+    * ivf/ — Ivf.mergeInto requires an existing destination), else —
+    * a lexical-only group — the min-id member.
+    */
+  private def denseFirstSeg(spark: SparkSession,
+                            group: Seq[String]): String = {
+    val fs = new org.apache.hadoop.fs.Path(group.head)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dense = group.filter(r =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$r/ivf")))
+    if (dense.isEmpty) minIdSeg(group) else minIdSeg(dense)
   }
 
   /** Size-tiered maintenance over a MULTIVEC pair layout (merge-only:
@@ -721,25 +686,13 @@ object StreamingSegments {
       _ => (), protectTail)
 
   /** Fold every hybrid segment pair into one via [[Hybrid.mergeInto]]
-    * (both sides' file-move merges under their own witnesses). The
-    * destination is the first segment CARRYING A DENSE SIDE (a
-    * lexical-only segment cannot absorb another segment's ivf/ —
-    * Ivf.mergeInto requires an existing destination); if none does,
-    * the whole layout is lexical-only and any segment absorbs.
-    * `vecIdCol` names the dense side's id column.
+    * (both sides' file-move merges under their own witnesses), into
+    * the [[denseFirstSeg]] destination. `vecIdCol` names the dense
+    * side's id column.
     */
   def mergeAllHybrid(spark: SparkSession, root: String,
                      protectTail: Boolean = true,
-                     vecIdCol: String = "vec_id"): Option[String] = {
-    val segs = foldable(spark, root, protectTail)
-    if (segs.isEmpty) return None
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = segs.find(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$r/ivf"))).getOrElse(segs.head)
-    if (segs.sizeIs > 1) retireIds(spark, root, segs.map(segId))
-    segs.filterNot(_ == dst).foreach(src =>
-      Hybrid.mergeInto(spark, dst, src, vecIdCol))
-    Some(dst)
-  }
+                     vecIdCol: String = "vec_id"): Option[String] =
+    foldAll(spark, root, protectTail, denseFirstSeg(spark, _))(
+      Hybrid.mergeInto(spark, _, _, vecIdCol))
 }

@@ -47,36 +47,16 @@ object StreamingSpanScrub {
   def ingest(spark: SparkSession, srcParquet: String, idCol: String,
              textCol: String, eval: DataFrame, outPath: String,
              w: Int = 50, nBatches: Int = 4, fpp: Double = 0.01): Unit = {
-    val schema = spark.read.parquet(srcParquet).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, srcParquet, idCol,
-      nBatches, kind = "scrub")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_sscrub_ckpt_")
-    val runId = BatchLedger.openRun(spark, outPath,
-      stageKey)
     // the per-run eval artifact AT THE SPAN WIDTH: window-hash
     // postings + Bloom, built once, probed by every batch
     val ev = Dedup.decontamEval(eval, textCol, idCol, w, fpp)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under foreachBatch's same-batchId replay (see
-        // BatchLedger): a re-delivered completed batch is a no-op
+    try StagedIngest.run(spark, srcParquet,
+        StagedIngest.Split(idCol, nBatches), "scrub") { (runKey, _) =>
+      val runId = BatchLedger.openRun(spark, outPath, runKey)
+      (batch, batchId) =>
         BatchLedger.once(batch.sparkSession, outPath, runId, batchId) {
-          processBatch(batch, ev, outPath,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+          processBatch(batch, ev, outPath, knownNonEmpty = true)
         }
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      Dedup.releaseDecontamEval(ev)
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
-    }
+    } finally Dedup.releaseDecontamEval(ev)
   }
 }

@@ -35,38 +35,21 @@ object StreamingSparse {
   def ingest(spark: SparkSession, dir: String, indexPath: String,
              nBatches: Int = 4, tau: Double = 0.05,
              scale: Double = Sparse.DefaultScale,
-             compactFilesPerDir: Double = 0.0): Unit = {
-    val src = s"$dir/embeddings.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "vec_id",
-      nBatches, kind = "sparse")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_ssparse_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
-          processBatch(batch.sparkSession, batch, "embedding", "vec_id",
-            indexPath, tau, scale,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+             compactFilesPerDir: Double = 0.0): Unit =
+    StagedIngest.run(spark, s"$dir/embeddings.parquet",
+        StagedIngest.Split("vec_id", nBatches), "sparse") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+        dataPath = indexPath)
+      (batch, batchId) => {
+        val s = batch.sparkSession
+        BatchLedger.once(s, indexPath, runId, batchId) {
+          processBatch(s, batch, "embedding", "vec_id", indexPath, tau,
+            scale, knownNonEmpty = true)
         }
-        graft.core.ParquetCompact.maybeCompact(
-          batch.sparkSession, indexPath, compactFilesPerDir) {
-          Sparse.compactIndex(batch.sparkSession, indexPath)
+        graft.core.ParquetCompact.afterBatch(s, batchId, 0,
+            compactFilesPerDir, indexPath) {
+          Sparse.compactIndex(s, indexPath)
         }
       }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

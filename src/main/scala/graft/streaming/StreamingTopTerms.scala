@@ -26,27 +26,20 @@ object StreamingTopTerms {
     */
   def summarize(spark: SparkSession, dir: String,
                 capacity: Int): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stage = java.nio.file.Files.createTempDirectory("graft_stopterms")
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    // the source may be a single parquet file (testdata) or a
-    // Spark-written directory of part files (specs): stage the data
-    // files either way
-    if (java.nio.file.Files.isDirectory(src)) {
-      val s = java.nio.file.Files.list(src)
-      try s.filter(_.toString.endsWith(".parquet")).forEach { f =>
-        java.nio.file.Files.copy(f, stage.resolve(f.getFileName))
-      } finally s.close()
-    } else java.nio.file.Files.copy(src, stage.resolve("documents.parquet"))
-    val stream = spark.readStream.schema(schema).parquet(stage.toString)
-    val agg = stream
-      .select(explode(graft.pipeline.TextAnalysis.tokens(col("text")))
-        .as("term"))
-      .agg(graft.functions.MisraGries.misraGries(col("term"), capacity)
-        .as("s"))
-    EventStream.runToMemory(spark, agg,
+    val src = s"$dir/documents.parquet"
+    val schema = spark.read.parquet(src).schema
+    val stage = Staging.copy(src)
+    val table = try {
+      val stream = spark.readStream.schema(schema).parquet(stage.toString)
+      val agg = stream
+        .select(explode(graft.pipeline.TextAnalysis.tokens(col("text")))
+          .as("term"))
+        .agg(graft.functions.MisraGries.misraGries(col("term"), capacity)
+          .as("s"))
+      EventStream.runToMemory(spark, agg,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      .select(explode(col("s")).as("e"))
+    } finally EventStream.deleteScratch(stage)
+    table.select(explode(col("s")).as("e"))
       .select(col("e.term").as("term"), col("e.weight").as("cnt"))
   }
 }

@@ -40,46 +40,30 @@ object StreamingUpsert {
   def ingest(spark: SparkSession, srcParquet: String, idCol: String,
              vecCol: String, model: IvfModel, indexPath: String,
              nBatches: Int = 4): Unit = {
-    val schema = spark.read.parquet(srcParquet).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, srcParquet, idCol,
-      nBatches, kind = "upsert")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_supsert_ckpt_")
-    val runId = BatchLedger.openRunForIndex(spark, indexPath,
-      stageKey,
-      dataPath = indexPath)
-    // persist-or-verify the quantizer against the layout's own
-    // `_model` (the family's silent-probe-skew guard): corrections
-    // assigned under a different model than the layout's would land
-    // in the wrong cells silently
-    Ivf.ensurePair(spark, model, None, indexPath)
-    // fold-at-open: a PREVIOUS run that crashed before its
-    // close-of-run fold (and was never re-run) left winners at high
-    // seqs — this run's seqs restart at 1 and would LOSE to that
-    // dead history (mergeLatest keeps the max), permanently masking
-    // and then fold-discarding the newer corrections. Folding any
-    // leftover history first re-baselines it to seq 0; when the
-    // previous run closed cleanly this costs one fs.exists plus a
-    // max(seq) column scan (foldVersions' no-history short-circuit),
-    // never a rewrite.
-    Ivf.foldVersions(spark, indexPath, idCol)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StagedIngest.run(spark, srcParquet,
+        StagedIngest.Split(idCol, nBatches), "upsert") { (runKey, _) =>
+      val runId = BatchLedger.openRunForIndex(spark, indexPath, runKey,
+        dataPath = indexPath)
+      // persist-or-verify the quantizer against the layout's own
+      // `_model` (the family's silent-probe-skew guard): corrections
+      // assigned under a different model than the layout's would land
+      // in the wrong cells silently
+      Ivf.ensurePair(spark, model, None, indexPath)
+      // fold-at-open: a PREVIOUS run that crashed before its
+      // close-of-run fold (and was never re-run) left winners at high
+      // seqs — this run's seqs restart at 1 and would LOSE to that
+      // dead history (mergeLatest keeps the max), permanently masking
+      // and then fold-discarding the newer corrections. Folding any
+      // leftover history first re-baselines it to seq 0; when the
+      // previous run closed cleanly this costs one fs.exists plus a
+      // max(seq) column scan (foldVersions' no-history short-circuit),
+      // never a rewrite.
+      Ivf.foldVersions(spark, indexPath, idCol)
+      (batch, batchId) =>
         BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
           processBatch(batch, vecCol, idCol, model, indexPath, batchId + 1,
-            knownNonEmpty = true) // one idRangeSplits file per batch
+            knownNonEmpty = true)
         }
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
     Ivf.foldVersions(spark, indexPath, idCol)
   }

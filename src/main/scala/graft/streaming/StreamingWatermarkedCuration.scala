@@ -132,40 +132,21 @@ object StreamingWatermarkedCuration {
              decorate: DataFrame => DataFrame, blocklist: Seq[String],
              minQuality: Double, delayMillis: Long, indexPath: String,
              outPath: String, latePath: String, urlCol: String = "url",
-             tsCol: String = "ts", nBatches: Int = 3): Unit = {
-    val src = s"$dir/documents.parquet"
-    val schema = spark.read.parquet(src).schema
-    // ONE fused (count, min, max) pass stages the splits AND derives
-    // the ledger run key (was two scans of the source at ingest open)
-    val (stage, stageKey) = Staging.stageWithKey(spark, src, "doc_id",
-      nBatches, kind = "wcur")
-    val ckpt = EventStream.scratchCheckpointDir(spark, "graft_swcur_ckpt_")
-    val runId = BatchLedger.openRun(spark, indexPath,
-      stageKey)
-    // the batch-max watermark store is a sibling per-run marker dir:
-    // GC its dead runs too (same single-writer argument)
-    BatchLedger.pruneRunDir(spark, s"${latePath}__wm", runId)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idempotent under same-batchId replay (see BatchLedger);
+             tsCol: String = "ts", nBatches: Int = 3): Unit =
+    StagedIngest.run(spark, s"$dir/documents.parquet",
+        StagedIngest.Split("doc_id", nBatches), "wcur") { (runKey, _) =>
+      val runId = BatchLedger.openRun(spark, indexPath, runKey)
+      // the batch-max watermark store is a sibling per-run marker dir:
+      // GC its dead runs too (same single-writer argument)
+      BatchLedger.pruneRunDir(spark, s"${latePath}__wm", runId)
+      (batch, batchId) =>
         // the guard covers the late write, the curation, and the
         // watermark marker together
         BatchLedger.once(batch.sparkSession, indexPath, runId, batchId) {
           processBatch(batch.sparkSession, decorate(batch), "text",
             "doc_id", urlCol, tsCol, blocklist, minQuality, delayMillis,
             runId, batchId, indexPath, outPath, latePath,
-            knownNonEmpty = true) // one idRangeSplits file, decorated
+            knownNonEmpty = true)
         }
-      }
-      .start()
-    try q.processAllAvailable() finally {
-      q.stop()
-      EventStream.deleteScratch(ckpt)
-      EventStream.deleteScratch(stage)
     }
-  }
 }

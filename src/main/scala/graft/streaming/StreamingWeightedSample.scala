@@ -26,28 +26,24 @@ object StreamingWeightedSample {
     */
   def sample(spark: SparkSession, dir: String, k: Int,
              seed: Long): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stage = java.nio.file.Files.createTempDirectory("graft_swsample")
-    val src = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    if (java.nio.file.Files.isDirectory(src)) {
-      val s = java.nio.file.Files.list(src)
-      try s.filter(_.toString.endsWith(".parquet")).forEach { f =>
-        java.nio.file.Files.copy(f, stage.resolve(f.getFileName))
-      } finally s.close()
-    } else java.nio.file.Files.copy(src, stage.resolve("documents.parquet"))
-    // one file per trigger: a multi-file stage genuinely exercises
-    // the between-batch state checkpoint, not one big batch
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stage.toString)
-    val keyed = stream.select(col("doc_id").as("doc"),
-        graft.pipeline.Sample.raceKey(col("doc_id"),
-          graft.pipeline.TextAnalysis.tokenCount(col("text")), seed)
-          .as("key_fp"))
-    val agg = keyed.agg(graft.functions.TopKByScore.topKBy(
-      -col("key_fp").cast(DoubleType), col("doc"), k).as("top"))
-    EventStream.runToMemory(spark, agg,
+    val src = s"$dir/documents.parquet"
+    val schema = spark.read.parquet(src).schema
+    val stage = Staging.copy(src)
+    val table = try {
+      // one file per trigger: a multi-file stage genuinely exercises
+      // the between-batch state checkpoint, not one big batch
+      val stream = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(stage.toString)
+      val keyed = stream.select(col("doc_id").as("doc"),
+          graft.pipeline.Sample.raceKey(col("doc_id"),
+            graft.pipeline.TextAnalysis.tokenCount(col("text")), seed)
+            .as("key_fp"))
+      val agg = keyed.agg(graft.functions.TopKByScore.topKBy(
+        -col("key_fp").cast(DoubleType), col("doc"), k).as("top"))
+      EventStream.runToMemory(spark, agg,
         org.apache.spark.sql.streaming.OutputMode.Complete())
-      .select(posexplode(col("top")).as(Seq("pos", "hit")))
+    } finally EventStream.deleteScratch(stage)
+    table.select(posexplode(col("top")).as(Seq("pos", "hit")))
       .select(col("hit.id").as("doc"),
         (-col("hit.score")).cast(LongType).as("key_fp"),
         (col("pos") + 1).cast(IntegerType).as("rk"))
