@@ -60,13 +60,12 @@ object Bench {
           .select("vec_id", "embedding").where("vec_id < 2048")
         val m = graft.pipeline.Ivf.train(warm, "embedding", "vec_id",
           nlist = 4, iters = 1)
-        val codes = graft.pipeline.Ivf.assign(warm, "embedding", m)
-          .withColumn("codes", graft.functions.VectorFunctions
-            .signBits(org.apache.spark.sql.functions.col("embedding")))
-          .drop("embedding")
+        val codes = graft.pipeline.Ivf.Codec.Bq.codes(
+          graft.pipeline.Ivf.assign(warm, "embedding", m), "embedding", m)
         val wq = warm.where("vec_id < 2")
-        val sr = graft.pipeline.Ivf.searchBqIndex(codes, warm, wq,
-          "embedding", "vec_id", m, k = 5, nprobe = 4, oversample = 4)
+        val sr = graft.pipeline.Ivf.searchCodes(codes, warm, wq,
+          "embedding", "vec_id", graft.pipeline.Ivf.Codec.Bq, m, k = 5,
+          nprobe = 4, oversample = 4)
         // ... and the brute-force/recall harness every ann row shares
         // (the profile read each stage 2-4x slower on its first
         // execution: train 0.51->0.14, brute 1.40->0.32, bqsearch

@@ -653,8 +653,8 @@ object Ivf {
     * prune at the directory level (`PartitionFilters` in the scan), so
     * a search touches ~nprobe/nlist of the files. This is the on-disk
     * index layout for the 100 TB batch-serving path.
-    */
-  /** `payloadCols` adds SECONDARY partition keys below cluster= —
+    *
+    * `payloadCols` adds SECONDARY partition keys below cluster= —
     * the payload-index analog for filter-inside-search at scale: an
     * equality/In filter over a partitioned payload column prunes
     * whole directories out of the probe scan (PartitionFilters, no
@@ -759,16 +759,11 @@ object Ivf {
                            path: String): Unit = {
     val spark = df.sparkSession
     graft.core.DirSwap.recoverAt(spark, path)
-    val payload = payloadColsOf(spark, path)
-    require(payload.nonEmpty,
+    val parts = appendPartitions(df, path)
+    require(parts.size > 1,
       s"$path carries no payload partition dirs — use appendToIndex")
-    val missing = payload.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"increment is missing the layout's payload column(s) " +
-        s"${missing.mkString(", ")} — every row must land in a " +
-        "payload partition dir")
     // this is the FLOAT append: a quantized payload layout
-    // (writeIndexInt8 also takes payloadCols) holds codes: binary
+    // (writeIndexCodes also takes payloadCols) holds codes: binary
     // with vecCol dropped — appending raw float postings into it
     // would mix schemas and serve null codes silently, the exact
     // class the codec-marker family refuses everywhere else
@@ -778,68 +773,24 @@ object Ivf {
         readCodec(spark, path).isEmpty,
       s"$path does not hold float '$vecCol' postings (codec-encoded " +
         "or foreign layout) — appendToIndexPayload is the float path; " +
-        "codes layouts take appendToIndexPayloadQuantized")
-    graft.core.KeyedWrite.spread(assign(df, vecCol, model),
-        "cluster" +: payload)
-      .write.mode(SaveMode.Append)
-      .partitionBy("cluster" +: payload: _*).parquet(path)
+        "codes layouts take appendToIndexCodes")
+    graft.core.KeyedWrite.spread(assign(df, vecCol, model), parts)
+      .write.mode(SaveMode.Append).partitionBy(parts: _*).parquet(path)
   }
 
-  /** [[appendToIndexPayload]]'s QUANTIZED twin — the follow-up its
-    * codec guard points at: the increment is encoded through the
-    * LAYOUT'S OWN identity before landing. The `_codec` marker picks
-    * the encoder — the same pure per-row encodes the writeIndex*
-    * family stamps it for (int8 / bq are training-free; pq / pqr
-    * load the layout's persisted codebooks) — and [[ensurePair]]
-    * save-or-verifies the coarse quantizer (plus codebooks where the
-    * codec has them) against the layout root, so codes encoded under
-    * a foreign model can never land. Encoding and assignment are
-    * pure functions of (vector, models), so the grown layout serves
-    * row-identically to a one-shot write over the union
-    * (gate-pinned: ivf_topk_payload_appended_int8). The increment
-    * appends under the discovered full `cluster +: payload` depth
-    * like the float path.
+  /** An append's partition columns: `cluster` plus the layout's own
+    * payload keys ([[payloadColsOf]]), which the increment must all
+    * carry — every row lands in a partition dir its values name, at
+    * the layout's own depth.
     */
-  def appendToIndexPayloadQuantized(df: DataFrame, vecCol: String,
-                                    model: IvfModel, path: String): Unit = {
-    val spark = df.sparkSession
-    graft.core.DirSwap.recoverAt(spark, path)
-    val payload = payloadColsOf(spark, path)
-    require(payload.nonEmpty,
-      s"$path carries no payload partition dirs — plain codes layouts " +
-        "take appendToIndexInt8/Bq/Pq*")
+  private def appendPartitions(df: DataFrame, path: String): Seq[String] = {
+    val payload = payloadColsOf(df.sparkSession, path)
     val missing = payload.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"increment is missing the layout's payload column(s) " +
         s"${missing.mkString(", ")} — every row must land in a " +
         "payload partition dir")
-    val codec = readCodec(spark, path).getOrElse(sys.error(
-      s"$path carries no _codec marker — float payload layouts take " +
-        "appendToIndexPayload"))
-    val assigned = assign(df, vecCol, model)
-    val encoded = codec match {
-      case "int8" =>
-        ensurePair(spark, model, None, path)
-        assigned.withColumn("codes", Similarity.int8Codes(col(vecCol)))
-      case "bq" =>
-        ensurePair(spark, model, None, path)
-        assigned.withColumn("codes",
-          graft.functions.VectorFunctions.signBits(col(vecCol)))
-      case "pq" =>
-        val pq = Pq.loadModel(spark, pqPath(path))
-        ensurePair(spark, model, Some(pq), path)
-        assigned.withColumn("codes", Pq.encode(col(vecCol), pq))
-      case "pqr" =>
-        val pq = Pq.loadModel(spark, pqPath(path))
-        ensurePair(spark, model, Some(pq), path)
-        assigned.withColumn("codes",
-          Pq.encode(residualCol(col(vecCol), col("cluster"), model), pq))
-      case other => sys.error(
-        s"$path carries unknown codec '$other' — refusing to encode")
-    }
-    graft.core.KeyedWrite.spread(encoded.drop(vecCol), "cluster" +: payload)
-      .write.mode(SaveMode.Append)
-      .partitionBy("cluster" +: payload: _*).parquet(path)
+    "cluster" +: payload
   }
 
   /** Rewrite an append-grown index into one file per cluster dir —
@@ -1242,8 +1193,8 @@ object Ivf {
   }
 
   /** Canonical location of a codes layout's CODEC marker: a `_codec`
-    * dir holding ONE empty file named for the encoding ("int8",
-    * "bq", "pq", "pqr") — an FS-read witness (no Spark job, no
+    * dir holding ONE empty file named for the encoding
+    * ([[Codec.marker]]) — an FS-read witness (no Spark job, no
     * parquet) closing the one divergence the footer-type check
     * cannot see: int8 and BQ layouts expose the identical
     * `codes: binary` column with no other sidecar, so a segment mix
@@ -1268,22 +1219,22 @@ object Ivf {
 
   /** Stamp-or-VERIFY the codec marker (the [[ensurePair]] shape):
     * an append under a DIFFERENT codec than the layout's is a loud
-    * error — without this, `appendToIndexBq` onto an int8 layout
+    * error — without this, a BQ append onto an int8 layout
     * interleaves sign-bit bytes into int8 postings and every later
     * serve scores garbage silently (both are `codes: binary` to
-    * every other check). `fresh = true` (the writeIndex* family,
-    * which just created the layout) always stamps; an APPEND
+    * every other check). `fresh = true` ([[writeIndexCodes]], which
+    * just created the layout) always stamps; an APPEND
     * (`fresh = false`) refuses an unmarked NON-EMPTY layout instead
     * of guessing — stamping the appender's codec onto unmarked
     * foreign bytes would both corrupt the layout and mislabel it
     * permanently (the correct writer would be refused from then on).
     */
   private def stampCodec(spark: SparkSession, path: String,
-                         codec: String, fresh: Boolean = false): Unit =
+                         codec: Codec, fresh: Boolean = false): Unit =
     readCodec(spark, path) match {
       case Some(prev) =>
-        require(prev == codec,
-          s"$path holds $prev-coded postings — appending $codec codes " +
+        require(prev == codec.marker,
+          s"$path holds $prev-coded postings — appending ${codec.marker} codes " +
             "would interleave mutually meaningless bytes; rebuild the " +
             "layout or use the matching writer")
       case None =>
@@ -1292,24 +1243,26 @@ object Ivf {
         require(fresh ||
             !layoutHasData(fs, new org.apache.hadoop.fs.Path(path)),
           s"$path holds codes with NO _codec marker (a pre-marker or " +
-            s"foreign layout) — refusing to assume they are $codec; " +
-            "rebuild with the matching writeIndex* writer, which stamps")
+            s"foreign layout) — refusing to assume they are ${codec.marker}; " +
+            "rebuild with writeIndexCodes, which stamps")
         fs.mkdirs(d)
-        fs.create(new org.apache.hadoop.fs.Path(d, codec), true).close()
+        fs.create(new org.apache.hadoop.fs.Path(d, codec.marker), true).close()
     }
 
   /** The layout's SECONDARY (payload) partition columns, discovered
     * from the directory structure itself (one branch descent below
     * the first cluster= dir — partition layouts are uniform by
-    * construction). Nil for plain layouts. This is what lets
-    * [[foldTombstones]] preserve a payload-partitioned layout's
+    * construction). Nil for plain and absent layouts. This is what
+    * lets [[foldTombstones]] preserve a payload-partitioned layout's
     * directory pruning through the fold instead of silently
-    * flattening it back into data files.
+    * flattening it back into data files, and [[appendToIndexCodes]]
+    * append at the layout's own depth.
     */
   private def payloadColsOf(spark: SparkSession,
                             path: String): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return Nil
     @scala.annotation.tailrec
     def levels(dir: org.apache.hadoop.fs.Path,
                acc: List[String]): List[String] =
@@ -1568,8 +1521,8 @@ object Ivf {
     * [[trainHierarchicalFromSample]] so an index sized with a
     * two-level quantizer keeps its O(√nlist) assign/search cost
     * class instead of silently degrading to a flat scan.
-    */
-  /** `distributed = true` retrains with [[trainDistributed]] (the
+    *
+    * `distributed = true` retrains with [[trainDistributed]] (the
     * full-corpus fixed-point Lloyd's) instead of the bounded-sample
     * fold — the scale knob for a drifted layout whose distribution a
     * sample under-represents; mutually exclusive with `hierarchical`
@@ -2059,60 +2012,208 @@ object Ivf {
     fs.delete(new org.apache.hadoop.fs.Path(s"${srcPath}__ledger"), true)
   }
 
-  /** Quantized on-disk index: the vector column is replaced by its
-    * int8 codes (BinaryType), quartering index bytes — the layout
-    * [[searchInt8]] serves from at scale (same cluster partitioning,
-    * same PartitionFilters pruning).
+  /** A dense CODES layout's encoding — the one thing that varies
+    * across the quantized tiers, so it is a value, not a method
+    * family (faiss keeps one index interface with the code type as
+    * its parameter: Jégou et al., "Product quantization for nearest
+    * neighbor search", TPAMI 2011; Johnson et al., "Billion-scale
+    * similarity search with GPUs", 2019). Each codec carries its
+    * `_codec` marker, its per-posting encoder, its query-side columns
+    * and its candidate score; the write, the append, the probe, the
+    * shortlist and the exact rescore are ONE path each
+    * ([[writeIndexCodes]], [[appendToIndexCodes]], [[searchCodes]]).
+    * Bytes per posting, coarsest last: int8 d (4× under float32), PQ
+    * and PQR m, BQ ceil(d/8). PQ and PQR carry trained codebooks;
+    * int8 and BQ encode training-free.
     */
-  /** `payloadCols`: secondary partition keys for directory-level
-    * filter pruning — the [[writeIndex]] payload-index contract on
-    * the quantized layout.
+  sealed abstract class Codec(val marker: String) {
+    /** The code of posting `vec` in cell `cluster`. */
+    def encode(vec: Column, cluster: Column, model: IvfModel): Column
+
+    /** Codebooks persisted beside the codes (`_pq`), if the codec
+      * has them.
+      */
+    def codebooks: Option[Pq.PqModel] = None
+
+    /** Does the candidate score only pick the k·oversample shortlist
+      * for the exact cosine rescore (false: the score IS the result's
+      * `sim`)?
+      */
+    private[pipeline] def rescores: Boolean = true
+
+    /** Query-side columns, computed once per query before the probe
+      * explodes it to its cells.
+      */
+    private[pipeline] def queryCols(qv: Column): Seq[Column]
+
+    /** Query-side columns per (query, probed cell). */
+    private[pipeline] def cellCols(qv: Column, cluster: Column,
+                                   model: IvfModel): Seq[Column] = Nil
+
+    /** Candidate score of a posting's `codes` against the query
+      * columns.
+      */
+    private[pipeline] def score(codes: Column): Column
+
+    /** The score's nearest-first sort order. */
+    private[pipeline] def nearestFirst(score: Column): Column = score.desc
+
+    /** `postings` (cluster, `vecCol`, …) plus their `codes`. */
+    def codes(postings: DataFrame, vecCol: String,
+              model: IvfModel): DataFrame =
+      postings.withColumn("codes",
+        encode(col(vecCol), col("cluster"), model))
+  }
+
+  object Codec {
+    import graft.functions.VectorFunctions.{bitHamming, int8CosineSim, signBits}
+    import graft.pipeline.{Pq => P}
+
+    /** Symmetric int8 codes scored by the codegen'd exact-integer
+      * cosine ([[graft.functions.Int8CosineSim]]) — final, no rescore.
+      */
+    case object Int8 extends Codec("int8") {
+      def encode(vec: Column, cluster: Column, model: IvfModel): Column =
+        Similarity.int8Codes(vec)
+      override private[pipeline] def rescores: Boolean = false
+      private[pipeline] def queryCols(qv: Column) =
+        Seq(Similarity.int8Codes(qv).as("qc"))
+      private[pipeline] def score(codes: Column) = int8CosineSim(codes, col("qc"))
+    }
+
+    /** Sign bits, shortlisted by symmetric Hamming distance (one
+      * XOR+popcount per 64 dims; the query binarizes too). No
+      * codebook pair to manage, so the layout can never drift from a
+      * stale codebook.
+      */
+    case object Bq extends Codec("bq") {
+      def encode(vec: Column, cluster: Column, model: IvfModel): Column =
+        signBits(vec)
+      private[pipeline] def queryCols(qv: Column) = Seq(signBits(qv).as("qc"))
+      private[pipeline] def score(codes: Column) = bitHamming(codes, col("qc"))
+      override private[pipeline] def nearestFirst(score: Column) = score.asc
+    }
+
+    /** The PQ codecs' shared query side: one m×ksub ADC table per
+      * query, m lookups per candidate instead of d multiplies — the
+      * scorer of [[graft.pipeline.Pq.pqTopK]].
+      */
+    sealed abstract class PqCodes(marker: String, pq: P.PqModel)
+        extends Codec(marker) {
+      override def codebooks: Option[P.PqModel] = Some(pq)
+      private[pipeline] def queryCols(qv: Column) = Seq(P.lut(qv, pq).as("qt"))
+      private[pipeline] def score(codes: Column) =
+        P.adcDot(codes, col("qt"), pq.ksub)
+    }
+
+    /** Product-quantization codes of the raw vector (faiss IVFPQ). */
+    final case class Pq(pq: P.PqModel) extends PqCodes("pq", pq) {
+      def encode(vec: Column, cluster: Column, model: IvfModel): Column =
+        P.encode(vec, pq)
+    }
+
+    /** PQ codes of each vector's RESIDUAL to its cell's centroid
+      * (IVF-ADC, Jégou et al. §III; train with [[trainPqResidual]]).
+      * Under the inner-product metric the ADC table stays
+      * cell-independent and the cell enters only through q·centroid,
+      * computed once per (query, probed cell) on the query side
+      * ([[centroidDotCol]]), so a candidate costs m lookups and one
+      * add.
+      */
+    final case class PqResidual(pq: P.PqModel) extends PqCodes("pqr", pq) {
+      def encode(vec: Column, cluster: Column, model: IvfModel): Column =
+        P.encode(residualCol(vec, cluster, model), pq)
+      override private[pipeline] def cellCols(qv: Column, cluster: Column,
+                                              model: IvfModel) =
+        Seq(centroidDotCol(qv, cluster, model).as("cdot"))
+      override private[pipeline] def score(codes: Column) =
+        col("cdot") + super.score(codes)
+    }
+
+    /** The codec a `_codec` marker names; `pq` is the layout's
+      * codebooks, read only for the PQ codecs.
+      */
+    def fromMarker(marker: String, pq: => P.PqModel): Codec =
+      marker match {
+        case "int8" => Int8
+        case "bq" => Bq
+        case "pq" => Pq(pq)
+        case "pqr" => PqResidual(pq)
+        case other => throw new IllegalArgumentException(
+          s"unknown codes codec '$other' — refusing to decode")
+      }
+
+    /** The codec the layout at `path` was written with, its codebooks
+      * loaded from the layout's own `_pq` — the restart path that
+      * serves from what the layout persisted.
+      */
+    def of(spark: SparkSession, path: String): Codec =
+      fromMarker(readCodec(spark, path).getOrElse(
+          throw new IllegalArgumentException(
+            s"$path carries no _codec marker — not a codes layout")),
+        loadPq(spark, path))
+  }
+
+  /** Persist a CODES layout: the cluster-assigned `postings` with
+    * `vecCol` replaced by its `codec` codes, partitioned like
+    * [[writeIndex]] (same PartitionFilters pruning; `payloadCols`
+    * are the same secondary keys for directory-level filter
+    * pruning). Sidecars follow the data in one order for every
+    * codec: `_model`, then `_pq` where the codec has codebooks, then
+    * the `_codec` stamp LAST, so a stamped layout always holds every
+    * model it serves with. PQ and PQR codes are meaningless without
+    * the coarse quantizer, so those writes require `model`; int8 and
+    * BQ encode without it, but persisting it turns a later append's
+    * first-contact SAVE into a VERIFY ([[ensurePair]]) — every writer
+    * that holds the model should pass it.
     */
-  def writeIndexInt8(postings: DataFrame, vecCol: String, path: String,
-                     payloadCols: Seq[String] = Nil,
-                     model: Option[IvfModel] = None): Unit = {
+  def writeIndexCodes(postings: DataFrame, vecCol: String, codec: Codec,
+                      path: String, payloadCols: Seq[String] = Nil,
+                      model: Option[IvfModel] = None): Unit = {
+    require(model.isDefined || codec.codebooks.isEmpty,
+      s"${codec.marker} codes need their coarse quantizer: pass model")
+    val spark = postings.sparkSession
+    // int8 and BQ encodes never read the model
     graft.core.KeyedWrite.spread(
-        postings
-          .withColumn("codes", Similarity.int8Codes(col(vecCol)))
-          .drop(vecCol),
+        codec.codes(postings, vecCol, model.orNull).drop(vecCol),
         "cluster" +: payloadCols)
       .write.mode("overwrite")
       .partitionBy("cluster" +: payloadCols: _*).parquet(path)
+    model.foreach(m => saveModel(spark, m, modelPath(path)))
+    codec.codebooks.foreach(p => Pq.saveModel(spark, p, pqPath(path)))
     // the overwrite wiped any prior marker with the layout it marked
-    stampCodec(postings.sparkSession, path, "int8", fresh = true)
-    // persist the coarse quantizer when the writer has it (the
-    // writeIndexPq contract, made optional here because int8 encoding
-    // itself is training-free): without a persisted `_model`, a later
-    // [[appendToIndexPayloadQuantized]]'s ensurePair SAVES the
-    // caller's model on first contact instead of VERIFYING it —
-    // unable to detect that the layout's existing codes were assigned
-    // under a different coarse quantizer, the silent-garbage hazard
-    // it exists to refuse. Every writer that holds the model should
-    // pass it.
-    model.foreach(m => saveModel(postings.sparkSession, m, modelPath(path)))
+    stampCodec(spark, path, codec, fresh = true)
   }
 
-  /** Incremental maintenance for the QUANTIZED serving layout:
-    * assign the new vectors under the frozen coarse quantizer,
-    * int8-encode, dynamic-partition append — encoding is a pure
-    * function of (vector, model), so the grown codes layout is
-    * row-identical to a one-shot [[writeIndexInt8]] over the union
-    * (the ivf_topk_int8 golden pins the incremental row). "Train
-    * rarely, append forever", extended to the layout that actually
-    * serves at scale — without this, absorbing a daily batch meant
-    * rebuilding the whole codes layout from the float postings.
+  /** Incremental maintenance for a CODES layout — "train rarely,
+    * append forever" on the layout that serves at scale: assign the
+    * increment under the frozen coarse quantizer, encode it through
+    * `codec`, dynamic-partition append. Assignment and encoding are
+    * pure per-row functions of (vector, models), so the grown layout
+    * is row-identical to a one-shot [[writeIndexCodes]] over the
+    * union (the incremental rows are oracled against the one-shot
+    * goldens). The partition depth is the layout's own
+    * ([[payloadColsOf]]): plain layouts append under cluster=,
+    * payload layouts under the full `cluster +: payload` depth, and
+    * the increment must then carry every payload column. Every
+    * append passes two witnesses first: [[stampCodec]] refuses a
+    * layout holding another codec (or unmarked bytes), then
+    * [[ensurePair]] verifies the coarse quantizer and codebooks
+    * against the layout's persisted ones — saving them on first
+    * contact when the writer did not — so codes encoded under a
+    * foreign model never land.
     */
-  def appendToIndexInt8(df: DataFrame, vecCol: String, model: IvfModel,
-                        path: String): Unit = {
-    graft.core.DirSwap.recoverAt(df.sparkSession, path) // see appendToIndex
-    guardNotPayloadPartitioned(df.sparkSession, path, "appendToIndexInt8")
-    stampCodec(df.sparkSession, path, "int8") // refuse a cross-codec append
+  def appendToIndexCodes(df: DataFrame, vecCol: String, codec: Codec,
+                         model: IvfModel, path: String): Unit = {
+    val spark = df.sparkSession
+    graft.core.DirSwap.recoverAt(spark, path) // see appendToIndex
+    val parts = appendPartitions(df, path)
+    stampCodec(spark, path, codec)
+    ensurePair(spark, model, codec.codebooks, path)
     graft.core.KeyedWrite.spread(
-        assign(df, vecCol, model)
-          .withColumn("codes", Similarity.int8Codes(col(vecCol)))
-          .drop(vecCol),
-        Seq("cluster"))
-      .write.mode(SaveMode.Append).partitionBy("cluster").parquet(path)
+        codec.codes(assign(df, vecCol, model), vecCol, model).drop(vecCol),
+        parts)
+      .write.mode(SaveMode.Append).partitionBy(parts: _*).parquet(path)
   }
 
   /** Batched ANN search: probe the nprobe nearest lists per query via
@@ -2132,80 +2233,6 @@ object Ivf {
       cosineSimD(col("nv"), col("qv")).as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
     scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-  }
-
-  /** Quantized IVF search — the billion-scale composition: cluster
-    * pruning bounds WHICH postings are touched, int8 codes bound the
-    * BYTES per touched posting (4× under float32; at scale the index
-    * stores codes, derived here from the vector column), and the
-    * scorer is the codegen'd exact-integer [[graft.functions.Int8CosineSim]]
-    * kernel. Probe/rank plan identical to [[search]].
-    */
-  def searchInt8(postings: DataFrame, queries: DataFrame, vecCol: String,
-                 idCol: String, model: IvfModel, k: Int,
-                 nprobe: Int = 4): DataFrame =
-    searchCodes(
-      postings.select(col("cluster"), col(idCol),
-        Similarity.int8Codes(col(vecCol)).as("codes")),
-      queries, vecCol, idCol, model, k, nprobe)
-
-  /** IVF-PQ search — the standard billion-scale index composition
-    * (faiss IVFPQ): the coarse quantizer bounds WHICH postings a
-    * query touches (~nprobe/nlist of the corpus, partition-pruned on
-    * disk), product-quantization codes bound the BYTES per touched
-    * posting (m bytes, 32× under float32) and the CPU per candidate
-    * (m ADC table lookups instead of dim multiplies), and the
-    * oversampled survivors rescore exactly against the full vectors.
-    * Probe plan identical to [[search]]; scorer/rescore identical to
-    * [[graft.pipeline.Pq.pqTopK]] — including its METRIC CONTRACT
-    * (IP shortlist, cosine rescore: L2-normalize first for cosine
-    * recall guarantees on un-normalized corpora).
-    */
-  def searchPq(postings: DataFrame, queries: DataFrame, vecCol: String,
-               idCol: String, model: IvfModel, pq: Pq.PqModel, k: Int,
-               nprobe: Int = 4, oversample: Int = 4): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSimD
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        Pq.lut(col(vecCol), pq).as("qt"))
-      .withColumn("cluster", explode(nearestCol(col("qv"), model, nprobe)))
-    val c = postings.select(col("cluster"), col(idCol).as("nid"),
-      col(vecCol).as("nv"), Pq.encode(col(vecCol), pq).as("nc"))
-    val cand = c.join(broadcast(q), Seq("cluster"))
-      .where(col("nid") =!= col("qid"))
-      .dropDuplicates("qid", "nid")
-    val stage1 = cand.select(col("qid"), col("nid"), col("nv"), col("qv"),
-      Pq.adcDot(col("nc"), col("qt"), pq.ksub).as("sima"))
-    val w1 = Window.partitionBy(col("qid")).orderBy(col("sima").desc, col("nid").asc)
-    val short = stage1.withColumn("rk1", row_number().over(w1))
-      .where(col("rk1") <= k * oversample)
-    val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    short.select(col("qid"), col("nid"),
-        cosineSimD(col("nv"), col("qv")).as("sim"))
-      .withColumn("rk", row_number().over(w2)).where(col("rk") <= k)
-  }
-
-  /** Quantized PQ on-disk index: cluster-partitioned (PartitionFilters
-    * pruning at probe time) with the vector column replaced by its
-    * m-byte PQ codes — the layout [[searchPqIndex]] serves from.
-    */
-  def writeIndexPq(postings: DataFrame, vecCol: String, pq: Pq.PqModel,
-                   model: IvfModel, path: String,
-                   payloadCols: Seq[String] = Nil): Unit = {
-    graft.core.KeyedWrite.spread(
-        postings
-          .withColumn("codes", Pq.encode(col(vecCol), pq))
-          .drop(vecCol),
-        "cluster" +: payloadCols)
-      .write.mode("overwrite")
-      .partitionBy("cluster" +: payloadCols: _*).parquet(path)
-    // codes are meaningless without their models: persist the full
-    // pair — coarse quantizer (probing) AND codebooks (decoding) —
-    // so a restarted server recovers everything from the root, same
-    // contract as the residual writer (carried across swaps; see
-    // modelPath/pqPath)
-    saveModel(postings.sparkSession, model, modelPath(path))
-    Pq.saveModel(postings.sparkSession, pq, pqPath(path))
-    stampCodec(postings.sparkSession, path, "pq", fresh = true)
   }
 
   /** Canonical location of a codes layout's persisted codebooks —
@@ -2280,70 +2307,6 @@ object Ivf {
   def loadPq(spark: SparkSession, indexPath: String): Pq.PqModel =
     Pq.loadModel(spark, pqPath(indexPath))
 
-  /** [[appendToIndexInt8]]'s twin for the raw-vector PQ codes layout
-    * — frozen (coarse, codebook) pair, grown ≡ one-shot.
-    */
-  def appendToIndexPq(df: DataFrame, vecCol: String, pq: Pq.PqModel,
-                      model: IvfModel, path: String): Unit = {
-    graft.core.DirSwap.recoverAt(df.sparkSession, path) // see appendToIndex
-    guardNotPayloadPartitioned(df.sparkSession, path, "appendToIndexPq")
-    stampCodec(df.sparkSession, path, "pq") // refuse a cross-codec append
-    // verify the pair against the layout's persisted models (pure
-    // verification: writeIndexPq always persists them) — an append
-    // encoded under drifted codebooks would serve garbage silently
-    ensurePair(df.sparkSession, model, Some(pq), path)
-    graft.core.KeyedWrite.spread(
-        assign(df, vecCol, model)
-          .withColumn("codes", Pq.encode(col(vecCol), pq))
-          .drop(vecCol),
-        Seq("cluster"))
-      .write.mode(SaveMode.Append).partitionBy("cluster").parquet(path)
-  }
-
-  /** IVF-PQ serving from the on-disk codes index — the full 100 TB
-    * shape: the probe touches only matching cluster partitions and
-    * reads m BYTES per posting (no float vector anywhere in the
-    * candidate path), and only the ≤ k·oversample ADC survivors
-    * back-join to the full-vector table for the exact rescore (the
-    * survivors broadcast — queries × k × oversample rows — so the
-    * rescore is a broadcast semi-probe of the vector table, never a
-    * shuffle of it). Results identical to [[searchPq]] by
-    * construction.
-    */
-  def searchPqIndex(index: DataFrame, vectors: DataFrame,
-                    queries: DataFrame, vecCol: String, idCol: String,
-                    model: IvfModel, pq: Pq.PqModel, k: Int,
-                    nprobe: Int = 4, oversample: Int = 4): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSimD
-    val q = queriesWithLut(queries, vecCol, idCol, model, pq, nprobe)
-    val c = index.select(col("cluster"), col(idCol).as("nid"), col("codes"))
-    val cand = c.join(broadcast(q.drop("qv")), Seq("cluster"))
-      .where(col("nid") =!= col("qid"))
-      .dropDuplicates("qid", "nid")
-    val w1 = Window.partitionBy(col("qid")).orderBy(col("sima").desc, col("nid").asc)
-    val short = cand
-      .select(col("qid"), col("nid"),
-        Pq.adcDot(col("codes"), col("qt"), pq.ksub).as("sima"))
-      .withColumn("rk1", row_number().over(w1))
-      .where(col("rk1") <= k * oversample)
-      .select(col("qid"), col("nid"))
-    val nv = vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val qv = q.select(col("qid"), col("qv")).dropDuplicates("qid")
-    val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    nv.join(broadcast(short), Seq("nid"))
-      .join(broadcast(qv), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        cosineSimD(col("nv"), col("qv")).as("sim"))
-      .withColumn("rk", row_number().over(w2)).where(col("rk") <= k)
-  }
-
-  private def queriesWithLut(queries: DataFrame, vecCol: String,
-                             idCol: String, model: IvfModel,
-                             pq: Pq.PqModel, nprobe: Int): DataFrame =
-    queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        Pq.lut(col(vecCol), pq).as("qt"))
-      .withColumn("cluster", explode(nearestCol(col("qv"), model, nprobe)))
-
   /** Residual of `vec` against `cluster`'s centroid (codegen'd
     * [[IvfResidual]]) — the IVF-ADC encoding input.
     */
@@ -2391,125 +2354,6 @@ object Ivf {
       (id, r)
     }
     Pq.trainFromSample(resid, m, ksub, iters, seed)
-  }
-
-  /** Residual-coded on-disk index: cluster-partitioned like
-    * [[writeIndexPq]], but the m-byte codes quantize each vector's
-    * RESIDUAL to its assigned centroid — the faiss IVF-PQ layout.
-    * Serve with [[searchPqResidualIndex]].
-    */
-  def writeIndexPqResidual(postings: DataFrame, vecCol: String,
-                           pq: Pq.PqModel, model: IvfModel,
-                           path: String,
-                           payloadCols: Seq[String] = Nil): Unit = {
-    graft.core.KeyedWrite.spread(
-        postings
-          .withColumn("codes",
-            Pq.encode(residualCol(col(vecCol), col("cluster"), model), pq))
-          .drop(vecCol),
-        "cluster" +: payloadCols)
-      .write.mode("overwrite")
-      .partitionBy("cluster" +: payloadCols: _*).parquet(path)
-    // residual codes depend on BOTH models: persist the full triple
-    // (codes, coarse quantizer, codebooks) so a restarted server
-    // recovers everything from the root ([[loadModel]]/[[loadPq]])
-    saveModel(postings.sparkSession, model, modelPath(path))
-    Pq.saveModel(postings.sparkSession, pq, pqPath(path))
-    stampCodec(postings.sparkSession, path, "pqr", fresh = true)
-  }
-
-  /** [[appendToIndexInt8]]'s twin for the RESIDUAL codes layout —
-    * assign under the frozen coarse quantizer, encode the residual
-    * under the frozen codebooks, append; grown ≡ one-shot.
-    */
-  def appendToIndexPqResidual(df: DataFrame, vecCol: String,
-                              pq: Pq.PqModel, model: IvfModel,
-                              path: String): Unit = {
-    graft.core.DirSwap.recoverAt(df.sparkSession, path) // see appendToIndex
-    guardNotPayloadPartitioned(df.sparkSession, path,
-      "appendToIndexPqResidual")
-    stampCodec(df.sparkSession, path, "pqr") // refuse a cross-codec append
-    // verify the pair against the layout's persisted models (pure
-    // verification: writeIndexPqResidual always persists the triple)
-    ensurePair(df.sparkSession, model, Some(pq), path)
-    graft.core.KeyedWrite.spread(
-        assign(df, vecCol, model)
-          .withColumn("codes",
-            Pq.encode(residualCol(col(vecCol), col("cluster"), model), pq))
-          .drop(vecCol),
-        Seq("cluster"))
-      .write.mode(SaveMode.Append).partitionBy("cluster").parquet(path)
-  }
-
-  /** IVF-PQ search with RESIDUAL codes (IVF-ADC): candidates score as
-    * q·centroid(cell) + adc(q, residual codes) — under the
-    * inner-product metric the ADC tables are cell-independent (one
-    * m×ksub LUT per query, exactly [[Pq.lut]] against the residual
-    * codebooks) and the cell enters only through the additive
-    * q·centroid term, computed ONCE per (query, probed cell) on the
-    * query side before the join ([[centroidDotCol]]) — per-candidate
-    * cost stays m table lookups + one add. Oversampled survivors
-    * rescore exactly; same METRIC CONTRACT as [[searchPq]].
-    */
-  def searchPqResidual(postings: DataFrame, queries: DataFrame,
-                       vecCol: String, idCol: String, model: IvfModel,
-                       pq: Pq.PqModel, k: Int, nprobe: Int = 4,
-                       oversample: Int = 4): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSimD
-    val q = queriesWithLut(queries, vecCol, idCol, model, pq, nprobe)
-      .withColumn("cdot", centroidDotCol(col("qv"), col("cluster"), model))
-    val c = postings.select(col("cluster"), col(idCol).as("nid"),
-      col(vecCol).as("nv"),
-      Pq.encode(residualCol(col(vecCol), col("cluster"), model), pq).as("nc"))
-    val cand = c.join(broadcast(q), Seq("cluster"))
-      .where(col("nid") =!= col("qid"))
-      .dropDuplicates("qid", "nid")
-    val stage1 = cand.select(col("qid"), col("nid"), col("nv"), col("qv"),
-      (col("cdot") + Pq.adcDot(col("nc"), col("qt"), pq.ksub)).as("sima"))
-    val w1 = Window.partitionBy(col("qid")).orderBy(col("sima").desc, col("nid").asc)
-    val short = stage1.withColumn("rk1", row_number().over(w1))
-      .where(col("rk1") <= k * oversample)
-    val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    short.select(col("qid"), col("nid"),
-        cosineSimD(col("nv"), col("qv")).as("sim"))
-      .withColumn("rk", row_number().over(w2)).where(col("rk") <= k)
-  }
-
-  /** Residual IVF-PQ serving from the [[writeIndexPqResidual]] codes
-    * layout — the [[searchPqIndex]] plan shape (probe reads m bytes
-    * per posting, survivors back-join the vector table broadcast-side
-    * for the exact rescore) with the residual scorer: the per-(query,
-    * cell) q·centroid term rides the broadcast query frame, so the
-    * candidate path still never touches a float vector. Results
-    * identical to [[searchPqResidual]] by construction.
-    */
-  def searchPqResidualIndex(index: DataFrame, vectors: DataFrame,
-                            queries: DataFrame, vecCol: String,
-                            idCol: String, model: IvfModel,
-                            pq: Pq.PqModel, k: Int, nprobe: Int = 4,
-                            oversample: Int = 4): DataFrame = {
-    import graft.functions.VectorFunctions.cosineSimD
-    val q = queriesWithLut(queries, vecCol, idCol, model, pq, nprobe)
-      .withColumn("cdot", centroidDotCol(col("qv"), col("cluster"), model))
-    val c = index.select(col("cluster"), col(idCol).as("nid"), col("codes"))
-    val cand = c.join(broadcast(q.drop("qv")), Seq("cluster"))
-      .where(col("nid") =!= col("qid"))
-      .dropDuplicates("qid", "nid")
-    val w1 = Window.partitionBy(col("qid")).orderBy(col("sima").desc, col("nid").asc)
-    val short = cand
-      .select(col("qid"), col("nid"),
-        (col("cdot") + Pq.adcDot(col("codes"), col("qt"), pq.ksub)).as("sima"))
-      .withColumn("rk1", row_number().over(w1))
-      .where(col("rk1") <= k * oversample)
-      .select(col("qid"), col("nid"))
-    val nv = vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val qv = q.select(col("qid"), col("qv")).dropDuplicates("qid")
-    val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    nv.join(broadcast(short), Seq("nid"))
-      .join(broadcast(qv), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        cosineSimD(col("nv"), col("qv")).as("sim"))
-      .withColumn("rk", row_number().over(w2)).where(col("rk") <= k)
   }
 
   /** PAYLOAD-FILTERED ANN — the reference's filter-inside-search
@@ -2611,167 +2455,137 @@ object Ivf {
       search(filtered, qs, vecCol, idCol, model, k, p, excludeSelf))
   }
 
-  /** Filter-inside-search over an int8 codes layout ([[searchCodes]]
-    * serving shape: the probe still reads only matching cluster
-    * partitions and codes bytes; the payload predicate prunes below
-    * that).
+  /** Serve a CODES layout (cluster, id, codes, …) — the
+    * billion-scale composition: cluster pruning bounds WHICH postings
+    * a query touches (~nprobe/nlist, partition-pruned on disk), the
+    * codes bound the BYTES per touched posting and the CPU per
+    * candidate, and no float vector enters the candidate path.
+    *
+    * One plan for every codec: the queries explode to their nprobe
+    * nearest cells and join the postings broadcast-side, drop self
+    * matches and duplicate (query, posting) pairs, and score by the
+    * codec. The int8 score is the exact-integer cosine and ranks the
+    * result directly. The BQ, PQ and PQR scores only pick each
+    * query's k·oversample shortlist (ties to the smaller id, so the
+    * stage is deterministic and oracle-replayable); the survivors —
+    * queries × k × oversample rows — back-join the full-vector table
+    * `vectors` (id, `vecCol`) broadcast-side, a semi-probe that never
+    * shuffles it, for the exact cosine rescore. METRIC CONTRACT of
+    * those three: inner-product (PQ, PQR) or Hamming (BQ) shortlist,
+    * cosine rescore — L2-normalize first for cosine recall guarantees
+    * on un-normalized corpora. int8 never reads `vectors`.
+    *
+    * In-memory float postings (cluster, id, `vecCol` — no `codes`
+    * column) are the one other plan: they encode on the fly and rank
+    * exactly as the persisted layout does, and their candidates carry
+    * their vectors through the shortlist and rescore in the same
+    * pass, so `vectors` is not read (no back-join, no second scan of
+    * the postings).
     */
-  def searchCodesFiltered(index: DataFrame, queries: DataFrame,
-                          vecCol: String, idCol: String, model: IvfModel,
-                          k: Int, filter: Column,
-                          nprobe0: Int = 4): DataFrame = {
-    val filtered = index.where(filter)
-    adaptiveFill(queries, idCol, k, model.nlist, nprobe0)((qs, p) =>
-      searchCodes(filtered, qs, vecCol, idCol, model, k, p))
-  }
+  def searchCodes(index: DataFrame, vectors: DataFrame, queries: DataFrame,
+                  vecCol: String, idCol: String, codec: Codec,
+                  model: IvfModel, k: Int, nprobe: Int = 4,
+                  oversample: Int = 4): DataFrame =
+    codesTopK(index, vectors,
+      queries.select(col(idCol).as("qid"), col(vecCol).as("qv")),
+      vecCol, idCol, codec, model, k, nprobe, oversample)
 
-  /** Filter-inside-search over the raw-PQ codes layout
-    * ([[searchPqIndex]] serving shape). Exactness note: at the
-    * exhaustive probe the ADC shortlist still cuts at k·oversample,
-    * so the result is exact over the filtered corpus whenever the
-    * filter matches ≤ k·oversample postings (the shortlist then
-    * holds EVERY match and the full-vector rescore ranks exactly) —
-    * the regime a selective payload filter is in by definition.
+  /** [[searchCodes]]' probe, score and rescore over a query frame
+    * `q0` of (qid, qv, carried columns…): the carried columns ride
+    * into the result beside qid. `keys` are extra candidate join keys
+    * the postings project from `index` (the grouped serve's tenant);
+    * `self`, if set, is the query column a posting id must differ
+    * from.
     */
-  def searchPqIndexFiltered(index: DataFrame, vectors: DataFrame,
-                            queries: DataFrame, vecCol: String,
-                            idCol: String, model: IvfModel,
-                            pq: Pq.PqModel, k: Int, filter: Column,
-                            nprobe0: Int = 4,
-                            oversample: Int = 4): DataFrame = {
-    val filtered = index.where(filter)
-    adaptiveFill(queries, idCol, k, model.nlist, nprobe0)((qs, p) =>
-      searchPqIndex(filtered, vectors, qs, vecCol, idCol, model,
-        pq, k, p, oversample))
-  }
-
-  /** Filter-inside-search over the residual codes layout
-    * ([[searchPqResidualIndex]] serving shape; same
-    * ≤ k·oversample exactness bound as [[searchPqIndexFiltered]]).
-    */
-  def searchPqResidualIndexFiltered(index: DataFrame, vectors: DataFrame,
-                                    queries: DataFrame, vecCol: String,
-                                    idCol: String, model: IvfModel,
-                                    pq: Pq.PqModel, k: Int, filter: Column,
-                                    nprobe0: Int = 4,
-                                    oversample: Int = 4): DataFrame = {
-    val filtered = index.where(filter)
-    adaptiveFill(queries, idCol, k, model.nlist, nprobe0)((qs, p) =>
-      searchPqResidualIndex(filtered, vectors, qs, vecCol, idCol,
-        model, pq, k, p, oversample))
-  }
-
-  /** Serve directly from a quantized index ([[writeIndexInt8]] layout:
-    * cluster, id, codes) — queries quantize on the fly, postings never
-    * touch a float vector.
-    */
-  def searchCodes(index: DataFrame, queries: DataFrame, vecCol: String,
-                  idCol: String, model: IvfModel, k: Int,
-                  nprobe: Int = 4): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"),
-        Similarity.int8Codes(col(vecCol)).as("qc"), col(vecCol).as("qv"))
+  private def codesTopK(index: DataFrame, vectors: DataFrame,
+                        q0: DataFrame, vecCol: String, idCol: String,
+                        codec: Codec, model: IvfModel, k: Int,
+                        nprobe: Int, oversample: Int,
+                        keys: Seq[(String, Column)] = Nil,
+                        self: Option[String] = Some("qid")): DataFrame = {
+    import graft.functions.VectorFunctions.cosineSimD
+    val head = col("qid") +: q0.columns.toSeq
+      .filterNot(c => c == "qid" || c == "qv").map(col)
+    val q = q0.select(col("*") +: codec.queryCols(col("qv")): _*)
       .withColumn("cluster", explode(nearestCol(col("qv"), model, nprobe)))
-      .drop("qv")
-    val c = index.select(col("cluster"), col(idCol).as("nid"),
-      col("codes").as("nc"))
-    val cand = c.join(broadcast(q), Seq("cluster"))
-      .where(col("nid") =!= col("qid"))
+    val qc = q.select(
+      col("*") +: codec.cellCols(col("qv"), col("cluster"), model): _*)
+    // float postings encode on the fly and rescore in frame: the
+    // candidates carry both vectors
+    val float = !index.columns.contains("codes")
+    val inFrame = float && codec.rescores
+    val vecs = if (inFrame) Seq(col("nv"), col("qv")) else Nil
+    val codes =
+      if (float) codec.encode(col(vecCol), col("cluster"), model) else col("codes")
+    val c = index.select(Seq(col("cluster"), col(idCol).as("nid"),
+      codes.as("codes")) ++ (if (inFrame) Seq(col(vecCol).as("nv")) else Nil) ++
+      keys.map { case (n, e) => e.as(n) }: _*)
+    val cand = c.join(broadcast(if (inFrame) qc else qc.drop("qv")),
+        "cluster" +: keys.map(_._1))
+      .where(self.fold(lit(true))(s => col("nid") =!= col(s)))
       .dropDuplicates("qid", "nid")
-    val scored = cand.select(col("qid"), col("nid"),
-      graft.functions.VectorFunctions.int8CosineSim(col("nc"), col("qc"))
-        .as("sim"))
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
+    val scored =
+      if (!codec.rescores)
+        cand.select(head :+ col("nid") :+ codec.score(col("codes")).as("sim"): _*)
+      else {
+        val w1 = Window.partitionBy(col("qid"))
+          .orderBy(codec.nearestFirst(col("sima")), col("nid").asc)
+        val short = cand
+          .select((head :+ col("nid")) ++ vecs :+
+            codec.score(col("codes")).as("sima"): _*)
+          .withColumn("rk1", row_number().over(w1))
+          .where(col("rk1") <= k * oversample)
+        val survivors = if (inFrame) short else {
+          val nv = vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"))
+          val qv = q.select(col("qid"), col("qv")).dropDuplicates("qid")
+          nv.join(broadcast(short.select(head :+ col("nid"): _*)), Seq("nid"))
+            .join(broadcast(qv), Seq("qid"))
+        }
+        survivors.select(head :+ col("nid") :+
+          cosineSimD(col("nv"), col("qv")).as("sim"): _*)
+      }
     scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
   }
 
-  /** BINARY-QUANTIZED serving layout — sign bits only, ceil(d/8)
-    * bytes per posting (32× under float32 at ANY dimension, the
-    * coarsest tier of the family: float → int8 4× → PQ m-byte →
-    * sign bits). Unlike PQ it needs NO trained codebooks — encoding
-    * is a pure function of the vector — so there is no frozen-
-    * codebook pair to manage beyond the coarse quantizer, and the
-    * layout can never drift from a stale codebook. Serve with
-    * [[searchBqIndex]] (Hamming shortlist + exact rescore).
+  /** Filter-inside-search over a CODES layout ([[searchCodes]]
+    * serving shape; see [[adaptiveFill]] for the semantics): the
+    * probe still reads only matching cluster partitions and codes
+    * bytes, and the payload predicate prunes below that. Exactness
+    * at the exhaustive probe: int8 is exact over the filtered
+    * corpus; the shortlist codecs still cut at k·oversample, so they
+    * are exact whenever the filter matches ≤ k·oversample postings
+    * (the shortlist then holds EVERY match and the rescore ranks
+    * exactly) — the regime a selective payload filter is in by
+    * definition.
     */
-  def writeIndexBq(postings: DataFrame, vecCol: String, path: String,
-                   payloadCols: Seq[String] = Nil,
-                   model: Option[IvfModel] = None): Unit = {
-    graft.core.KeyedWrite.spread(
-        postings
-          .withColumn("codes",
-            graft.functions.VectorFunctions.signBits(col(vecCol)))
-          .drop(vecCol),
-        "cluster" +: payloadCols)
-      .write.mode("overwrite")
-      .partitionBy("cluster" +: payloadCols: _*).parquet(path)
-    stampCodec(postings.sparkSession, path, "bq", fresh = true)
-    // see writeIndexInt8: persisting the coarse quantizer turns the
-    // quantized payload append's first-contact TRUST into VERIFY
-    model.foreach(m => saveModel(postings.sparkSession, m, modelPath(path)))
+  def searchCodesFiltered(index: DataFrame, vectors: DataFrame,
+                          queries: DataFrame, vecCol: String,
+                          idCol: String, codec: Codec, model: IvfModel,
+                          k: Int, filter: Column, nprobe0: Int = 4,
+                          oversample: Int = 4): DataFrame = {
+    val filtered = index.where(filter)
+    adaptiveFill(queries, idCol, k, model.nlist, nprobe0)((qs, p) =>
+      searchCodes(filtered, vectors, qs, vecCol, idCol, codec, model, k,
+        p, oversample))
   }
 
-  /** [[appendToIndexInt8]]'s twin for the sign-bit layout — assign
-    * under the frozen coarse quantizer, encode, dynamic-partition
-    * append; encoding is training-free so grown ≡ one-shot
-    * unconditionally.
+  /** INJECTIVE (query, group) → string key for the grouped fill
+    * bookkeeping: '%' then '#' are escaped in each component before
+    * the '#' join, so a group value containing the separator
+    * (groupCol is an arbitrary payload column) can never collide two
+    * distinct (query, group) pairs into one gqid — a collision would
+    * merge their fill accounting and top-k windows in
+    * [[adaptiveFill]].
     */
-  def appendToIndexBq(df: DataFrame, vecCol: String, model: IvfModel,
-                      path: String): Unit = {
-    graft.core.DirSwap.recoverAt(df.sparkSession, path) // see appendToIndex
-    guardNotPayloadPartitioned(df.sparkSession, path, "appendToIndexBq")
-    stampCodec(df.sparkSession, path, "bq") // refuse a cross-codec append
-    graft.core.KeyedWrite.spread(
-        assign(df, vecCol, model)
-          .withColumn("codes",
-            graft.functions.VectorFunctions.signBits(col(vecCol)))
-          .drop(vecCol),
-        Seq("cluster"))
-      .write.mode(SaveMode.Append).partitionBy("cluster").parquet(path)
-  }
-
-  /** Binary-quantized ANN from the [[writeIndexBq]] layout — the
-    * [[searchPqIndex]] plan shape with the cheapest possible
-    * candidate kernel: the probe reads ceil(d/8) BYTES per posting
-    * and scores one XOR+popcount per 64 dims (symmetric Hamming —
-    * the query binarizes too), then only the ≤ k·oversample
-    * Hamming-nearest survivors back-join the float vector table
-    * (broadcast semi-probe, never a shuffle of it) for the exact
-    * cosine rescore. Shortlist ties break on id so the stage is
-    * deterministic and oracle-replayable. Same ≤ k·oversample
-    * exactness bound as the PQ family at the exhaustive probe.
-    */
-  def searchBqIndex(index: DataFrame, vectors: DataFrame,
-                    queries: DataFrame, vecCol: String, idCol: String,
-                    model: IvfModel, k: Int, nprobe: Int = 4,
-                    oversample: Int = 4): DataFrame = {
-    import graft.functions.VectorFunctions.{bitHamming, cosineSimD, signBits}
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        signBits(col(vecCol)).as("qc"))
-      .withColumn("cluster", explode(nearestCol(col("qv"), model, nprobe)))
-    val c = index.select(col("cluster"), col(idCol).as("nid"), col("codes"))
-    val cand = c.join(broadcast(q.drop("qv")), Seq("cluster"))
-      .where(col("nid") =!= col("qid"))
-      .dropDuplicates("qid", "nid")
-    val w1 = Window.partitionBy(col("qid"))
-      .orderBy(col("ham").asc, col("nid").asc)
-    val short = cand
-      .select(col("qid"), col("nid"),
-        bitHamming(col("codes"), col("qc")).as("ham"))
-      .withColumn("rk1", row_number().over(w1))
-      .where(col("rk1") <= k * oversample)
-      .select(col("qid"), col("nid"))
-    val nv = vectors.select(col(idCol).as("nid"), col(vecCol).as("nv"))
-    val qv = q.select(col("qid"), col("qv")).dropDuplicates("qid")
-    val w2 = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("nid").asc)
-    nv.join(broadcast(short), Seq("nid"))
-      .join(broadcast(qv), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        cosineSimD(col("nv"), col("qv")).as("sim"))
-      .withColumn("rk", row_number().over(w2)).where(col("rk") <= k)
+  private def gqidKey(oqid: Column, grp: Column): Column = {
+    def esc(c: Column) = regexp_replace(
+      regexp_replace(c.cast("string"), "%", "%25"), "#", "%23")
+    concat_ws("#", esc(oqid), esc(grp))
   }
 
   /** GROUPED top-k — multi-tenant serving: top-k PER (query, group)
-    * over a codes layout whose `groupCol` rides the postings, in ONE
+    * over a layout whose `groupCol` rides the postings, in ONE
     * probe pass. Where a per-group loop would probe the index once
     * per tenant, here the candidate join key is (cluster, group):
     * each posting meets only the query rows probing ITS tenant, so
@@ -2790,20 +2604,6 @@ object Ivf {
     * postings (`nprobe0 = nlist` forces that for every tenant, the
     * gate-row configuration).
     */
-  /** INJECTIVE (query, group) → string key for the grouped fill
-    * bookkeeping: '%' then '#' are escaped in each component before
-    * the '#' join, so a group value containing the separator
-    * (groupCol is an arbitrary payload column) can never collide two
-    * distinct (query, group) pairs into one gqid — a collision would
-    * merge their fill accounting and top-k windows in
-    * [[adaptiveFill]].
-    */
-  private def gqidKey(oqid: Column, grp: Column): Column = {
-    def esc(c: Column) = regexp_replace(
-      regexp_replace(c.cast("string"), "%", "%25"), "#", "%23")
-    concat_ws("#", esc(oqid), esc(grp))
-  }
-
   def searchGrouped(postings: DataFrame, queries: DataFrame,
                     vecCol: String, idCol: String, model: IvfModel,
                     k: Int, groupCol: String, groups: DataFrame,
@@ -2832,52 +2632,29 @@ object Ivf {
       col("nid"), col("sim"), col("rk"))
   }
 
-  /** [[searchGrouped]] from the int8 codes serving layout — the same
-    * (cluster, group) candidate join over 4×-compressed postings,
-    * scored by the exact-integer kernel.
+  /** [[searchGrouped]] from a CODES layout — the same (cluster, group)
+    * candidate join over compressed postings, scored (and, for the
+    * shortlist codecs, rescored against `vectors`) by [[searchCodes]]'
+    * own core.
     */
-  def searchCodesGrouped(index: DataFrame, queries: DataFrame,
-                         vecCol: String, idCol: String, model: IvfModel,
-                         k: Int, groupCol: String, groups: DataFrame,
-                         nprobe0: Int = 4,
+  def searchCodesGrouped(index: DataFrame, vectors: DataFrame,
+                         queries: DataFrame, vecCol: String, idCol: String,
+                         codec: Codec, model: IvfModel, k: Int,
+                         groupCol: String, groups: DataFrame,
+                         nprobe0: Int = 4, oversample: Int = 4,
                          excludeSelf: Boolean = true): DataFrame = {
     val qx = queries.select(col(idCol).as("__oqid"), col(vecCol).as("qv"))
       .crossJoin(broadcast(groups.select(col(groupCol).as("__grp")).distinct()))
       .withColumn("gqid", gqidKey(col("__oqid"), col("__grp")))
     val res = adaptiveFill(qx, "gqid", k, model.nlist, nprobe0) { (qs, p) =>
-      val q = qs.select(col("gqid").as("qid"), col("__oqid"), col("__grp"),
-          Similarity.int8Codes(col("qv")).as("qc"), col("qv"))
-        .withColumn("cluster", explode(nearestCol(col("qv"), model, p)))
-        .drop("qv")
-      val c = index.select(col("cluster"), col(idCol).as("nid"),
-        col(groupCol).as("__grp"), col("codes").as("nc"))
-      val cand = c.join(broadcast(q), Seq("cluster", "__grp"))
-        .where(if (excludeSelf) col("nid") =!= col("__oqid") else lit(true))
-        .dropDuplicates("qid", "nid")
-      val scored = cand.select(col("qid"), col("__oqid"), col("__grp"),
-        col("nid"),
-        graft.functions.VectorFunctions.int8CosineSim(col("nc"), col("qc"))
-          .as("sim"))
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("sim").desc, col("nid").asc)
-      scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+      codesTopK(index, vectors,
+        qs.select(col("gqid").as("qid"), col("__oqid"), col("__grp"),
+          col("qv")),
+        vecCol, idCol, codec, model, k, p, oversample,
+        keys = Seq("__grp" -> col(groupCol)),
+        self = if (excludeSelf) Some("__oqid") else None)
     }
     res.select(col("__oqid").as("qid"), col("__grp").as(groupCol),
       col("nid"), col("sim"), col("rk"))
-  }
-
-  /** Filter-inside-search over the sign-bit layout ([[searchBqIndex]]
-    * serving shape; same ≤ k·oversample exactness bound as
-    * [[searchPqIndexFiltered]]).
-    */
-  def searchBqIndexFiltered(index: DataFrame, vectors: DataFrame,
-                            queries: DataFrame, vecCol: String,
-                            idCol: String, model: IvfModel, k: Int,
-                            filter: Column, nprobe0: Int = 4,
-                            oversample: Int = 4): DataFrame = {
-    val filtered = index.where(filter)
-    adaptiveFill(queries, idCol, k, model.nlist, nprobe0)((qs, p) =>
-      searchBqIndex(filtered, vectors, qs, vecCol, idCol, model,
-        k, p, oversample))
   }
 }

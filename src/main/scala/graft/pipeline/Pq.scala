@@ -355,8 +355,8 @@ object Pq {
     * (the F4 normalizer, [[graft.functions.VectorFunctions]]), after
     * which IP ranking IS cosine ranking and the shortlist is
     * metric-consistent. Same contract applies to
-    * [[graft.pipeline.Ivf.searchPq]]/`searchPqIndex`, which reuse
-    * this scorer.
+    * [[graft.pipeline.Ivf.searchCodes]] under the PQ codecs, which
+    * reuse this scorer.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
              idCol: String, k: Int, model: PqModel,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.VectorFunctions._
+import graft.pipeline.Ivf.Codec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1361,8 +1362,8 @@ object Queries {
       graft.pipeline.Similarity.recallAtK(
           graft.pipeline.Similarity.bruteForceTopK(
             emb, qs, "embedding", "vec_id", k = 5),
-          graft.pipeline.Ivf.searchPq(postings, qs, "embedding", "vec_id",
-            ivf, pq, k = 5, nprobe = 4, oversample = 4),
+          graft.pipeline.Ivf.searchCodes(postings, postings, qs, "embedding",
+            "vec_id", Codec.Pq(pq), ivf, k = 5, nprobe = 4, oversample = 4),
           k = 5)
         .orderBy(col("qid"))
     }),
@@ -1381,8 +1382,9 @@ object Queries {
       graft.pipeline.Similarity.recallAtK(
           graft.pipeline.Similarity.bruteForceTopK(
             emb, qs, "embedding", "vec_id", k = 5),
-          graft.pipeline.Ivf.searchPqResidual(postings, qs, "embedding",
-            "vec_id", ivf, pq, k = 5, nprobe = 4, oversample = 4),
+          graft.pipeline.Ivf.searchCodes(postings, postings, qs, "embedding",
+            "vec_id", Codec.PqResidual(pq), ivf, k = 5, nprobe = 4,
+            oversample = 4),
           k = 5)
         .orderBy(col("qid"))
     }),
@@ -1395,15 +1397,13 @@ object Queries {
       val qs = emb.where(col("vec_id") < 10)
       val model = graft.pipeline.Ivf.train(emb, "embedding", "vec_id",
         nlist = 16, iters = 3)
-      val codes = graft.pipeline.Ivf.assign(emb, "embedding", model)
-        .withColumn("codes",
-          graft.functions.VectorFunctions.signBits(col("embedding")))
-        .drop("embedding")
+      val codes = Codec.Bq.codes(
+        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding", model)
       graft.pipeline.Similarity.recallAtK(
           graft.pipeline.Similarity.bruteForceTopK(
             emb, qs, "embedding", "vec_id", k = 5),
-          graft.pipeline.Ivf.searchBqIndex(codes, emb, qs, "embedding",
-            "vec_id", model, k = 5, nprobe = 4, oversample = 4),
+          graft.pipeline.Ivf.searchCodes(codes, emb, qs, "embedding",
+            "vec_id", Codec.Bq, model, k = 5, nprobe = 4, oversample = 4),
           k = 5)
         .orderBy(col("qid"))
     }),
@@ -3117,16 +3117,17 @@ object Queries {
       val idx = graft.core.Scratch.dir("ivf_payappq")
         .resolve("index").toString
       val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-      graft.pipeline.Ivf.writeIndexInt8(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.where(col("vec_id") <= half),
-          "embedding", model), "embedding", idx,
+          "embedding", model), "embedding", Codec.Int8, idx,
         payloadCols = Seq("label"), model = Some(model))
-      graft.pipeline.Ivf.appendToIndexPayloadQuantized(
-        emb.where(col("vec_id") > half), "embedding", model, idx)
+      graft.pipeline.Ivf.appendToIndexCodes(
+        emb.where(col("vec_id") > half), "embedding",
+        Codec.Int8, model, idx)
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readIndex(s, idx),
+          graft.pipeline.Ivf.readIndex(s, idx), emb,
           emb.where(col("vec_id") < 10).drop("label"), "embedding",
-          "vec_id", model, k = 5, nprobe = 4)
+          "vec_id", Codec.Int8, model, k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -3190,14 +3191,14 @@ object Queries {
       val postings = graft.pipeline.Ivf.assign(emb, "embedding", model)
       val idx = graft.core.Scratch.dir("ivf_pq_filt")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexPq(postings, "embedding", pq, model, idx)
-      graft.pipeline.Ivf.searchPqIndexFiltered(
+      graft.pipeline.Ivf.writeIndexCodes(postings, "embedding", Codec.Pq(pq),
+        idx, model = Some(model))
+      graft.pipeline.Ivf.searchCodesFiltered(
           graft.pipeline.Ivf.readIndex(s, idx),
           emb.select(col("vec_id"), col("embedding")),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.of(s, idx),
           graft.pipeline.Ivf.loadModel(s, graft.pipeline.Ivf.modelPath(idx)),
-          graft.pipeline.Ivf.loadPq(s, idx), k = 5,
-          filter = col("label") === 3 && col("vec_id") % 13 === 0,
+          k = 5, filter = col("label") === 3 && col("vec_id") % 13 === 0,
           nprobe0 = 1)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -3219,16 +3220,15 @@ object Queries {
         "vec_id", model, m = 8, ksub = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivf_pqr_filt")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexPqResidual(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
-        pq, model, idx)
-      graft.pipeline.Ivf.searchPqResidualIndexFiltered(
+        Codec.PqResidual(pq), idx, model = Some(model))
+      graft.pipeline.Ivf.searchCodesFiltered(
           graft.pipeline.Ivf.readIndex(s, idx),
           emb.select(col("vec_id"), col("embedding")),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.of(s, idx),
           graft.pipeline.Ivf.loadModel(s, graft.pipeline.Ivf.modelPath(idx)),
-          graft.pipeline.Ivf.loadPq(s, idx), k = 5,
-          filter = col("label") === 3 && col("vec_id") % 13 === 0,
+          k = 5, filter = col("label") === 3 && col("vec_id") % 13 === 0,
           nprobe0 = 1)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -3249,12 +3249,13 @@ object Queries {
         nlist = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivf_i8_filt")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexInt8(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
-        idx)
+        Codec.Int8, idx)
       graft.pipeline.Ivf.searchCodesFiltered(
-          graft.pipeline.Ivf.readIndex(s, idx),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", model,
+          graft.pipeline.Ivf.readIndex(s, idx), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model,
           k = 5, filter = col("label") === 3, nprobe0 = 1)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -3336,8 +3337,9 @@ object Queries {
       val model = graft.pipeline.Ivf.train(emb, "embedding", "vec_id",
         nlist = 16, iters = 3)
       val postings = graft.pipeline.Ivf.assign(emb, "embedding", model)
-      graft.pipeline.Ivf.searchInt8(postings, emb.where(col("vec_id") < 10),
-          "embedding", "vec_id", model, k = 5, nprobe = 4)
+      graft.pipeline.Ivf.searchCodes(postings, postings,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model, k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"), col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
     }),
@@ -3352,11 +3354,12 @@ object Queries {
         nlist = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivf8_idx")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexInt8(
-        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding", idx)
+      graft.pipeline.Ivf.writeIndexCodes(
+        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
+        Codec.Int8, idx)
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readIndex(s, idx),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          graft.pipeline.Ivf.readIndex(s, idx), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
           model, k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"), col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -3374,14 +3377,14 @@ object Queries {
       val idx = graft.core.Scratch.dir("ivf8_inc")
         .resolve("index").toString
       val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-      graft.pipeline.Ivf.writeIndexInt8(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.where(col("vec_id") <= half),
-          "embedding", model), "embedding", idx)
-      graft.pipeline.Ivf.appendToIndexInt8(emb.where(col("vec_id") > half),
-        "embedding", model, idx)
+          "embedding", model), "embedding", Codec.Int8, idx)
+      graft.pipeline.Ivf.appendToIndexCodes(emb.where(col("vec_id") > half),
+        "embedding", Codec.Int8, model, idx)
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readIndex(s, idx),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          graft.pipeline.Ivf.readIndex(s, idx), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
           model, k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -4062,8 +4065,9 @@ object Queries {
         nlist = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivf_scroll")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexInt8(
-        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding", idx)
+      graft.pipeline.Ivf.writeIndexCodes(
+        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
+        Codec.Int8, idx)
       graft.pipeline.Ivf.tombstoneVectors(s, idx,
         emb.where(col("vec_id") % 7 === 3).select(col("vec_id")), "vec_id")
       val filt = Some(col("vec_id") % 2 === 0)
@@ -4088,8 +4092,9 @@ object Queries {
         nlist = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivf_count")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexInt8(
-        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding", idx)
+      graft.pipeline.Ivf.writeIndexCodes(
+        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
+        Codec.Int8, idx)
       graft.pipeline.Ivf.tombstoneVectors(s, idx,
         emb.where(col("vec_id") % 7 === 3).select(col("vec_id")), "vec_id")
       graft.pipeline.Ivf.countIndex(s, idx, "vec_id",
@@ -4161,19 +4166,21 @@ object Queries {
       val base = graft.core.Scratch.dir("ivf_restore")
       val idx = base.resolve("index").toString
       val snap = base.resolve("snap").toString
-      graft.pipeline.Ivf.writeIndexInt8(
-        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding", idx,
+      graft.pipeline.Ivf.writeIndexCodes(
+        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
+        Codec.Int8, idx,
         model = Some(model))
       graft.core.DirSnapshot.create(s, idx, snap)
       val decoys = emb.where(col("vec_id") < 10)
         .select((col("vec_id") + 77000000L).as("vec_id"), col("embedding"))
-      graft.pipeline.Ivf.appendToIndexInt8(decoys, "embedding", model, idx)
+      graft.pipeline.Ivf.appendToIndexCodes(decoys, "embedding", Codec.Int8,
+        model, idx)
       val c0 = new org.apache.hadoop.fs.Path(s"$idx/cluster=0")
       c0.getFileSystem(s.sparkContext.hadoopConfiguration).delete(c0, true)
       graft.core.DirSnapshot.restore(s, snap, idx)
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readIndex(s, idx),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          graft.pipeline.Ivf.readIndex(s, idx), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
           graft.pipeline.Ivf.loadModel(s, graft.pipeline.Ivf.modelPath(idx)),
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
@@ -4191,16 +4198,18 @@ object Queries {
       val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
       // parallel shard builds (disjoint roots, no conf mutation)
       graft.core.Par.all(
-        () => graft.pipeline.Ivf.writeIndexInt8(
+        () => graft.pipeline.Ivf.writeIndexCodes(
           graft.pipeline.Ivf.assign(emb.where(col("vec_id") <= half),
-            "embedding", model), "embedding", idxA, model = Some(model)),
-        () => graft.pipeline.Ivf.writeIndexInt8(
+            "embedding", model), "embedding", Codec.Int8, idxA,
+            model = Some(model)),
+        () => graft.pipeline.Ivf.writeIndexCodes(
           graft.pipeline.Ivf.assign(emb.where(col("vec_id") > half),
-            "embedding", model), "embedding", idxB, model = Some(model)))
+            "embedding", model), "embedding", Codec.Int8, idxB,
+            model = Some(model)))
       graft.pipeline.Ivf.mergeInto(s, idxA, idxB)
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readIndex(s, idxA),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          graft.pipeline.Ivf.readIndex(s, idxA), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
           graft.pipeline.Ivf.loadModel(s, graft.pipeline.Ivf.modelPath(idxA)),
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
@@ -4229,15 +4238,16 @@ object Queries {
         .select((col("vec_id") + 90000000L).as("vec_id"), col("embedding"))
       parts.zip(segs).map { case (p, seg) =>
         val rows = if (seg.endsWith("segC")) p.unionByName(decoys) else p
-        () => graft.pipeline.Ivf.writeIndexInt8(
+        () => graft.pipeline.Ivf.writeIndexCodes(
           graft.pipeline.Ivf.assign(rows, "embedding", model),
-          "embedding", seg, model = Some(model))
+          "embedding", Codec.Int8, seg, model = Some(model))
       } match { case bs => graft.core.Par.all(bs: _*) }
       graft.pipeline.Ivf.tombstoneVectors(s, segs(2),
         decoys.select(col("vec_id")), "vec_id")
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readSegmentsServing(s, segs, "vec_id", model),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", model,
+          graft.pipeline.Ivf.readSegmentsServing(s, segs, "vec_id", model), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model,
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -4287,8 +4297,9 @@ object Queries {
         s"equal-size cascade must fold to one segment, got $survivors")
       graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readSegmentsServing(s, survivors, "vec_id",
-            model),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", model,
+            model), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model,
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -4358,11 +4369,12 @@ object Queries {
       val idx = graft.core.Scratch.dir("ivfpqr_inc")
         .resolve("index").toString
       val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-      graft.pipeline.Ivf.writeIndexPqResidual(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.where(col("vec_id") <= half),
-          "embedding", ivf), "embedding", pq, ivf, idx)
-      graft.pipeline.Ivf.appendToIndexPqResidual(
-        emb.where(col("vec_id") > half), "embedding", pq, ivf, idx)
+          "embedding", ivf), "embedding", Codec.PqResidual(pq), idx,
+          model = Some(ivf))
+      graft.pipeline.Ivf.appendToIndexCodes(emb.where(col("vec_id") > half),
+        "embedding", Codec.PqResidual(pq), ivf, idx)
       // contents-invariant compaction of the codes layout — also
       // exercises the hidden-dir carry-over keeping _model/_pq
       // through the swap
@@ -4370,11 +4382,11 @@ object Queries {
       // restart simulation: both models reloaded from the layout
       val ivf2 = graft.pipeline.Ivf.loadModel(s,
         graft.pipeline.Ivf.modelPath(idx))
-      val pq2 = graft.pipeline.Ivf.loadPq(s, idx)
-      graft.pipeline.Ivf.searchPqResidualIndex(
+      val codec = Codec.of(s, idx)
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          ivf2, pq2, k = 5, nprobe = 4, oversample = 4)
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", codec,
+          ivf2, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -4397,18 +4409,18 @@ object Queries {
           slice(col("embedding"), 1, 7)).as("embedding"))
       val idx = graft.core.Scratch.dir("ivfpqr_del")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexPqResidual(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.unionByName(decoys), "embedding",
-          ivf), "embedding", pq, ivf, idx)
+          ivf), "embedding", Codec.PqResidual(pq), idx, model = Some(ivf))
       graft.pipeline.Ivf.deleteVectors(s, idx,
         decoys.select(col("vec_id")), "vec_id")
       val ivf2 = graft.pipeline.Ivf.loadModel(s,
         graft.pipeline.Ivf.modelPath(idx))
-      val pq2 = graft.pipeline.Ivf.loadPq(s, idx)
-      graft.pipeline.Ivf.searchPqResidualIndex(
+      val codec = Codec.of(s, idx)
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          ivf2, pq2, k = 5, nprobe = 4, oversample = 4)
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", codec,
+          ivf2, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -4430,18 +4442,18 @@ object Queries {
           slice(col("embedding"), 1, 7)).as("embedding"))
       val idx = graft.core.Scratch.dir("ivfpq_del")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexPq(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.unionByName(decoys), "embedding",
-          ivf), "embedding", pq, ivf, idx)
+          ivf), "embedding", Codec.Pq(pq), idx, model = Some(ivf))
       graft.pipeline.Ivf.deleteVectors(s, idx,
         decoys.select(col("vec_id")), "vec_id")
       val ivf2 = graft.pipeline.Ivf.loadModel(s,
         graft.pipeline.Ivf.modelPath(idx))
-      val pq2 = graft.pipeline.Ivf.loadPq(s, idx)
-      graft.pipeline.Ivf.searchPqIndex(
+      val codec = Codec.of(s, idx)
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          ivf2, pq2, k = 5, nprobe = 4, oversample = 4)
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", codec,
+          ivf2, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -4459,14 +4471,14 @@ object Queries {
           slice(col("embedding"), 1, 7)).as("embedding"))
       val idx = graft.core.Scratch.dir("ivfbq_del")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexBq(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.unionByName(decoys), "embedding",
-          model), "embedding", idx)
+          model), "embedding", Codec.Bq, idx)
       graft.pipeline.Ivf.deleteVectors(s, idx,
         decoys.select(col("vec_id")), "vec_id")
-      graft.pipeline.Ivf.searchBqIndex(
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Bq,
           model, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -4484,14 +4496,14 @@ object Queries {
           slice(col("embedding"), 1, 7)).as("embedding"))
       val idx = graft.core.Scratch.dir("ivf8_del")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexInt8(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.unionByName(decoys), "embedding",
-          model), "embedding", idx)
+          model), "embedding", Codec.Int8, idx)
       graft.pipeline.Ivf.deleteVectors(s, idx,
         decoys.select(col("vec_id")), "vec_id")
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readIndex(s, idx),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          graft.pipeline.Ivf.readIndex(s, idx), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
           model, k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -5103,21 +5115,24 @@ object Queries {
     }),
 
     "stream_hourly" -> ((s, d) => {
-      val sdf = graft.streaming.EventStream.readEvents(s, d)
-      val agg = sdf.groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
-      graft.streaming.EventStream.runToMemory(s, agg,
+      graft.streaming.EventStream.withEvents(s, d) { sdf =>
+        val agg = sdf.groupBy(date_trunc("hour", col("ts")).as("hour"),
+            col("event_type"))
+          .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"))
+        graft.streaming.EventStream.runToMemory(s, agg,
           org.apache.spark.sql.streaming.OutputMode.Complete())
+      }
         .select(col("hour"), col("event_type"), col("n"),
           round(col("sv"), 2).as("sum_value"))
         .orderBy(col("hour"), col("event_type"))
     }),
 
     "stream_sessionize" -> ((s, d) => {
-      val sdf = graft.streaming.EventStream.readEvents(s, d)
-      val sess = graft.streaming.EventStream.sessionize(s, sdf).toDF()
-      graft.streaming.EventStream.runToMemory(s, sess,
+      graft.streaming.EventStream.withEvents(s, d) { sdf =>
+        val sess = graft.streaming.EventStream.sessionize(s, sdf).toDF()
+        graft.streaming.EventStream.runToMemory(s, sess,
           org.apache.spark.sql.streaming.OutputMode.Append())
+      }
         .orderBy(col("user_id"))
     }),
 
@@ -5131,19 +5146,20 @@ object Queries {
       // the oracle replays that cutoff. Session merge uses half-open
       // windows ([start, last+gap)), so a gap of EXACTLY the window
       // size splits — hence >= in the oracle's break condition.
-      val sdf = graft.streaming.EventStream.readEvents(s, d)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
       // 8 partitions is the measured knee for the ~95k state rows this
       // stream holds at sf0.1 (tools/StreamProfile batch-0 trigger:
       // p4 2.84 s, p8 1.28 s, p16 1.22 s, p32 1.41 s)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val mem =
+      val mem = graft.streaming.EventStream.withEvents(s, d) { events =>
+        val sdf = events
+          .withWatermark("ts", "0 seconds")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n"))
+        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+        s.conf.set("spark.sql.shuffle.partitions", "8")
         try graft.streaming.EventStream.runToMemory(s, sdf,
           org.apache.spark.sql.streaming.OutputMode.Append())
         finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
       mem.select(col("user_id"),
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"), col("n"))
@@ -5155,29 +5171,32 @@ object Queries {
       // minutes after a click by the same user. Over a static source
       // run to completion the inner join equals the batch join — the
       // oracle is the plain SQL interval join.
-      val a = graft.streaming.EventStream.readEvents(s, d)
-        .where(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("ts").as("click_ts"))
-      val b = graft.streaming.EventStream.readEvents(s, d)
-        .where(col("event_type") === "view")
-        .select(col("user_id").as("view_user"),
-          col("event_id").as("view_id"), col("ts").as("view_ts"))
-      val j = graft.streaming.EventStream.intervalJoin(
-        a, "click_ts", b, "view_ts",
-        col("user_id") === col("view_user"), within = "30 MINUTES")
       // the join keeps 4 state stores per shuffle partition, so the
       // partition count trades state-update parallelism against
       // per-store commit overhead. Measured at sf0.1 (200k input rows,
       // ~40k state rows; tools/StreamProfile): batch-0 trigger 2.16 s
       // at 4 partitions, 1.72 s at 8, 2.29 s at 16, 4.12 s at 32 (128
       // stores of pure commit overhead) — 8 is the knee.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val mem =
-        try graft.streaming.EventStream.runToMemory(s, j,
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val mem = graft.streaming.EventStream.withEvents(s, d) { clicks =>
+        graft.streaming.EventStream.withEvents(s, d) { views =>
+          val a = clicks
+            .where(col("event_type") === "click")
+            .select(col("user_id"), col("event_id").as("click_id"),
+              col("ts").as("click_ts"))
+          val b = views
+            .where(col("event_type") === "view")
+            .select(col("user_id").as("view_user"),
+              col("event_id").as("view_id"), col("ts").as("view_ts"))
+          val j = graft.streaming.EventStream.intervalJoin(
+            a, "click_ts", b, "view_ts",
+            col("user_id") === col("view_user"), within = "30 MINUTES")
+          val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+          s.conf.set("spark.sql.shuffle.partitions", "8")
+          try graft.streaming.EventStream.runToMemory(s, j,
+            org.apache.spark.sql.streaming.OutputMode.Append())
+          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        }
+      }
       mem.select(col("user_id"), col("click_id"), col("view_id"))
         .orderBy(col("user_id"), col("click_id"), col("view_id"))
     }),
@@ -5285,11 +5304,12 @@ object Queries {
     "stream_dedup" -> ((s, d) => {
       // streaming exact dedup: dropDuplicates state over the stream,
       // checked against the batch distinct count
-      val sdf = graft.streaming.EventStream.readEvents(s, d)
-      val deduped = sdf.select(col("user_id"), col("event_type"))
-        .dropDuplicates("user_id", "event_type")
-      graft.streaming.EventStream.runToMemory(s, deduped,
+      graft.streaming.EventStream.withEvents(s, d) { sdf =>
+        val deduped = sdf.select(col("user_id"), col("event_type"))
+          .dropDuplicates("user_id", "event_type")
+        graft.streaming.EventStream.runToMemory(s, deduped,
           org.apache.spark.sql.streaming.OutputMode.Append())
+      }
         .agg(count(lit(1)).as("n"))
     }),
 
@@ -5571,8 +5591,9 @@ object Queries {
       def serve() = graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readSegmentsServing(s,
             graft.streaming.StreamingSegments.segmentRoots(s, root),
-            "vec_id", model),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", model,
+            "vec_id", model), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model,
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -5610,8 +5631,9 @@ object Queries {
       require(segs.size == 2,
         s"cadence shape: {0..4 cascaded, tail 5} expected, got $segs")
       graft.pipeline.Ivf.searchCodes(
-          graft.pipeline.Ivf.readSegmentsServing(s, segs, "vec_id", model),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", model,
+          graft.pipeline.Ivf.readSegmentsServing(s, segs, "vec_id", model), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model,
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -5648,8 +5670,9 @@ object Queries {
           graft.pipeline.Ivf.readSegmentsServing(s,
             graft.streaming.StreamingSegments.segmentRoots(s, root),
             "vec_id", model)
-            .where(col("vec_id") % 2 === 0),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", model,
+            .where(col("vec_id") % 2 === 0), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model,
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -5754,8 +5777,9 @@ object Queries {
       graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readSegmentsServing(s,
             graft.streaming.StreamingSegments.segmentRoots(s, root),
-            "vec_id", model),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", model,
+            "vec_id", model), emb,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Int8,
+          model,
           k = 5, nprobe = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -5913,11 +5937,11 @@ object Queries {
         nBatches = 4, compactEvery = 2)
       val ivf2 = graft.pipeline.Ivf.loadModel(s,
         graft.pipeline.Ivf.modelPath(idx))
-      val pq2 = graft.pipeline.Ivf.loadPq(s, idx)
-      graft.pipeline.Ivf.searchPqResidualIndex(
+      val codec = Codec.of(s, idx)
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          ivf2, pq2, k = 5, nprobe = 4, oversample = 4)
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", codec,
+          ivf2, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -5937,9 +5961,9 @@ object Queries {
         .resolve("index").toString
       graft.streaming.StreamingIvf.ingestBq(s, d, model, idx,
         nBatches = 4, compactEvery = 2)
-      graft.pipeline.Ivf.searchBqIndex(
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Bq,
           graft.pipeline.Ivf.loadModel(s, graft.pipeline.Ivf.modelPath(idx)),
           k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
@@ -6016,8 +6040,9 @@ object Queries {
       val pq = graft.pipeline.Pq.train(emb, "embedding", "vec_id",
         m = 8, ksub = 16, iters = 3)
       val postings = graft.pipeline.Ivf.assign(emb, "embedding", ivf)
-      graft.pipeline.Ivf.searchPq(postings, emb.where(col("vec_id") < 10),
-          "embedding", "vec_id", ivf, pq, k = 5, nprobe = 4, oversample = 4)
+      graft.pipeline.Ivf.searchCodes(postings, postings,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Pq(pq),
+          ivf, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -6036,13 +6061,13 @@ object Queries {
         m = 8, ksub = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivfpq_idx")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexPq(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb, "embedding", ivf), "embedding",
-        pq, ivf, idx)
-      graft.pipeline.Ivf.searchPqIndex(
+        Codec.Pq(pq), idx, model = Some(ivf))
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          ivf, pq, k = 5, nprobe = 4, oversample = 4)
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Pq(pq),
+          ivf, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -6060,18 +6085,18 @@ object Queries {
       val idx = graft.core.Scratch.dir("ivfpq_inc")
         .resolve("index").toString
       val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-      graft.pipeline.Ivf.writeIndexPq(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.where(col("vec_id") <= half),
-          "embedding", ivf), "embedding", pq, ivf, idx)
-      graft.pipeline.Ivf.appendToIndexPq(emb.where(col("vec_id") > half),
-        "embedding", pq, ivf, idx)
+          "embedding", ivf), "embedding", Codec.Pq(pq), idx, model = Some(ivf))
+      graft.pipeline.Ivf.appendToIndexCodes(emb.where(col("vec_id") > half),
+        "embedding", Codec.Pq(pq), ivf, idx)
       val ivf2 = graft.pipeline.Ivf.loadModel(s,
         graft.pipeline.Ivf.modelPath(idx))
-      val pq2 = graft.pipeline.Ivf.loadPq(s, idx)
-      graft.pipeline.Ivf.searchPqIndex(
+      val codec = Codec.of(s, idx)
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          ivf2, pq2, k = 5, nprobe = 4, oversample = 4)
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", codec,
+          ivf2, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -6088,11 +6113,12 @@ object Queries {
         nlist = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivfbq_idx")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexBq(
-        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding", idx)
-      graft.pipeline.Ivf.searchBqIndex(
+      graft.pipeline.Ivf.writeIndexCodes(
+        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
+        Codec.Bq, idx)
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Bq,
           model, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -6108,14 +6134,14 @@ object Queries {
       val idx = graft.core.Scratch.dir("ivfbq_inc")
         .resolve("index").toString
       val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-      graft.pipeline.Ivf.writeIndexBq(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb.where(col("vec_id") <= half),
-          "embedding", model), "embedding", idx)
-      graft.pipeline.Ivf.appendToIndexBq(emb.where(col("vec_id") > half),
-        "embedding", model, idx)
-      graft.pipeline.Ivf.searchBqIndex(
+          "embedding", model), "embedding", Codec.Bq, idx)
+      graft.pipeline.Ivf.appendToIndexCodes(emb.where(col("vec_id") > half),
+        "embedding", Codec.Bq, model, idx)
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Bq,
           model, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
@@ -6134,12 +6160,13 @@ object Queries {
         nlist = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivfbq_filt")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexBq(
-        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding", idx)
-      graft.pipeline.Ivf.searchBqIndexFiltered(
+      graft.pipeline.Ivf.writeIndexCodes(
+        graft.pipeline.Ivf.assign(emb, "embedding", model), "embedding",
+        Codec.Bq, idx)
+      graft.pipeline.Ivf.searchCodesFiltered(
           graft.pipeline.Ivf.readIndex(s, idx),
           emb.select(col("vec_id"), col("embedding")),
-          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Bq,
           model, k = 5,
           filter = col("label") === 3 && col("vec_id") % 13 === 0,
           nprobe0 = 1)
@@ -6159,8 +6186,9 @@ object Queries {
       val pq = graft.pipeline.Pq.train(emb, "embedding", "vec_id",
         m = 8, ksub = 256, iters = 3)
       val postings = graft.pipeline.Ivf.assign(emb, "embedding", ivf)
-      graft.pipeline.Ivf.searchPq(postings, emb.where(col("vec_id") < 10),
-          "embedding", "vec_id", ivf, pq, k = 5, nprobe = 4, oversample = 4)
+      graft.pipeline.Ivf.searchCodes(postings, postings,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id", Codec.Pq(pq),
+          ivf, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -6179,9 +6207,9 @@ object Queries {
       val pq = graft.pipeline.Ivf.trainPqResidual(emb, "embedding", "vec_id",
         ivf, m = 8, ksub = 16, iters = 3)
       val postings = graft.pipeline.Ivf.assign(emb, "embedding", ivf)
-      graft.pipeline.Ivf.searchPqResidual(postings,
-          emb.where(col("vec_id") < 10), "embedding", "vec_id", ivf, pq,
-          k = 5, nprobe = 4, oversample = 4)
+      graft.pipeline.Ivf.searchCodes(postings, postings,
+          emb.where(col("vec_id") < 10), "embedding", "vec_id",
+          Codec.PqResidual(pq), ivf, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -6200,13 +6228,13 @@ object Queries {
         ivf, m = 8, ksub = 16, iters = 3)
       val idx = graft.core.Scratch.dir("ivfpqr_idx")
         .resolve("index").toString
-      graft.pipeline.Ivf.writeIndexPqResidual(
+      graft.pipeline.Ivf.writeIndexCodes(
         graft.pipeline.Ivf.assign(emb, "embedding", ivf), "embedding",
-        pq, ivf, idx)
-      graft.pipeline.Ivf.searchPqResidualIndex(
+        Codec.PqResidual(pq), idx, model = Some(ivf))
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, idx), emb,
           emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          ivf, pq, k = 5, nprobe = 4, oversample = 4)
+          Codec.PqResidual(pq), ivf, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))
@@ -6241,12 +6269,12 @@ object Queries {
       val pq = graft.pipeline.Ivf.trainPqResidual(posts, "embedding",
         "vec_id", fresh, m = 8, ksub = 16, iters = 3)
       val pqIdx = root.resolve("pq").toString
-      graft.pipeline.Ivf.writeIndexPqResidual(posts, "embedding", pq,
-        fresh, pqIdx)
-      graft.pipeline.Ivf.searchPqResidualIndex(
+      graft.pipeline.Ivf.writeIndexCodes(posts, "embedding",
+        Codec.PqResidual(pq), pqIdx, model = Some(fresh))
+      graft.pipeline.Ivf.searchCodes(
           graft.pipeline.Ivf.readIndex(s, pqIdx), emb,
           emb.where(col("vec_id") < 10), "embedding", "vec_id",
-          fresh, pq, k = 5, nprobe = 4, oversample = 4)
+          Codec.PqResidual(pq), fresh, k = 5, nprobe = 4, oversample = 4)
         .select(col("qid"), col("nid"), col("sim"),
           col("rk").cast(LongType).as("rk"))
         .orderBy(col("qid"), col("rk"))

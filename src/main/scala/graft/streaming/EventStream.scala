@@ -19,27 +19,38 @@ object EventStream {
   final case class SessionSummary(user_id: Long, n_sessions: Long, n_events: Long)
   final case class SessState(lastTsUs: Long, sessions: Long, events: Long)
 
-  /** Read the events table as a stream (handles the NANOS timestamp
-    * via nanosAsLong, mirroring the batch reader).
+  /** Run `body` over the events table read as a stream (handles the
+    * NANOS timestamp via nanosAsLong, mirroring the batch reader).
+    * The stream reads a private copy of `events.parquet` (a file
+    * stream source watches a directory), and the copy lives exactly
+    * as long as `body`: it is deleted when `body` returns or throws,
+    * the [[StagedIngest]] cleanup rule. So `body` must run the stream
+    * to completion (e.g. [[runToMemory]]) before it returns; a stream
+    * that needs two independent event sources nests two calls.
     */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
+  def withEvents[T](spark: SparkSession, dir: String)
+                   (body: DataFrame => T): T = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
     val stageDir = java.nio.file.Files.createTempDirectory("graft_stream")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      stageDir.resolve("events.parquet"))
-    val raw = spark.readStream.schema(rawSchema).parquet(stageDir.toString)
-    if (rawSchema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else if (rawSchema("ts").dataType ==
-        org.apache.spark.sql.types.TimestampNTZType) {
-      // naive micros → session-UTC instants, mirroring Queries.tbl;
-      // only instant-preserving under a UTC session — assert it
-      graft.core.Schemas.requireUtcSession(spark)
-      raw.withColumn("ts",
-        col("ts").cast(org.apache.spark.sql.types.TimestampType))
-    }
-    else raw
+    try {
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        stageDir.resolve("events.parquet"))
+      val raw = spark.readStream.schema(rawSchema).parquet(stageDir.toString)
+      body(
+        if (rawSchema("ts").dataType == org.apache.spark.sql.types.LongType)
+          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        else if (rawSchema("ts").dataType ==
+            org.apache.spark.sql.types.TimestampNTZType) {
+          // naive micros → session-UTC instants, mirroring Queries.tbl;
+          // only instant-preserving under a UTC session — assert it
+          graft.core.Schemas.requireUtcSession(spark)
+          raw.withColumn("ts",
+            col("ts").cast(org.apache.spark.sql.types.TimestampType))
+        }
+        else raw)
+    } finally deleteRecursively(stageDir)
   }
 
   /** Watermarked tumbling-window aggregation (append mode shape). */

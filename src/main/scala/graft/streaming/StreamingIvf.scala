@@ -110,7 +110,7 @@ object StreamingIvf {
     * serving layout — the layout that actually serves at 100 TB:
     * each microbatch assigns under the frozen coarse quantizer,
     * encodes its residual under the frozen codebooks, and appends
-    * m-byte codes ([[Ivf.appendToIndexPqResidual]]). Pure per-row
+    * m-byte codes ([[Ivf.appendToIndexCodes]]). Pure per-row
     * encoding makes the grown layout row-identical to a one-shot
     * build, so the ivf_topk_pqr golden oracles the streamed path.
     * The (coarse, codebook) pair persists with the layout at first
@@ -121,11 +121,8 @@ object StreamingIvf {
                   pq: graft.pipeline.Pq.PqModel, indexPath: String,
                   nBatches: Int = 4, compactEvery: Int = 0,
                   compactFilesPerDir: Double = 0.0): Unit =
-    ingestEncoded(spark, dir, model, Some(pq), indexPath, nBatches,
-      compactEvery, compactFilesPerDir, kind = "icodes") {
-      (batch, m) => Ivf.appendToIndexPqResidual(batch, "embedding",
-        pq, m, indexPath)
-    }
+    ingestEncoded(spark, dir, model, Ivf.Codec.PqResidual(pq), indexPath,
+      nBatches, compactEvery, compactFilesPerDir, kind = "icodes")
 
   /** [[ingestCodes]] for the SIGN-BIT layout — the coarsest tier
     * streamed on ingest. Training-free encoding means only the
@@ -137,18 +134,14 @@ object StreamingIvf {
                indexPath: String, nBatches: Int = 4,
                compactEvery: Int = 0,
                compactFilesPerDir: Double = 0.0): Unit =
-    ingestEncoded(spark, dir, model, None, indexPath, nBatches,
-      compactEvery, compactFilesPerDir, kind = "ibq") {
-      (batch, m) => Ivf.appendToIndexBq(batch, "embedding", m, indexPath)
-    }
+    ingestEncoded(spark, dir, model, Ivf.Codec.Bq, indexPath, nBatches,
+      compactEvery, compactFilesPerDir, kind = "ibq")
 
   private def ingestEncoded(spark: SparkSession, dir: String,
-                            model: IvfModel,
-                            pq: Option[graft.pipeline.Pq.PqModel],
+                            model: IvfModel, codec: Ivf.Codec,
                             indexPath: String, nBatches: Int,
                             compactEvery: Int,
-                            compactFilesPerDir: Double, kind: String)
-                           (append: (DataFrame, IvfModel) => Unit): Unit =
+                            compactFilesPerDir: Double, kind: String): Unit =
     StagedIngest.run(spark, s"$dir/embeddings.parquet",
         StagedIngest.Split("vec_id", nBatches), kind) {
       (runKey, stageNonEmpty) =>
@@ -160,11 +153,13 @@ object StreamingIvf {
         // unconditional save would silently invalidate codes a prior
         // run already encoded under a different pair (ensurePair
         // errors loudly instead)
-        if (stageNonEmpty) Ivf.ensurePair(spark, model, pq, indexPath)
+        if (stageNonEmpty)
+          Ivf.ensurePair(spark, model, codec.codebooks, indexPath)
         (batch, batchId) => {
           val s = batch.sparkSession
           BatchLedger.once(s, indexPath, runId, batchId) {
-            append(batch, model)
+            Ivf.appendToIndexCodes(batch, "embedding", codec, model,
+              indexPath)
           }
           graft.core.ParquetCompact.afterBatch(s, batchId, compactEvery,
               compactFilesPerDir, indexPath) {

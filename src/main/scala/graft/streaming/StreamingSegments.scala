@@ -213,8 +213,8 @@ object StreamingSegments {
                    batchId: Long,
                    knownNonEmpty: Boolean = false): Boolean =
     promoteBatch(spark, batch, root, batchId, knownNonEmpty) { tmp =>
-      Ivf.writeIndexInt8(Ivf.assign(batch, vecCol, model), vecCol, tmp,
-        model = Some(model))
+      Ivf.writeIndexCodes(Ivf.assign(batch, vecCol, model), vecCol,
+        Ivf.Codec.Int8, tmp, model = Some(model))
     }
 
   /** The per-ingest maintenance cadence: after every `maintainEvery`

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Scale curve for the QUANTIZED serving path: grow the residual
   * codes layout 1×/2×/4×/8× (replicated embeddings, offset ids, same
-  * frozen models) and time `searchPqResidualIndex` at fixed nprobe —
+  * frozen models) and time `Ivf.searchCodes` at fixed nprobe —
   * the claim under test is that probe cost tracks the PROBED cells'
   * rows (≈ nprobe/nlist of the corpus) and the candidate path reads
   * m bytes per posting, so the fitted growth exponent should sit
@@ -37,14 +37,15 @@ object CodesProbeCurve {
         .reduce(_ unionByName _)
       val idx = java.nio.file.Files.createTempDirectory(s"cpc_$factor")
         .resolve("index").toString
-      Ivf.writeIndexPqResidual(Ivf.assign(corpus, "embedding", ivf),
-        "embedding", pq, ivf, idx)
+      Ivf.writeIndexCodes(Ivf.assign(corpus, "embedding", ivf),
+        "embedding", Ivf.Codec.PqResidual(pq), idx, model = Some(ivf))
       val vecs = corpus.localCheckpoint(true)
       // warm + 3 timed probes; median
       def once(): Double = {
         val t0 = System.nanoTime()
-        Ivf.searchPqResidualIndex(Ivf.readIndex(spark, idx), vecs, qs,
-          "embedding", "vec_id", ivf, pq, k = 5, nprobe = 4).count()
+        Ivf.searchCodes(Ivf.readIndex(spark, idx), vecs, qs,
+          "embedding", "vec_id", Ivf.Codec.PqResidual(pq), ivf, k = 5,
+          nprobe = 4).count()
         (System.nanoTime() - t0) / 1e9
       }
       once()

@@ -87,8 +87,9 @@ object MaintenanceCurve {
       def serveOnce(): Double = {
         val t0 = System.nanoTime()
         Ivf.searchCodes(
-          Ivf.readSegmentsServing(spark, segs, "vec_id", model),
-          queries, "embedding", "vec_id", model, k = 5, nprobe = 4).count()
+          Ivf.readSegmentsServing(spark, segs, "vec_id", model), emb,
+          queries, "embedding", "vec_id", Ivf.Codec.Int8, model, k = 5,
+          nprobe = 4).count()
         (System.nanoTime() - t0) / 1e9
       }
       serveOnce()

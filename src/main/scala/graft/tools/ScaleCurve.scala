@@ -803,8 +803,8 @@ object ScaleCurve {
           Ivf.search(postings, qs, "embedding", "vec_id", ivf, k = 5,
             nprobe = np), k = 5))
         val rPq = mean(Similarity.recallAtK(truth,
-          Ivf.searchPq(postings, qs, "embedding", "vec_id", ivf, pq,
-            k = 5, nprobe = np, oversample = 4), k = 5))
+          Ivf.searchCodes(postings, postings, qs, "embedding", "vec_id",
+            Ivf.Codec.Pq(pq), ivf, k = 5, nprobe = np, oversample = 4), k = 5))
         println(f"${"recall_sweep"}%-16s nprobe=$np%2d ivf=$rIvf%.3f " +
           f"ivfpq=$rPq%.3f")
       }
@@ -817,8 +817,8 @@ object ScaleCurve {
           else Pq.train(embAll, "embedding", "vec_id", m = m, ksub = 16,
             iters = 3)
         val r = Similarity.recallAtK(truth,
-            Ivf.searchPq(postings, qs, "embedding", "vec_id", ivf, pqm,
-              k = 5, nprobe = 8, oversample = os), k = 5)
+            Ivf.searchCodes(postings, postings, qs, "embedding", "vec_id",
+              Ivf.Codec.Pq(pqm), ivf, k = 5, nprobe = 8, oversample = os), k = 5)
           .agg(avg(col("recall"))).head().getDouble(0)
         println(f"${"pq_knob_sweep"}%-16s m=$m%2d os=$os%2d nprobe=8 " +
           f"recall=$r%.3f")
@@ -859,11 +859,13 @@ object ScaleCurve {
         val resid = Ivf.trainPqResidual(embAll, "embedding", "vec_id", ivf,
           m = m, ksub = ksub, iters = 3)
         val rP = meanR(Similarity.recallAtK(truth,
-          Ivf.searchPq(postings, qs, "embedding", "vec_id", ivf, plain,
-            k = 5, nprobe = 8, oversample = os), k = 5))
+          Ivf.searchCodes(postings, postings, qs, "embedding", "vec_id",
+            Ivf.Codec.Pq(plain), ivf, k = 5, nprobe = 8, oversample = os),
+          k = 5))
         val rR = meanR(Similarity.recallAtK(truth,
-          Ivf.searchPqResidual(postings, qs, "embedding", "vec_id", ivf,
-            resid, k = 5, nprobe = 8, oversample = os), k = 5))
+          Ivf.searchCodes(postings, postings, qs, "embedding", "vec_id",
+            Ivf.Codec.PqResidual(resid), ivf, k = 5, nprobe = 8,
+            oversample = os), k = 5))
         println(f"${"pqr_knob_sweep"}%-16s m=$m%2d ksub=$ksub%3d os=$os%2d " +
           f"nprobe=8 plain=$rP%.3f resid=$rR%.3f")
       }
@@ -875,11 +877,13 @@ object ScaleCurve {
       val pqr16 = Ivf.trainPqResidual(embAll, "embedding", "vec_id", ivf,
         m = 8, ksub = 16, iters = 3)
       val aP = meanR(Similarity.recallAtK(truth,
-        Ivf.searchPq(postings, qs, "embedding", "vec_id", ivf, pq16,
-          k = 5, nprobe = 16, oversample = 100000), k = 5))
+        Ivf.searchCodes(postings, postings, qs, "embedding", "vec_id",
+          Ivf.Codec.Pq(pq16), ivf, k = 5, nprobe = 16, oversample = 100000),
+        k = 5))
       val aR = meanR(Similarity.recallAtK(truth,
-        Ivf.searchPqResidual(postings, qs, "embedding", "vec_id", ivf,
-          pqr16, k = 5, nprobe = 16, oversample = 100000), k = 5))
+        Ivf.searchCodes(postings, postings, qs, "embedding", "vec_id",
+          Ivf.Codec.PqResidual(pqr16), ivf, k = 5, nprobe = 16,
+          oversample = 100000), k = 5))
       println(f"${"pqr_anchor"}%-16s nprobe=nlist os=inf plain=$aP%.3f " +
         f"resid=$aR%.3f (both must be 1.0)")
     }

@@ -45,9 +45,9 @@ object SegmentsCurve {
       val base = java.nio.file.Files.createTempDirectory(s"segc_$nSegs")
       val root = base.toString
       (0 until nSegs).foreach { i =>
-        Ivf.writeIndexInt8(
+        Ivf.writeIndexCodes(
           Ivf.assign(emb.where(pmod(col("vec_id"), lit(nSegs.toLong)) === i),
-            "embedding", model), "embedding",
+            "embedding", model), "embedding", Ivf.Codec.Int8,
           base.resolve(s"seg=$i").toString, model = Some(model))
       }
       // a realistic sidecar at this segment count: as many retired
@@ -62,8 +62,9 @@ object SegmentsCurve {
           .values.foreach(_.unpersist(true))
         val t0 = System.nanoTime()
         Ivf.searchCodes(
-          Ivf.readSegmentsServing(spark, segs, "vec_id", model),
-          queries, "embedding", "vec_id", model, k = 5, nprobe = 4).count()
+          Ivf.readSegmentsServing(spark, segs, "vec_id", model), emb,
+          queries, "embedding", "vec_id", Ivf.Codec.Int8, model, k = 5,
+          nprobe = 4).count()
         (System.nanoTime() - t0) / 1e9
       }
       // the write path's per-batch fixed cost at this count: one

@@ -55,11 +55,15 @@ object StreamProfile {
       spark.sql(s"DROP TABLE IF EXISTS $qn")
     }
 
+    // each shape streams its own staged copy of the events table
+    def events(f: org.apache.spark.sql.DataFrame => Unit): Unit =
+      graft.streaming.EventStream.withEvents(spark, d)(f)
+
     // 1. floor: stateless passthrough, one batch
-    runAndReport("passthrough")({
-      graft.streaming.EventStream.readEvents(spark, d)
-        .select(col("user_id"), col("event_id"))
-    }, OutputMode.Append())
+    events { ev =>
+      runAndReport("passthrough")(ev.select(col("user_id"),
+        col("event_id")), OutputMode.Append())
+    }
 
     // 2/3. state-heavy shapes across partition counts: at sf0.1 the
     // events stream is 100k rows / ~95k session-window state rows, so
@@ -67,25 +71,28 @@ object StreamProfile {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     for (parts <- Seq("4", "8", "16", "32")) {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
-      runAndReport(s"session_window_p$parts")({
-        graft.streaming.EventStream.readEvents(spark, d)
-          .withWatermark("ts", "0 seconds")
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n"))
-      }, OutputMode.Append())
-      runAndReport(s"interval_join_p$parts")({
-        val a = graft.streaming.EventStream.readEvents(spark, d)
-          .where(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"),
-            col("ts").as("click_ts"))
-        val b = graft.streaming.EventStream.readEvents(spark, d)
-          .where(col("event_type") === "view")
-          .select(col("user_id").as("view_user"),
-            col("event_id").as("view_id"), col("ts").as("view_ts"))
-        graft.streaming.EventStream.intervalJoin(
-          a, "click_ts", b, "view_ts",
-          col("user_id") === col("view_user"), within = "30 MINUTES")
-      }, OutputMode.Append())
+      events { ev =>
+        runAndReport(s"session_window_p$parts")({
+          ev.withWatermark("ts", "0 seconds")
+            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+            .agg(count(lit(1)).as("n"))
+        }, OutputMode.Append())
+      }
+      events { clicks => events { views =>
+        runAndReport(s"interval_join_p$parts")({
+          val a = clicks
+            .where(col("event_type") === "click")
+            .select(col("user_id"), col("event_id").as("click_id"),
+              col("ts").as("click_ts"))
+          val b = views
+            .where(col("event_type") === "view")
+            .select(col("user_id").as("view_user"),
+              col("event_id").as("view_id"), col("ts").as("view_ts"))
+          graft.streaming.EventStream.intervalJoin(
+            a, "click_ts", b, "view_ts",
+            col("user_id") === col("view_user"), within = "30 MINUTES")
+        }, OutputMode.Append())
+      } }
     }
     spark.conf.set("spark.sql.shuffle.partitions", prev)
 

@@ -93,7 +93,8 @@ class AnnSpec extends SparkTestBase {
     val postings = Ivf.assign(emb, "embedding", model)
     val root = java.nio.file.Files.createTempDirectory("ivf_i8")
     Ivf.writeIndex(postings, root.resolve("f32").toString)
-    Ivf.writeIndexInt8(postings, "embedding", root.resolve("i8").toString)
+    Ivf.writeIndexCodes(postings, "embedding", Ivf.Codec.Int8,
+      root.resolve("i8").toString)
     def bytes(p: java.nio.file.Path): Long = {
       val s = java.nio.file.Files.walk(p)
       try s.filter(java.nio.file.Files.isRegularFile(_))
@@ -113,10 +114,10 @@ class AnnSpec extends SparkTestBase {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "nid").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val fromDisk = ids(Ivf.searchCodes(disk, queries, "embedding", "vec_id",
-      model, k = 5, nprobe = 8))
-    val inMem = ids(Ivf.searchInt8(postings, queries, "embedding", "vec_id",
-      model, k = 5, nprobe = 8))
+    val fromDisk = ids(Ivf.searchCodes(disk, emb, queries, "embedding",
+      "vec_id", Ivf.Codec.Int8, model, k = 5, nprobe = 8))
+    val inMem = ids(Ivf.searchCodes(postings, postings, queries, "embedding",
+      "vec_id", Ivf.Codec.Int8, model, k = 5, nprobe = 8))
     assert(fromDisk == inMem)
   }
 
@@ -260,8 +261,8 @@ class AnnSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val f = ids(Ivf.search(postings, queries, "embedding", "vec_id", model,
       k = 5, nprobe = 8))
-    val i8 = ids(Ivf.searchInt8(postings, queries, "embedding", "vec_id",
-      model, k = 5, nprobe = 8))
+    val i8 = ids(Ivf.searchCodes(postings, postings, queries, "embedding",
+      "vec_id", Ivf.Codec.Int8, model, k = 5, nprobe = 8))
     val agree = f.intersect(i8).size.toDouble / f.size
     assert(agree >= 0.8, s"int8-IVF agreement too low: $agree")
   }
@@ -304,13 +305,15 @@ class AnnSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = ids(Similarity.bruteForceTopK(emb, queries, "embedding",
       "vec_id", 5))
-    val working = ids(Ivf.searchPq(postings, queries, "embedding", "vec_id",
-      ivf, pq, k = 5, nprobe = 4, oversample = 4))
+    val working = ids(Ivf.searchCodes(postings, postings, queries,
+      "embedding", "vec_id", Ivf.Codec.Pq(pq), ivf, k = 5, nprobe = 4,
+      oversample = 4))
     val recall = brute.intersect(working).size.toDouble / brute.size
     assert(recall >= 0.3, s"IVF-PQ recall too low: $recall")
     // exhaustive probes + exhaustive oversample ⇒ exact
-    val full = ids(Ivf.searchPq(postings, queries, "embedding", "vec_id",
-      ivf, pq, k = 5, nprobe = 8, oversample = Int.MaxValue / 8))
+    val full = ids(Ivf.searchCodes(postings, postings, queries, "embedding",
+      "vec_id", Ivf.Codec.Pq(pq), ivf, k = 5, nprobe = 8,
+      oversample = Int.MaxValue / 8))
     assert(full == brute)
   }
 
@@ -319,17 +322,19 @@ class AnnSpec extends SparkTestBase {
     val pq = Pq.train(emb, "embedding", "vec_id", m = 8, ksub = 16)
     val postings = Ivf.assign(emb, "embedding", ivf)
     val path = java.nio.file.Files.createTempDirectory("ivfpq").toString + "/idx"
-    Ivf.writeIndexPq(postings, "embedding", pq, ivf, path)
+    Ivf.writeIndexCodes(postings, "embedding", Ivf.Codec.Pq(pq), path,
+      model = Some(ivf))
     val index = Ivf.readIndex(spark, path)
     assert(index.columns.sorted.toSeq == Seq("cluster", "codes", "vec_id"))
     val queries = emb.where(col("vec_id") < 3)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "nid", "sim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fromDisk = rows(Ivf.searchPqIndex(index, emb, queries, "embedding",
-      "vec_id", ivf, pq, k = 5, nprobe = 4, oversample = 4))
-    val inMem = rows(Ivf.searchPq(postings, queries, "embedding", "vec_id",
-      ivf, pq, k = 5, nprobe = 4, oversample = 4))
+    val fromDisk = rows(Ivf.searchCodes(index, emb, queries, "embedding",
+      "vec_id", Ivf.Codec.Pq(pq), ivf, k = 5, nprobe = 4, oversample = 4))
+    val inMem = rows(Ivf.searchCodes(postings, postings, queries,
+      "embedding", "vec_id", Ivf.Codec.Pq(pq), ivf, k = 5, nprobe = 4,
+      oversample = 4))
     assert(fromDisk == inMem)
   }
 

@@ -53,11 +53,12 @@ class BqMergeSpec extends SparkTestBase {
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 4, iters = 2)
     val idx = java.nio.file.Files.createTempDirectory("bq_exact")
       .resolve("index").toString
-    Ivf.writeIndexBq(Ivf.assign(emb, "embedding", model), "embedding", idx)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Bq, idx)
     val n = emb.count().toInt
     val queries = emb.where(col("vec_id") < 3)
-    val got = Ivf.searchBqIndex(Ivf.readIndex(spark, idx), emb, queries,
-        "embedding", "vec_id", model, k = 5, nprobe = 4,
+    val got = Ivf.searchCodes(Ivf.readIndex(spark, idx), emb, queries,
+        "embedding", "vec_id", Ivf.Codec.Bq, model, k = 5, nprobe = 4,
         oversample = n / 5 + 1) // shortlist covers the whole corpus
       .select("qid", "nid", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -75,16 +76,17 @@ class BqMergeSpec extends SparkTestBase {
       .resolve("index").toString
     val inc = java.nio.file.Files.createTempDirectory("bq_inc")
       .resolve("index").toString
-    Ivf.writeIndexBq(Ivf.assign(emb, "embedding", model), "embedding", one)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Bq, one)
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexBq(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", inc)
-    Ivf.appendToIndexBq(emb.where(col("vec_id") > half), "embedding",
-      model, inc)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Bq, inc)
+    Ivf.appendToIndexCodes(emb.where(col("vec_id") > half), "embedding",
+      Ivf.Codec.Bq, model, inc)
     val q = emb.where(col("vec_id") < 5)
     def serve(p: String) =
-      Ivf.searchBqIndex(Ivf.readIndex(spark, p), emb, q, "embedding",
-          "vec_id", model, k = 5)
+      Ivf.searchCodes(Ivf.readIndex(spark, p), emb, q, "embedding",
+          "vec_id", Ivf.Codec.Bq, model, k = 5)
         .select("qid", "nid", "rk").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(serve(inc) == serve(one))
@@ -97,11 +99,12 @@ class BqMergeSpec extends SparkTestBase {
     val b = root.resolve("b").toString
     val one = root.resolve("one").toString
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", a)
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") > half),
-      "embedding", model), "embedding", b)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding", one)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, a)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") > half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, b)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, one)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
     Ivf.saveModel(spark, model, Ivf.modelPath(b))
     Ivf.mergeInto(spark, a, b)
@@ -109,7 +112,8 @@ class BqMergeSpec extends SparkTestBase {
     assert(!java.nio.file.Files.exists(java.nio.file.Path.of(b)))
     val q = emb.where(col("vec_id") < 5)
     def serve(p: String) =
-      Ivf.searchCodes(Ivf.readIndex(spark, p), q, "embedding", "vec_id",
+      Ivf.searchCodes(Ivf.readIndex(spark, p), emb, q, "embedding", "vec_id",
+        Ivf.Codec.Int8,
           model, k = 5)
         .select("qid", "nid", "rk").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -122,20 +126,23 @@ class BqMergeSpec extends SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("merge_dataless")
     val a = root.resolve("a").toString
     val b = root.resolve("b").toString
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding", a)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, a)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
     // b: the shape an empty id-range shard leaves behind — a _model
     // sidecar and nothing else (the sf0.1 hybrid_topk_merged shape)
     Ivf.saveModel(spark, model, Ivf.modelPath(b))
-    val before = Ivf.searchCodes(Ivf.readIndex(spark, a),
-        emb.where(col("vec_id") < 3), "embedding", "vec_id", model, k = 5)
+    val before = Ivf.searchCodes(Ivf.readIndex(spark, a), emb,
+        emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model, k = 5)
       .select("qid", "nid", "rk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     Ivf.mergeInto(spark, a, b)
     assert(!java.nio.file.Files.exists(java.nio.file.Path.of(b)),
       "the empty shard must be consumed")
-    val after = Ivf.searchCodes(Ivf.readIndex(spark, a),
-        emb.where(col("vec_id") < 3), "embedding", "vec_id", model, k = 5)
+    val after = Ivf.searchCodes(Ivf.readIndex(spark, a), emb,
+        emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model, k = 5)
       .select("qid", "nid", "rk")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(after == before)
@@ -147,8 +154,10 @@ class BqMergeSpec extends SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("merge_bad")
     val a = root.resolve("a").toString
     val b = root.resolve("b").toString
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model1), "embedding", a)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model2), "embedding", b)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model1), "embedding",
+      Ivf.Codec.Int8, a)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model2), "embedding",
+      Ivf.Codec.Int8, b)
     // no _model anywhere: loud error, not a silent mix
     intercept[IllegalArgumentException] { Ivf.mergeInto(spark, a, b) }
     Ivf.saveModel(spark, model1, Ivf.modelPath(a))
@@ -165,10 +174,10 @@ class BqMergeSpec extends SparkTestBase {
     val a = root.resolve("a").toString
     val b = root.resolve("b").toString
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", a)
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") > half),
-      "embedding", model), "embedding", b)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, a)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") > half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, b)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
     Ivf.saveModel(spark, model, Ivf.modelPath(b))
     // tombstone one id on EACH side, then merge
@@ -196,11 +205,12 @@ class BqMergeSpec extends SparkTestBase {
     val b = root.resolve("b").toString
     val one = root.resolve("one").toString
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", a)
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") > half),
-      "embedding", model), "embedding", b)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding", one)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, a)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") > half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, b)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, one)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
     Ivf.saveModel(spark, model, Ivf.modelPath(b))
     // simulate the crash: move ONE partition file by hand (exactly
@@ -216,7 +226,8 @@ class BqMergeSpec extends SparkTestBase {
     Ivf.mergeInto(spark, a, b)
     val q = emb.where(col("vec_id") < 5)
     def serve(p: String) =
-      Ivf.searchCodes(Ivf.readIndex(spark, p), q, "embedding", "vec_id",
+      Ivf.searchCodes(Ivf.readIndex(spark, p), emb, q, "embedding", "vec_id",
+        Ivf.Codec.Int8,
           model, k = 5)
         .select("qid", "nid", "rk").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet

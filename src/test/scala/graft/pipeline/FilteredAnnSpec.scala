@@ -64,7 +64,8 @@ class FilteredAnnSpec extends SparkTestBase {
     val postings = Ivf.assign(emb, "embedding", model)
     val root = java.nio.file.Files.createTempDirectory("ivf_pqf")
     val idx = root.resolve("index").toString
-    Ivf.writeIndexPq(postings, "embedding", pq, model, idx)
+    Ivf.writeIndexCodes(postings, "embedding", Ivf.Codec.Pq(pq), idx,
+      model = Some(model))
     val disk = Ivf.readIndex(spark, idx)
     assert(disk.columns.contains("label"),
       "payload column must ride the persisted codes layout")
@@ -74,9 +75,10 @@ class FilteredAnnSpec extends SparkTestBase {
     assert(plan.contains("PushedFilters:") && plan.contains("label"),
       s"label filter not pushed to the codes scan:\n$plan")
     val qs = emb.where(col("vec_id") < 5)
-    val got = Ivf.searchPqIndexFiltered(disk,
+    val got = Ivf.searchCodesFiltered(disk,
       emb.select(col("vec_id"), col("embedding")), qs,
-      "embedding", "vec_id", model, pq, k = 5, filter = f, nprobe0 = 1)
+      "embedding", "vec_id", Ivf.Codec.Pq(pq), model, k = 5, filter = f,
+        nprobe0 = 1)
     val brute = Similarity.bruteForceTopK(emb.where(f), qs,
       "embedding", "vec_id", k = 5)
     assert(ids(got) == ids(brute),
@@ -94,8 +96,9 @@ class FilteredAnnSpec extends SparkTestBase {
       .drop("embedding")
       .write.mode("overwrite").partitionBy("cluster").parquet(idx)
     val qs = emb.where(col("vec_id") < 5)
-    val got = Ivf.searchCodesFiltered(Ivf.readIndex(spark, idx), qs,
-      "embedding", "vec_id", model, k = 5, filter = f, nprobe0 = 1)
+    val got = Ivf.searchCodesFiltered(Ivf.readIndex(spark, idx), emb, qs,
+      "embedding", "vec_id", Ivf.Codec.Int8, model, k = 5, filter = f,
+        nprobe0 = 1)
     // int8 scoring reorders, but under a < k filter the SET of
     // survivors is every match — same as the float path's set
     val brute = Similarity.bruteForceTopK(emb.where(f), qs,

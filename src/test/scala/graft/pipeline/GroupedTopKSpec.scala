@@ -41,18 +41,20 @@ class GroupedTopKSpec extends SparkTestBase {
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val idx = java.nio.file.Files.createTempDirectory("grp_codes")
       .resolve("index").toString
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding", idx)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, idx)
     val index = Ivf.readIndex(spark, idx)
     val qs = emb.where(col("vec_id") < 3)
     val groups = Seq(0, 5)
-    val grouped = Ivf.searchCodesGrouped(index, qs, "embedding", "vec_id",
-      model, k = 5, groupCol = "label",
+    val grouped = Ivf.searchCodesGrouped(index, emb, qs, "embedding",
+      "vec_id", Ivf.Codec.Int8, model, k = 5, groupCol = "label",
       groups = emb.where(col("label").isin(groups.map(Int.box): _*))
         .select(col("label")).distinct(),
       nprobe0 = 2)
     val byFilter = groups.map { g =>
-      Ivf.searchCodesFiltered(index, qs, "embedding", "vec_id", model,
-          k = 5, filter = col("label") === g, nprobe0 = 2)
+      Ivf.searchCodesFiltered(index, emb, qs, "embedding", "vec_id",
+          Ivf.Codec.Int8, model, k = 5, filter = col("label") === g,
+          nprobe0 = 2)
         .withColumn("label", lit(g))
     }.reduce(_ unionByName _)
     assert(rows(grouped) == rows(byFilter))

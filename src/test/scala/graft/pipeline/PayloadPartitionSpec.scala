@@ -147,8 +147,8 @@ class PayloadPartitionSpec extends SparkTestBase {
     // float postings appended into codes: binary would mix schemas
     // and serve null codes silently
     val int8 = base.resolve("int8").toString
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding",
-      int8, payloadCols = Seq("label"))
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, int8, payloadCols = Seq("label"))
     intercept[IllegalArgumentException] {
       Ivf.appendToIndexPayload(emb, "embedding", model, int8)
     }
@@ -156,6 +156,8 @@ class PayloadPartitionSpec extends SparkTestBase {
 
   test("appendToIndexPayloadQuantized encodes through the layout's own " +
     "codec: grown == one-shot on int8/bq/pq, refusals on misuse") {
+    // (one append path for every codes layout now: appendToIndexCodes
+    // with the codec the layout itself persisted, Ivf.Codec.of)
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val base = java.nio.file.Files.createTempDirectory("payappq")
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
@@ -169,20 +171,21 @@ class PayloadPartitionSpec extends SparkTestBase {
     // INT8: grown layout serves identically to a one-shot build
     val grown8 = base.resolve("grown8").toString
     val one8 = base.resolve("one8").toString
-    Ivf.writeIndexInt8(first, "embedding", grown8,
+    Ivf.writeIndexCodes(first, "embedding", Ivf.Codec.Int8, grown8,
       payloadCols = Seq("label"))
-    Ivf.appendToIndexPayloadQuantized(rest, "embedding", model, grown8)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding",
-      one8, payloadCols = Seq("label"))
+    Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.of(spark, grown8),
+      model, grown8)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, one8, payloadCols = Seq("label"))
     assert(contents(grown8) == contents(one8) && contents(grown8).nonEmpty)
     val qs = emb.where(col("vec_id") < 5)
-    val g = Ivf.searchCodesFiltered(Ivf.readIndex(spark, grown8), qs,
-        "embedding", "vec_id", model, k = 4,
+    val g = Ivf.searchCodesFiltered(Ivf.readIndex(spark, grown8), emb, qs,
+        "embedding", "vec_id", Ivf.Codec.Int8, model, k = 4,
         filter = col("label") === 3, nprobe0 = 8)
       .select("qid", "nid", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val o = Ivf.searchCodesFiltered(Ivf.readIndex(spark, one8), qs,
-        "embedding", "vec_id", model, k = 4,
+    val o = Ivf.searchCodesFiltered(Ivf.readIndex(spark, one8), emb, qs,
+        "embedding", "vec_id", Ivf.Codec.Int8, model, k = 4,
         filter = col("label") === 3, nprobe0 = 8)
       .select("qid", "nid", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -195,38 +198,60 @@ class PayloadPartitionSpec extends SparkTestBase {
     // BQ: training-free sign bits — grown layout is row-identical
     val grownB = base.resolve("grownB").toString
     val oneB = base.resolve("oneB").toString
-    Ivf.writeIndexBq(first, "embedding", grownB, payloadCols = Seq("label"))
-    Ivf.appendToIndexPayloadQuantized(rest, "embedding", model, grownB)
-    Ivf.writeIndexBq(Ivf.assign(emb, "embedding", model), "embedding",
-      oneB, payloadCols = Seq("label"))
+    Ivf.writeIndexCodes(first, "embedding", Ivf.Codec.Bq, grownB,
+      payloadCols = Seq("label"))
+    Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.of(spark, grownB),
+      model, grownB)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Bq, oneB, payloadCols = Seq("label"))
     assert(contents(grownB) == contents(oneB))
     // PQ: codebooks loaded from the layout's own persisted pair
     val pq = Pq.train(emb, "embedding", "vec_id", m = 4, ksub = 8,
       iters = 2)
     val grownP = base.resolve("grownP").toString
     val oneP = base.resolve("oneP").toString
-    Ivf.writeIndexPq(first, "embedding", pq, model, grownP,
-      payloadCols = Seq("label"))
-    Ivf.appendToIndexPayloadQuantized(rest, "embedding", model, grownP)
-    Ivf.writeIndexPq(Ivf.assign(emb, "embedding", model), "embedding", pq,
-      model, oneP, payloadCols = Seq("label"))
+    Ivf.writeIndexCodes(first, "embedding", Ivf.Codec.Pq(pq), grownP,
+      payloadCols = Seq("label"), model = Some(model))
+    Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.of(spark, grownP),
+      model, grownP)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Pq(pq), oneP, payloadCols = Seq("label"), model = Some(model))
     assert(contents(grownP) == contents(oneP))
-    // refusals: a FLOAT payload layout (no codec), a PLAIN codes
-    // layout (no payload dirs), and a missing payload column
+    // PQR: residual codes — the append encodes each residual against
+    // the layout's own coarse quantizer and codebooks
+    val pqr = Ivf.trainPqResidual(emb, "embedding", "vec_id", model, m = 4,
+      ksub = 8, iters = 2)
+    val grownR = base.resolve("grownR").toString
+    val oneR = base.resolve("oneR").toString
+    Ivf.writeIndexCodes(first, "embedding", Ivf.Codec.PqResidual(pqr),
+      grownR, payloadCols = Seq("label"), model = Some(model))
+    Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.of(spark, grownR),
+      model, grownR)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.PqResidual(pqr), oneR, payloadCols = Seq("label"),
+      model = Some(model))
+    assert(contents(grownR) == contents(oneR))
+    // refusals: a FLOAT payload layout (no codec) and a missing
+    // payload column
     val float = base.resolve("float").toString
     Ivf.writeIndex(Ivf.assign(emb, "embedding", model), float,
       payloadCols = Seq("label"))
     intercept[RuntimeException] {
-      Ivf.appendToIndexPayloadQuantized(rest, "embedding", model, float)
+      Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.Int8, model, float)
     }
     val plain8 = base.resolve("plain8").toString
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding",
-      plain8)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, plain8)
+    // a PLAIN codes layout takes the same append at its own plain
+    // depth (the mixed-depth hazard the old payload-only refusal
+    // guarded cannot arise): no payload dir appears, every row reads
+    Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.Int8, model, plain8)
+    assert(spark.read.parquet(plain8).count() == emb.count() + rest.count())
+    assert(new java.io.File(plain8).listFiles()
+      .filter(_.getName.startsWith("cluster="))
+      .forall(!_.listFiles().exists(_.isDirectory)))
     intercept[IllegalArgumentException] {
-      Ivf.appendToIndexPayloadQuantized(rest, "embedding", model, plain8)
-    }
-    intercept[IllegalArgumentException] {
-      Ivf.appendToIndexPayloadQuantized(rest.drop("label"), "embedding",
+      Ivf.appendToIndexCodes(rest.drop("label"), "embedding", Ivf.Codec.Int8,
         model, grown8)
     }
     // a foreign coarse quantizer must be refused by the persisted-
@@ -234,7 +259,7 @@ class PayloadPartitionSpec extends SparkTestBase {
     val other = Ivf.train(emb.where(col("vec_id") < 50), "embedding",
       "vec_id", nlist = 4, iters = 1)
     intercept[IllegalArgumentException] {
-      Ivf.appendToIndexPayloadQuantized(rest, "embedding", other, grown8)
+      Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.Int8, other, grown8)
     }
     // ... and on a layout whose WRITER persisted the model
     // (writeIndexInt8's model param), the very FIRST append verifies
@@ -242,13 +267,13 @@ class PayloadPartitionSpec extends SparkTestBase {
     // any prior append has stamped the pair — the first-contact
     // trust window the model-less writers used to leave open
     val fresh8 = base.resolve("fresh8").toString
-    Ivf.writeIndexInt8(first, "embedding", fresh8,
+    Ivf.writeIndexCodes(first, "embedding", Ivf.Codec.Int8, fresh8,
       payloadCols = Seq("label"), model = Some(model))
     intercept[IllegalArgumentException] {
-      Ivf.appendToIndexPayloadQuantized(rest, "embedding", other, fresh8)
+      Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.Int8, other, fresh8)
     }
     // the layout's own model still appends fine, to the one-shot image
-    Ivf.appendToIndexPayloadQuantized(rest, "embedding", model, fresh8)
+    Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.Int8, model, fresh8)
     assert(contents(fresh8) == contents(one8))
   }
 }

@@ -134,15 +134,17 @@ class PqSpec extends SparkTestBase {
         .map(r => (r.getLong(0), r.getLong(1),
           java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
         .sortBy(t => (t._1, t._4)).toSeq
-    val mem = rows(Ivf.searchPqResidual(postings, queries, "embedding",
-      "vec_id", ivf, pqr, k = 5, nprobe = 4, oversample = 4))
+    val mem = rows(Ivf.searchCodes(postings, postings, queries, "embedding",
+      "vec_id", Ivf.Codec.PqResidual(pqr), ivf, k = 5, nprobe = 4,
+      oversample = 4))
     assert(mem.nonEmpty)
     val idx = java.nio.file.Files.createTempDirectory("pqr_idx")
       .resolve("index").toString
-    Ivf.writeIndexPqResidual(postings, "embedding", pqr, ivf, idx)
-    val served = rows(Ivf.searchPqResidualIndex(Ivf.readIndex(spark, idx),
-      emb, queries, "embedding", "vec_id", ivf, pqr, k = 5, nprobe = 4,
-      oversample = 4))
+    Ivf.writeIndexCodes(postings, "embedding", Ivf.Codec.PqResidual(pqr), idx,
+      model = Some(ivf))
+    val served = rows(Ivf.searchCodes(Ivf.readIndex(spark, idx),
+      emb, queries, "embedding", "vec_id", Ivf.Codec.PqResidual(pqr), ivf,
+      k = 5, nprobe = 4, oversample = 4))
     assert(served == mem)
     // the stored index holds m-byte codes, no float vectors
     val schema = spark.read.parquet(idx).schema
@@ -169,8 +171,9 @@ class PqSpec extends SparkTestBase {
     val resid = Ivf.trainPqResidual(emb, "embedding", "vec_id", ivf,
       m = 8, ksub = 16, iters = 3)
     val anchor = mean(Similarity.recallAtK(truth,
-      Ivf.searchPqResidual(postings, queries, "embedding", "vec_id", ivf,
-        resid, k = 5, nprobe = 8, oversample = 100000), k = 5))
+      Ivf.searchCodes(postings, postings, queries, "embedding", "vec_id",
+        Ivf.Codec.PqResidual(resid), ivf, k = 5, nprobe = 8,
+        oversample = 100000), k = 5))
     assert(anchor == 1.0, s"exhaustive residual search must be exact: $anchor")
   }
 
@@ -190,8 +193,8 @@ class PqSpec extends SparkTestBase {
       val pq = Pq.train(emb, "embedding", "vec_id", m = 8, ksub = ksub,
         iters = 3)
       mean(Similarity.recallAtK(truth,
-        Ivf.searchPq(postings, queries, "embedding", "vec_id", ivf, pq,
-          k = 5, nprobe = 4, oversample = 4), k = 5))
+        Ivf.searchCodes(postings, postings, queries, "embedding", "vec_id",
+          Ivf.Codec.Pq(pq), ivf, k = 5, nprobe = 4, oversample = 4), k = 5))
     }
     val r16 = recallAt(16)
     val r256 = recallAt(256)

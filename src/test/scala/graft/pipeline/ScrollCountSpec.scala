@@ -17,7 +17,8 @@ class ScrollCountSpec extends SparkTestBase {
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val idx = java.nio.file.Files.createTempDirectory("scroll_idx")
       .resolve("index").toString
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding", idx)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, idx)
     Ivf.tombstoneVectors(spark, idx,
       emb.where(col("vec_id") % 5 === 1).select(col("vec_id")), "vec_id")
     idx

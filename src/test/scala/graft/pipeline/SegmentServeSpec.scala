@@ -38,8 +38,9 @@ class SegmentServeSpec extends SparkTestBase {
       emb.where(col("vec_id") > half), "embedding", root, model, 1L)
     val segs = graft.streaming.StreamingSegments.segmentRoots(spark, root)
     def serve() = Ivf.searchCodes(
-        Ivf.readSegmentsServing(spark, segs, "vec_id", model),
-        emb.where(col("vec_id") < 3), "embedding", "vec_id", model,
+        Ivf.readSegmentsServing(spark, segs, "vec_id", model), emb,
+        emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model,
         k = 4, nprobe = 8)
       .select("qid", "nid", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -52,8 +53,9 @@ class SegmentServeSpec extends SparkTestBase {
     val single = Ivf.searchCodes(
         Ivf.readSegmentsServing(spark,
           graft.streaming.StreamingSegments.segmentRoots(spark, one),
-          "vec_id", model),
-        emb.where(col("vec_id") < 3), "embedding", "vec_id", model,
+          "vec_id", model), emb,
+        emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model,
         k = 4, nprobe = 8)
       .select("qid", "nid", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -172,10 +174,10 @@ class SegmentServeSpec extends SparkTestBase {
     val b = base.resolve("b").toString
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", a)
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") > half),
-      "embedding", model), "embedding", b)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, a)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") > half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, b)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
     Ivf.saveModel(spark, model, Ivf.modelPath(b))
     val union = Ivf.readSegmentsServing(spark, Seq(a, b), "vec_id", model)
@@ -251,8 +253,8 @@ class SegmentServeSpec extends SparkTestBase {
     val b = base.resolve("b").toString
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", a)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, a)
     // b holds FLOAT vectors — forcing a's codes schema onto it would
     // null-fill silently; the footer check must refuse instead
     Ivf.writeIndex(Ivf.assign(emb.where(col("vec_id") > half),
@@ -271,8 +273,10 @@ class SegmentServeSpec extends SparkTestBase {
     val b = base.resolve("b").toString
     val m1 = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val m2 = Ivf.train(emb, "embedding", "vec_id", nlist = 4, iters = 1)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", m1), "embedding", a)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", m2), "embedding", b)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", m1), "embedding",
+      Ivf.Codec.Int8, a)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", m2), "embedding",
+      Ivf.Codec.Int8, b)
     Ivf.saveModel(spark, m1, Ivf.modelPath(a))
     Ivf.saveModel(spark, m2, Ivf.modelPath(b))
     val e = intercept[IllegalArgumentException] {
@@ -285,7 +289,8 @@ class SegmentServeSpec extends SparkTestBase {
     val base = tmp("segiv3")
     val a = base.resolve("a").toString
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding", a)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, a)
     val e = intercept[IllegalArgumentException] {
       Ivf.readSegmentsServing(spark, Seq(a), "vec_id", model)
     }
@@ -301,13 +306,14 @@ class SegmentServeSpec extends SparkTestBase {
     val pq = Pq.train(emb, "embedding", "vec_id", m = 8, ksub = 16,
       iters = 2)
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", a)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, a)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
     // b is PQ-coded: identical column NAMES (codes: binary) and the
     // same coarse-quantizer witness — only the _pq sidecar betrays it
-    Ivf.writeIndexPq(Ivf.assign(emb.where(col("vec_id") > half),
-      "embedding", model), "embedding", pq, model, b)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") > half),
+      "embedding", model), "embedding", Ivf.Codec.Pq(pq), b,
+        model = Some(model))
     val e = intercept[IllegalArgumentException] {
       Ivf.readSegmentsServing(spark, Seq(a, b), "vec_id", model)
     }
@@ -321,12 +327,12 @@ class SegmentServeSpec extends SparkTestBase {
     val b = base.resolve("b").toString
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val half = emb.agg(max(col("vec_id"))).head().getLong(0) / 2
-    Ivf.writeIndexInt8(Ivf.assign(emb.where(col("vec_id") <= half),
-      "embedding", model), "embedding", a)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") <= half),
+      "embedding", model), "embedding", Ivf.Codec.Int8, a)
     // b is sign-bit coded: same codes: binary footer, same witness,
     // no codebook sidecar on either — only the codec stamp differs
-    Ivf.writeIndexBq(Ivf.assign(emb.where(col("vec_id") > half),
-      "embedding", model), "embedding", b)
+    Ivf.writeIndexCodes(Ivf.assign(emb.where(col("vec_id") > half),
+      "embedding", model), "embedding", Ivf.Codec.Bq, b)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
     Ivf.saveModel(spark, model, Ivf.modelPath(b))
     val e = intercept[IllegalArgumentException] {
@@ -344,27 +350,28 @@ class SegmentServeSpec extends SparkTestBase {
     val base = tmp("segivxc")
     val a = base.resolve("a").toString
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
-    Ivf.writeIndexInt8(Ivf.assign(emb, "embedding", model), "embedding", a)
+    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+      Ivf.Codec.Int8, a)
     // appendToIndexBq onto the int8 layout: both write codes: binary —
     // before the stamp this interleaved silently
     val e = intercept[IllegalArgumentException] {
-      Ivf.appendToIndexBq(emb.where(col("vec_id") < 5), "embedding",
-        model, a)
+      Ivf.appendToIndexCodes(emb.where(col("vec_id") < 5), "embedding",
+        Ivf.Codec.Bq, model, a)
     }
     assert(e.getMessage.contains("int8"))
     // the marker survives a compaction swap (hidden-dir carry-over),
     // so the guard outlives maintenance
     Ivf.compactIndex(spark, a)
     val e2 = intercept[IllegalArgumentException] {
-      Ivf.appendToIndexBq(emb.where(col("vec_id") < 5), "embedding",
-        model, a)
+      Ivf.appendToIndexCodes(emb.where(col("vec_id") < 5), "embedding",
+        Ivf.Codec.Bq, model, a)
     }
     assert(e2.getMessage.contains("int8"))
     // the matching append still works
-    Ivf.appendToIndexInt8(
+    Ivf.appendToIndexCodes(
       emb.where(col("vec_id") < 5)
         .select((col("vec_id") + 500000L).as("vec_id"), col("embedding")),
-      "embedding", model, a)
+      "embedding", Ivf.Codec.Int8, model, a)
     // an UNMARKED non-empty codes layout (pre-marker or foreign)
     // refuses ANY append rather than guessing — stamping the
     // appender's codec onto unknown bytes would corrupt the layout
@@ -373,10 +380,33 @@ class SegmentServeSpec extends SparkTestBase {
     mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(mp, true)
     val e3 = intercept[IllegalArgumentException] {
-      Ivf.appendToIndexInt8(emb.where(col("vec_id") < 5), "embedding",
-        model, a)
+      Ivf.appendToIndexCodes(emb.where(col("vec_id") < 5), "embedding",
+        Ivf.Codec.Int8, model, a)
     }
     assert(e3.getMessage.contains("NO _codec marker"))
+  }
+
+  test("int8 and BQ appends verify the layout's persisted quantizer") {
+    val base = tmp("segivfq")
+    val ma = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
+    val mb = Ivf.train(emb, "embedding", "vec_id", nlist = 4, iters = 1)
+    val inc = emb.where(col("vec_id") < 5)
+      .select((col("vec_id") + 500000L).as("vec_id"), col("embedding"))
+    Seq(Ivf.Codec.Int8, Ivf.Codec.Bq).foreach { codec =>
+      val p = base.resolve(codec.marker).toString
+      Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", ma), "embedding",
+        codec, p, model = Some(ma))
+      // codes assigned under a foreign quantizer would serve with
+      // silently skewed probes: refused before any byte lands
+      val e = intercept[IllegalArgumentException] {
+        Ivf.appendToIndexCodes(inc, "embedding", codec, mb, p)
+      }
+      assert(e.getMessage.contains("DIFFERENT coarse quantizer"))
+      assert(spark.read.parquet(p).count() == emb.count())
+      // the layout's own quantizer still appends
+      Ivf.appendToIndexCodes(inc, "embedding", codec, ma, p)
+      assert(spark.read.parquet(p).count() == emb.count() + inc.count())
+    }
   }
 
   test("multivec segments serve refuses a foreign quantizer") {
@@ -458,14 +488,17 @@ class SegmentServeSpec extends SparkTestBase {
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val keep = emb.where(col("vec_id") < 100)
     val dead = emb.where(col("vec_id") >= 100 && col("vec_id") < 110)
-    Ivf.writeIndexInt8(Ivf.assign(keep, "embedding", model), "embedding", a)
+    Ivf.writeIndexCodes(Ivf.assign(keep, "embedding", model), "embedding",
+      Ivf.Codec.Int8, a)
     Ivf.saveModel(spark, model, Ivf.modelPath(a))
-    Ivf.writeIndexInt8(Ivf.assign(dead, "embedding", model), "embedding", b)
+    Ivf.writeIndexCodes(Ivf.assign(dead, "embedding", model), "embedding",
+      Ivf.Codec.Int8, b)
     Ivf.saveModel(spark, model, Ivf.modelPath(b))
     Ivf.tombstoneVectors(spark, b, dead.select(col("vec_id")), "vec_id")
     val before = rset(Ivf.searchCodes(
-      Ivf.readSegmentsServing(spark, Seq(a, b), "vec_id", model),
-      emb.where(col("vec_id") < 3), "embedding", "vec_id", model,
+      Ivf.readSegmentsServing(spark, Seq(a, b), "vec_id", model), emb,
+      emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model,
       k = 5, nprobe = 4), "qid", "nid", "sim", "rk")
     Ivf.mergeInto(spark, a, b, "vec_id") // must not throw
     val fs = new org.apache.hadoop.fs.Path(b)
@@ -473,8 +506,9 @@ class SegmentServeSpec extends SparkTestBase {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(b)),
       "the dead src must be consumed wholesale")
     val after = rset(Ivf.searchCodes(
-      Ivf.readSegmentsServing(spark, Seq(a), "vec_id", model),
-      emb.where(col("vec_id") < 3), "embedding", "vec_id", model,
+      Ivf.readSegmentsServing(spark, Seq(a), "vec_id", model), emb,
+      emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model,
       k = 5, nprobe = 4), "qid", "nid", "sim", "rk")
     assert(after == before)
     assert(after.nonEmpty)

@@ -336,17 +336,17 @@ class TombstoneSpec extends SparkTestBase {
       .select((col("vec_id") + 100000L).as("vec_id"), col("embedding"))
     val idx = java.nio.file.Files.createTempDirectory("tomb3")
       .resolve("index").toString
-    Ivf.writeIndexInt8(
+    Ivf.writeIndexCodes(
       Ivf.assign(emb.unionByName(decoys), "embedding", model),
-      "embedding", idx)
+      "embedding", Ivf.Codec.Int8, idx)
     Ivf.tombstoneVectors(spark, idx, decoys.select(col("vec_id")), "vec_id")
     Ivf.compactIndex(spark, idx) // must NOT shed the mask
     val serving = Ivf.readIndexServing(spark, idx, "vec_id")
     assert(serving.where(col("vec_id") >= 100000L).count() == 0,
       "compaction shed the tombstone mask")
     // and the serve path composes: codes search over the serving read
-    val got = Ivf.searchCodes(serving, emb.where(col("vec_id") < 3),
-      "embedding", "vec_id", model, k = 5, nprobe = 8)
+    val got = Ivf.searchCodes(serving, emb, emb.where(col("vec_id") < 3),
+      "embedding", "vec_id", Ivf.Codec.Int8, model, k = 5, nprobe = 8)
       .select("nid").collect().map(_.getLong(0))
     assert(got.nonEmpty && got.forall(_ < 100000L))
   }

@@ -50,12 +50,13 @@ class SessionSpec extends SparkTestBase {
   }
 
   test("M7: watermarked windowed aggregation runs over the event stream") {
-    val sdf = graft.streaming.EventStream.readEvents(spark, sf())
-    val agg = graft.streaming.EventStream.hourlyWindowed(sdf)
     // update mode emits rows as the watermark allows; over a static
     // source one batch yields the full aggregation state
-    val out = graft.streaming.EventStream.runToMemory(spark, agg,
-      org.apache.spark.sql.streaming.OutputMode.Update())
+    val out = graft.streaming.EventStream.withEvents(spark, sf()) { sdf =>
+      graft.streaming.EventStream.runToMemory(spark,
+        graft.streaming.EventStream.hourlyWindowed(sdf),
+        org.apache.spark.sql.streaming.OutputMode.Update())
+    }
     assert(out.columns.toSet == Set("window", "event_type", "n", "sum_value"))
     assert(out.count() > 0)
     val total = out.agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
@@ -137,10 +138,12 @@ class SessionSpec extends SparkTestBase {
   }
 
   test("streaming sessionize matches the batch gaps-and-islands query") {
-    val sdf = graft.streaming.EventStream.readEvents(spark, sf())
-    val sess = graft.streaming.EventStream.sessionize(spark, sdf).toDF()
-    val streaming = graft.streaming.EventStream.runToMemory(spark, sess,
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    val streaming = graft.streaming.EventStream.withEvents(spark, sf()) {
+        sdf =>
+          graft.streaming.EventStream.runToMemory(spark,
+            graft.streaming.EventStream.sessionize(spark, sdf).toDF(),
+            org.apache.spark.sql.streaming.OutputMode.Append())
+      }
       .orderBy("user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val batch = graft.queries.Queries.analytics("events_sessionize")(spark, sf())

@@ -10,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * a completed run, a refusal at open (a mismatched model pair), and
   * a per-batch function that throws all delete the stage dir (under
   * `java.io.tmpdir`) and the checkpoint dir (under the configured
-  * scratch dir).
+  * scratch dir). The events streams' staged copy follows the same
+  * rule.
   */
 class StagedIngestSpec extends SparkTestBase {
 
@@ -45,6 +46,17 @@ class StagedIngestSpec extends SparkTestBase {
     }
     leavesNoScratch {
       assert(StreamingTopTerms.summarize(spark, sf(), 64).count() > 0)
+    }
+  }
+
+  test("an events stream deletes its staged copy of the events table") {
+    leavesNoScratch {
+      val served = EventStream.withEvents(spark, sf()) { events =>
+        EventStream.runToMemory(spark, events.select(col("user_id")),
+          org.apache.spark.sql.streaming.OutputMode.Append())
+      }
+      // the memory sink holds the rows: readable after the copy is gone
+      assert(served.count() > 0)
     }
   }
 

@@ -114,16 +114,17 @@ class StreamingIvfSpec extends SparkTestBase {
       m = 8, ksub = 16, iters = 2)
     def serve(idx: String, m: graft.pipeline.IvfModel,
               p: graft.pipeline.Pq.PqModel) =
-      Ivf.searchPqResidualIndex(Ivf.readIndex(spark, idx), e,
-          e.where(col("vec_id") < 3), "embedding", "vec_id", m, p,
+      Ivf.searchCodes(Ivf.readIndex(spark, idx), e,
+          e.where(col("vec_id") < 3), "embedding", "vec_id",
+          Ivf.Codec.PqResidual(p), m,
           k = 5, nprobe = 8)
         .select("qid", "nid", "rk").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
         .sortBy(t => (t._1, t._3)).toSeq
     val oneShot = java.nio.file.Files.createTempDirectory("sivfc_os")
       .resolve("index").toString
-    Ivf.writeIndexPqResidual(Ivf.assign(e, "embedding", ivfM),
-      "embedding", pq, ivfM, oneShot)
+    Ivf.writeIndexCodes(Ivf.assign(e, "embedding", ivfM),
+      "embedding", Ivf.Codec.PqResidual(pq), oneShot, model = Some(ivfM))
     val grown = java.nio.file.Files.createTempDirectory("sivfc_gr")
       .resolve("index").toString
     StreamingIvf.ingestCodes(spark, sf(), ivfM, pq, grown,

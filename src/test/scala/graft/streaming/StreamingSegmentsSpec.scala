@@ -17,8 +17,9 @@ class StreamingSegmentsSpec extends SparkTestBase {
   private def serveAll(root: String, model: graft.pipeline.IvfModel) =
     Ivf.searchCodes(
         Ivf.readSegmentsServing(spark,
-          StreamingSegments.segmentRoots(spark, root), "vec_id", model),
-        emb.where(col("vec_id") < 3), "embedding", "vec_id", model,
+          StreamingSegments.segmentRoots(spark, root), "vec_id", model), emb,
+        emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model,
         k = 4, nprobe = 8)
       .select("qid", "nid", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet

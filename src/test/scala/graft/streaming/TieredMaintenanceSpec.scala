@@ -44,8 +44,9 @@ class TieredMaintenanceSpec extends SparkTestBase {
   private def serveDense(root: String, model: graft.pipeline.IvfModel) =
     Ivf.searchCodes(
       Ivf.readSegmentsServing(spark,
-        StreamingSegments.segmentRoots(spark, root), "vec_id", model),
-      emb.where(col("vec_id") < 3), "embedding", "vec_id", model,
+        StreamingSegments.segmentRoots(spark, root), "vec_id", model), emb,
+      emb.where(col("vec_id") < 3), "embedding", "vec_id", Ivf.Codec.Int8,
+        model,
       k = 5, nprobe = 4)
 
   test("dense: equal segments cascade to one; masked serve is row-identical") {

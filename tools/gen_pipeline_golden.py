@@ -1423,7 +1423,7 @@ def gen_ann_pq_dist(emb, k=5, m=8, ksub=16, oversample=4):
 
 def gen_ivf_pq(emb, k=5, nlist=16, iters=3, nprobe=4, m=8, ksub=16,
                oversample=4, out="ivf_topk_pq"):
-    """Mirror of Ivf.searchPq: flat IVF clusters bound the candidate
+    """Mirror of Ivf.searchCodes under Codec.Pq: flat IVF clusters bound the candidate
     set, ADC over PQ codes ranks it, exact cosine rescores the
     oversampled survivors."""
     cents = ivf_train(emb, nlist, iters)
@@ -1458,7 +1458,7 @@ def gen_ivf_pq(emb, k=5, nlist=16, iters=3, nprobe=4, m=8, ksub=16,
 
 
 def gen_ivf_bq(emb, k=5, nlist=16, iters=3, nprobe=4, oversample=4):
-    """Mirror of Ivf.searchBqIndex: sign-bit codes (bit j set iff
+    """Mirror of Ivf.searchCodes under Codec.Bq: sign-bit codes (bit j set iff
     v[j] > 0, strict), symmetric Hamming shortlist of the probed
     clusters' postings (ham asc, nid asc — deterministic), exact
     cosine rescore on the k*oversample survivors."""
@@ -1491,7 +1491,7 @@ def gen_ivf_bq(emb, k=5, nlist=16, iters=3, nprobe=4, oversample=4):
 
 def gen_ivf_pqr(emb, k=5, nlist=16, iters=3, nprobe=4, m=8, ksub=16,
                 oversample=4):
-    """Mirror of Ivf.searchPqResidual (IVF-ADC): PQ codebooks fit on
+    """Mirror of Ivf.searchCodes under Codec.PqResidual (IVF-ADC): PQ codebooks fit on
     RESIDUALS to the assigned coarse centroid (exact double subtract
     then f32 narrow, component-wise — the Scala kernel's rounding),
     ADC score = dot(q, centroid(cell)) + sum of residual-LUT entries,
