@@ -2485,10 +2485,13 @@ object Ivf {
   def searchCodes(index: DataFrame, vectors: DataFrame, queries: DataFrame,
                   vecCol: String, idCol: String, codec: Codec,
                   model: IvfModel, k: Int, nprobe: Int = 4,
-                  oversample: Int = 4): DataFrame =
+                  oversample: Int = DefaultOversample): DataFrame =
     codesTopK(index, vectors,
       queries.select(col(idCol).as("qid"), col(vecCol).as("qv")),
       vecCol, idCol, codec, model, k, nprobe, oversample)
+
+  /** The shortlist codecs' default k·oversample factor. */
+  private final val DefaultOversample = 4
 
   /** [[searchCodes]]' probe, score and rescore over a query frame
     * `q0` of (qid, qv, carried columns…): the carried columns ride
@@ -2563,7 +2566,7 @@ object Ivf {
                           queries: DataFrame, vecCol: String,
                           idCol: String, codec: Codec, model: IvfModel,
                           k: Int, filter: Column, nprobe0: Int = 4,
-                          oversample: Int = 4): DataFrame = {
+                          oversample: Int = DefaultOversample): DataFrame = {
     val filtered = index.where(filter)
     adaptiveFill(queries, idCol, k, model.nlist, nprobe0)((qs, p) =>
       searchCodes(filtered, vectors, qs, vecCol, idCol, codec, model, k,
@@ -2641,7 +2644,7 @@ object Ivf {
                          queries: DataFrame, vecCol: String, idCol: String,
                          codec: Codec, model: IvfModel, k: Int,
                          groupCol: String, groups: DataFrame,
-                         nprobe0: Int = 4, oversample: Int = 4,
+                         nprobe0: Int = 4,
                          excludeSelf: Boolean = true): DataFrame = {
     val qx = queries.select(col(idCol).as("__oqid"), col(vecCol).as("qv"))
       .crossJoin(broadcast(groups.select(col(groupCol).as("__grp")).distinct()))
@@ -2650,7 +2653,7 @@ object Ivf {
       codesTopK(index, vectors,
         qs.select(col("gqid").as("qid"), col("__oqid"), col("__grp"),
           col("qv")),
-        vecCol, idCol, codec, model, k, p, oversample,
+        vecCol, idCol, codec, model, k, p, DefaultOversample,
         keys = Seq("__grp" -> col(groupCol)),
         self = if (excludeSelf) Some("__oqid") else None)
     }

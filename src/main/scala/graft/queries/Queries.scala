@@ -3104,7 +3104,7 @@ object Queries {
 
     // the QUANTIZED payload-append (the last payload lifecycle
     // asymmetry): an int8 payload layout grown through
-    // appendToIndexPayloadQuantized — the increment encoded through
+    // appendToIndexCodes(Codec.Int8) — the increment encoded through
     // the layout's own _codec identity under the verified frozen
     // model — serves exactly the one-shot full-corpus int8 golden
     // (assignment and int8 encoding are pure per-row functions, and
@@ -3346,8 +3346,9 @@ object Queries {
 
     // the PERSISTED int8 lifecycle: cluster-partitioned 1-byte-per-dim
     // codes on disk, served by searchCodes (queries quantize on the
-    // fly; postings never touch a float) — ≡ the in-memory searchInt8
-    // by construction, so the oracle is the ivf_topk_int8 golden
+    // fly; postings never touch a float) — ≡ searchCodes(Codec.Int8)
+    // over in-memory float postings by construction, so the oracle is
+    // the ivf_topk_int8 golden
     "ivf_topk_int8_indexed" -> ((s, d) => {
       val emb = tbl(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val model = graft.pipeline.Ivf.train(emb, "embedding", "vec_id",
@@ -4357,9 +4358,10 @@ object Queries {
 
     // the residual codes layout's incremental lifecycle — AND its
     // restartability: the serve runs with the (coarse, codebook)
-    // pair RELOADED from the layout (writeIndexPqResidual persists
-    // the triple), so this row fails loudly if either persisted
-    // model drifts from the one that encoded the codes
+    // pair RELOADED from the layout (writeIndexCodes with
+    // Codec.PqResidual persists the triple), so this row fails loudly
+    // if either persisted model drifts from the one that encoded the
+    // codes
     "ivf_topk_pqr_incremental" -> ((s, d) => {
       val emb = tbl(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val ivf = graft.pipeline.Ivf.train(emb, "embedding", "vec_id",
@@ -6051,8 +6053,9 @@ object Queries {
     // the PERSISTED IVF-PQ lifecycle: write the cluster-partitioned
     // m-byte codes layout, serve from disk (probe reads codes only;
     // the ≤ k·oversample ADC survivors back-join the vector table for
-    // the exact rescore) — ≡ the in-memory searchPq by construction,
-    // so the oracle is the ivf_topk_pq golden itself
+    // the exact rescore) — ≡ searchCodes(Codec.Pq) over in-memory
+    // float postings by construction, so the oracle is the ivf_topk_pq
+    // golden itself
     "ivf_topk_pq_indexed" -> ((s, d) => {
       val emb = tbl(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val ivf = graft.pipeline.Ivf.train(emb, "embedding", "vec_id",
@@ -6074,8 +6077,8 @@ object Queries {
     }),
 
     // the raw-PQ codes layout's incremental lifecycle, serving from
-    // the RELOADED pair — the appendToIndexPq twin pinned like its
-    // int8 and residual siblings (grown ≡ one-shot, same golden)
+    // the RELOADED pair — appendToIndexCodes(Codec.Pq) pinned like
+    // its int8 and residual siblings (grown ≡ one-shot, same golden)
     "ivf_topk_pq_incremental" -> ((s, d) => {
       val emb = tbl(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val ivf = graft.pipeline.Ivf.train(emb, "embedding", "vec_id",
@@ -6217,9 +6220,9 @@ object Queries {
 
     // the PERSISTED residual-codes lifecycle: cluster-partitioned
     // m-byte residual codes on disk, candidate path never touches a
-    // float vector, survivors back-join for the exact rescore — ≡ the
-    // in-memory searchPqResidual by construction, so the oracle is
-    // the ivf_topk_pqr golden itself
+    // float vector, survivors back-join for the exact rescore — ≡
+    // searchCodes(Codec.PqResidual) over in-memory float postings by
+    // construction, so the oracle is the ivf_topk_pqr golden itself
     "ivf_topk_pqr_indexed" -> ((s, d) => {
       val emb = tbl(s, d, "embeddings").select(col("vec_id"), col("embedding"))
       val ivf = graft.pipeline.Ivf.train(emb, "embedding", "vec_id",

@@ -38,26 +38,30 @@ class GroupedTopKSpec extends SparkTestBase {
   }
 
   test("codes-layout grouped == per-group filtered codes composition") {
+    // int8 ranks by its final score; BQ takes the shortlist-and-
+    // rescore path, back-joining `emb` for the exact cosine
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
-    val idx = java.nio.file.Files.createTempDirectory("grp_codes")
-      .resolve("index").toString
-    Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
-      Ivf.Codec.Int8, idx)
-    val index = Ivf.readIndex(spark, idx)
     val qs = emb.where(col("vec_id") < 3)
     val groups = Seq(0, 5)
-    val grouped = Ivf.searchCodesGrouped(index, emb, qs, "embedding",
-      "vec_id", Ivf.Codec.Int8, model, k = 5, groupCol = "label",
-      groups = emb.where(col("label").isin(groups.map(Int.box): _*))
-        .select(col("label")).distinct(),
-      nprobe0 = 2)
-    val byFilter = groups.map { g =>
-      Ivf.searchCodesFiltered(index, emb, qs, "embedding", "vec_id",
-          Ivf.Codec.Int8, model, k = 5, filter = col("label") === g,
-          nprobe0 = 2)
-        .withColumn("label", lit(g))
-    }.reduce(_ unionByName _)
-    assert(rows(grouped) == rows(byFilter))
+    for (codec <- Seq(Ivf.Codec.Int8, Ivf.Codec.Bq)) {
+      val idx = java.nio.file.Files.createTempDirectory("grp_codes")
+        .resolve("index").toString
+      Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
+        codec, idx)
+      val index = Ivf.readIndex(spark, idx)
+      val grouped = Ivf.searchCodesGrouped(index, emb, qs, "embedding",
+        "vec_id", codec, model, k = 5, groupCol = "label",
+        groups = emb.where(col("label").isin(groups.map(Int.box): _*))
+          .select(col("label")).distinct(),
+        nprobe0 = 2)
+      val byFilter = groups.map { g =>
+        Ivf.searchCodesFiltered(index, emb, qs, "embedding", "vec_id",
+            codec, model, k = 5, filter = col("label") === g,
+            nprobe0 = 2)
+          .withColumn("label", lit(g))
+      }.reduce(_ unionByName _)
+      assert(rows(grouped) == rows(byFilter), codec.toString)
+    }
   }
 
   test("group values containing the separator never collide fill keys") {

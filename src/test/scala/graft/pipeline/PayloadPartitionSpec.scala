@@ -262,7 +262,7 @@ class PayloadPartitionSpec extends SparkTestBase {
       Ivf.appendToIndexCodes(rest, "embedding", Ivf.Codec.Int8, other, grown8)
     }
     // ... and on a layout whose WRITER persisted the model
-    // (writeIndexInt8's model param), the very FIRST append verifies
+    // (writeIndexCodes' model param), the very FIRST append verifies
     // instead of trusting: the foreign quantizer is refused before
     // any prior append has stamped the pair — the first-contact
     // trust window the model-less writers used to leave open

@@ -352,7 +352,7 @@ class SegmentServeSpec extends SparkTestBase {
     val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     Ivf.writeIndexCodes(Ivf.assign(emb, "embedding", model), "embedding",
       Ivf.Codec.Int8, a)
-    // appendToIndexBq onto the int8 layout: both write codes: binary —
+    // a Codec.Bq append onto the int8 layout: both write codes: binary —
     // before the stamp this interleaved silently
     val e = intercept[IllegalArgumentException] {
       Ivf.appendToIndexCodes(emb.where(col("vec_id") < 5), "embedding",
