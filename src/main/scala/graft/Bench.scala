@@ -465,12 +465,17 @@ object Bench {
     * captures' per-query medians (tools/make_bench_floors.py), the
     * yardstick the per-row gate compares each median against. Flat
     * `{"name": seconds}` JSON; absent file = no per-row gating (the
-    * feature degrades to the r15 behavior, never blocks a bench).
+    * feature degrades to the r15 behavior, never blocks a bench) —
+    * warned on stderr, since an A/B between two trees where only one
+    * has the file re-measures rows on one side only.
     */
   private[graft] def loadFloors(path: java.nio.file.Path =
       java.nio.file.Path.of("BENCH_FLOORS.json")): Map[String, Double] =
-    if (!java.nio.file.Files.exists(path)) Map.empty
-    else """"([^"]+)"\s*:\s*([0-9][0-9.eE+-]*)""".r
+    if (!java.nio.file.Files.exists(path)) {
+      System.err.println(s"[bench] WARNING: $path is missing - the " +
+        "per-row floor re-measure is OFF for this run")
+      Map.empty
+    } else """"([^"]+)"\s*:\s*([0-9][0-9.eE+-]*)""".r
       .findAllMatchIn(java.nio.file.Files.readString(path))
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   private[graft] def contended(reps: Seq[Double]): Boolean =

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Tombstones
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -331,26 +332,25 @@ object Bm25 {
     graft.core.Pinned.release(kept)
   }
 
-  /** Tombstone sidecar at the index ROOT (beside postings/df/stats —
-    * the per-sub-layout compactions never touch it, so the mask
-    * survives maintenance until [[foldTombstones]] retires it).
-    */
-  def tombPath(indexPath: String): String = s"$indexPath/_tombstones"
-
   /** LUCENE-MODEL deletion for the lexical index: an O(|ids|)
-    * sidecar append masks the docs from every [[searchIndex]]
-    * candidate set IMMEDIATELY, while collection statistics (N,
-    * total tokens, df) stay as persisted until the fold — exactly
-    * how a deleted-but-unmerged Lucene segment scores. The
-    * stats-exact delete remains [[deleteDocs]]; this is the
-    * serving-latency path for erasure queues that cannot pay an
-    * O(index) rewrite per request.
+    * sidecar append ([[graft.core.Tombstones]], at the index ROOT
+    * beside postings/df/stats — the per-sub-layout compactions never
+    * touch it) masks the docs from every [[searchIndex]] candidate
+    * set IMMEDIATELY, while collection statistics (N, total tokens,
+    * df) stay as persisted until the fold — exactly how a
+    * deleted-but-unmerged Lucene segment scores. The stats-exact
+    * delete remains [[deleteDocs]]; this is the serving-latency path
+    * for erasure queues that cannot pay an O(index) rewrite per
+    * request. The data witness is the `stats` table ([[deleteDocs]]
+    * removes the whole root when no doc survives): an absent or
+    * emptied index takes no sidecar.
     */
   def tombstoneDocs(spark: SparkSession, path: String,
-                    ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).as("doc"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(tombPath(path))
+                    ids: DataFrame): Unit = {
+    recoverLayouts(spark, path)
+    Tombstones.add(spark, path, ids, "doc",
+      Tombstones.hasData(spark, path, "stats"))
+  }
 
   /** Retire the tombstone set: fold into a physical [[deleteDocs]]
     * (which recomputes df/stats from the survivors — the "merge"
@@ -359,53 +359,28 @@ object Bm25 {
     * anti-joins nothing.
     */
   def foldTombstones(spark: SparkSession, path: String): Unit = {
-    val tp = new org.apache.hadoop.fs.Path(tombPath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tp)) return
-    deleteDocs(spark, path,
-      spark.read.parquet(tombPath(path)).select(col("doc")).distinct())
-    fs.delete(tp, true)
+    recoverLayouts(spark, path)
+    Tombstones.fold(spark, path, "doc",
+      Tombstones.hasData(spark, path, "stats"))(deleteDocs(spark, path, _))
   }
 
   /** KEYSET pagination over the lexical index — [[Ivf.scroll]]'s
     * doc-listing semantics on this tier (what a dashboard or an
     * export walks without a search): one id-ordered page of DISTINCT
     * live doc ids strictly after `afterId`, tombstone-masked,
-    * optionally filtered over the `doc` column. Plan shape: the
-    * keyset predicate and filter push into the postings scan
-    * (doc > after prunes pages via column stats), the distinct
-    * partially aggregates map-side, and the cut is
-    * TakeOrderedAndProject — O(page) rows cross the driver; each
-    * next page re-enters with the previous page's last id, so no
-    * OFFSET scan-and-discard at any depth. Honest cost note: a doc
-    * listing has no query terms to prune buckets by — the scan
-    * touches every bucket's doc column (column-pruned to one
-    * column), the price of not maintaining a separate doc table.
+    * optionally filtered over the `doc` column
+    * ([[graft.core.Tombstones.page]] over the postings). Honest cost
+    * note: a doc listing has no query terms to prune buckets by — the
+    * scan touches every bucket's doc column (column-pruned to one
+    * column), the price of not maintaining a separate doc table. A
+    * missing or emptied index yields an empty page.
     */
   def scroll(spark: SparkSession, path: String, afterId: Option[Long],
              limit: Int,
              filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(limit > 0, "scroll limit must be positive")
-    maskedLiveDocs(spark, path,
-      filter.getOrElse(lit(true)) &&
-        afterId.map(a => col("doc") > a).getOrElse(lit(true)))
-      .distinct().orderBy(col("doc")).limit(limit)
-  }
-
-  /** The filtered, tombstone-masked (doc) column of the postings —
-    * the live-doc prefix [[scroll]] and [[countDocs]] share (the
-    * [[graft.core.LiveDocs]] mask core, now shared across the tiers,
-    * under this tier's recovery preamble; scoredIndexCandidates keeps
-    * its own mask because it masks the FULL per-segment postings
-    * rows). Routing through the core also heals a revive-swap-parked
-    * tombstone sidecar before the exists check — the one recovery
-    * this tier's copy used to miss.
-    */
-  private def maskedLiveDocs(spark: SparkSession, path: String,
-                             pred: org.apache.spark.sql.Column): DataFrame = {
     recoverLayouts(spark, path)
-    graft.core.LiveDocs.masked(spark, s"$path/postings", tombPath(path),
-      "doc", pred)
+    Tombstones.page(spark, path, s"$path/postings",
+      Tombstones.hasData(spark, path, "stats"), afterId, limit, filter)
   }
 
   /** EXACT count of live (served) documents, optionally filtered —
@@ -413,12 +388,15 @@ object Bm25 {
     * index: distinct docs over the masked postings, never the stats
     * table (stats keep tombstoned docs' mass until the fold — the
     * Lucene model — but a COUNT must report what serving shows).
-    * Returns a one-row (cnt) frame.
+    * Returns a one-row (cnt) frame; zero on a missing or emptied
+    * index.
     */
   def countDocs(spark: SparkSession, path: String,
-                filter: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    maskedLiveDocs(spark, path, filter.getOrElse(lit(true)))
-      .agg(countDistinct(col("doc")).as("cnt"))
+                filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    recoverLayouts(spark, path)
+    Tombstones.count(spark, path, s"$path/postings",
+      Tombstones.hasData(spark, path, "stats"), filter)
+  }
 
   /** SEGMENT MERGE — absorb the index at `srcPath` into `dstPath`
     * with ZERO recompute: because readers SUM the stats rows and the
@@ -622,11 +600,7 @@ object Bm25 {
         .where(graft.core.PartitionIn.inSet(postRead, "bucket", bucketSet) &&
           col("term").isInCollection(terms) &&
           docFilter.getOrElse(lit(true)))
-      val tp = new org.apache.hadoop.fs.Path(tombPath(p))
-      if (!tp.getFileSystem(hc).exists(tp)) postings0
-      else postings0.join(
-        spark.read.parquet(tombPath(p)).select(col("doc")).distinct(),
-        Seq("doc"), "left_anti")
+      Tombstones.mask(spark, postings0, p, "doc")
     }.reduce(_ unionByName _)
     val num = lit(22L) * col("tf") * lit(tTokens)
     val den = lit(10L) * lit(tTokens) * col("tf") + lit(3L) * lit(tTokens) +

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Tombstones
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -821,25 +822,28 @@ object Ivf {
   def deleteVectors(spark: SparkSession, path: String, ids: DataFrame,
                     idCol: String): Unit = {
     guardNotPayloadPartitioned(spark, path, "deleteVectors")
+    rewriteWithout(spark, path, ids, idCol, Seq("cluster"))
+  }
+
+  /** The physical delete under both [[deleteVectors]] and
+    * [[foldTombstones]]: one crash-safe rewrite anti-joining ONE
+    * pinned id set (first column of `ids`, as `idCol`).
+    */
+  private def rewriteWithout(spark: SparkSession, path: String,
+                             ids: DataFrame, idCol: String,
+                             partitionCols: Seq[String],
+                             dropHidden: Set[String] = Set.empty): Unit = {
     val del = ids.select(col(ids.columns.head).as(idCol))
       .localCheckpoint(true)
-    graft.core.ParquetCompact.rewrite(spark, path,
-      partitionCols = Seq("cluster"),
-      transform = p => p.join(del, Seq(idCol), "left_anti"))
+    graft.core.ParquetCompact.rewrite(spark, path, partitionCols,
+      transform = p => p.join(del, Seq(idCol), "left_anti"),
+      dropHidden = dropHidden)
     graft.core.Pinned.release(del)
   }
 
-  /** Canonical location of a layout's tombstone set: `_tombstones`
-    * INSIDE the layout — hidden from Spark's file index like
-    * `_model`, carried across every compaction/recluster swap by the
-    * hidden-dir carry-over (tombstones must survive a PLAIN
-    * compaction; only [[foldTombstones]] retires them).
-    */
-  def tombPath(indexPath: String): String = s"$indexPath/_tombstones"
-
   /** TOMBSTONE deletion — right-to-be-forgotten at SERVING latency:
-    * appends the ids to the layout's `_tombstones` sidecar (an
-    * O(|ids|) write) instead of rewriting the postings
+    * appends the ids to the layout's [[graft.core.Tombstones]] sidecar
+    * (an O(|ids|) write) instead of rewriting the postings
     * ([[deleteVectors]] — an O(index) pass). Every serving read
     * through [[readIndexServing]] anti-joins the set, so the deleted
     * vectors vanish from results IMMEDIATELY; the physical bytes
@@ -857,69 +861,24 @@ object Ivf {
     * via a PLAIN append serves NOTHING for it until the tombstone
     * folds — delete-then-re-add must fold between the two, or go
     * through [[upsertVectors]]/[[upsertVersioned]], which REVIVE
-    * their ids from the mask ([[graft.core.TombstoneSidecar]]).
+    * their ids from the mask ([[Tombstones.revive]]).
     */
   def tombstoneVectors(spark: SparkSession, path: String, ids: DataFrame,
                        idCol: String): Unit = {
     // recover first: appending a sidecar beside a mid-swap-parked
-    // layout would strand it on the wrong copy — and recover the
-    // SIDECAR too (a revive swap can park it)
+    // layout would strand it on the wrong copy
     graft.core.DirSwap.recoverAt(spark, path)
-    graft.core.DirSwap.recoverAt(spark, tombPath(path))
-    // a data-less layout (absent, or sidecars only after a
-    // delete-everything pass) holds nothing to mask — appending would
-    // conjure a sidecar-ONLY directory that every later read dies on
-    // (UNABLE_TO_INFER_SCHEMA, the empty-layout landmine); heal any
-    // stale sidecar instead so the dir reads as the empty index
-    val lp = new org.apache.hadoop.fs.Path(path)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!layoutHasData(fs, lp)) {
-      fs.delete(new org.apache.hadoop.fs.Path(tombPath(path)), true)
-      return
-    }
-    ids.select(col(ids.columns.head).as(idCol))
-      .write.mode(SaveMode.Append).parquet(tombPath(path))
+    Tombstones.add(spark, path, ids, idCol,
+      Tombstones.hasData(spark, path, "cluster="))
   }
 
-  /** Does the layout hold any postings data (cluster= dirs), as
-    * opposed to being absent or metadata-sidecars-only? The guard
-    * every sidecar writer/folder runs before touching a layout whose
-    * data a delete-everything pass may have removed.
-    */
-  private def layoutHasData(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) && fs.listStatus(p).exists(f =>
-      f.isDirectory && f.getPath.getName.startsWith("cluster="))
-
   /** The SERVING read: the layout minus its tombstoned ids — what
-    * every search should scan between folds. Plan shape: the
-    * tombstone set joins as an anti hash join above the
-    * (partition-pruned, pushed-down) postings scan — deliberately
-    * NOT broadcast-hinted: under the fold cadence the set is tiny
-    * and AQE broadcasts it anyway, while a neglected fold that let
-    * the mask grow degrades to a shuffle join instead of an
-    * executor OOM (the Validate SubsetOf un-hinting argument).
+    * every search should scan between folds (the un-hinted anti join
+    * of [[Tombstones.mask]]).
     */
   def readIndexServing(spark: SparkSession, path: String,
                        idCol: String): DataFrame =
-    maskTombstones(spark, readIndex(spark, path), path, idCol)
-
-  /** The serving mask step of [[readIndexServing]], shared with the
-    * multi-segment read.
-    */
-  private def maskTombstones(spark: SparkSession, idx: DataFrame,
-                             path: String, idCol: String): DataFrame = {
-    val tp = new org.apache.hadoop.fs.Path(tombPath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // an upsert's revive swaps the sidecar — recover a parked copy
-    // before the exists check, or the crash window between the
-    // revive's two renames would serve UNMASKED
-    graft.core.DirSwap.recover(fs, tp)
-    if (!fs.exists(tp)) idx
-    else idx.join(
-      spark.read.parquet(tombPath(path)).select(col(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-  }
+    Tombstones.mask(spark, readIndex(spark, path), path, idCol)
 
   /** The MULTI-SEGMENT serving read: the union of several index
     * layouts, each minus its own tombstoned ids — the LSM read path
@@ -940,10 +899,7 @@ object Ivf {
                           idCol: String, model: IvfModel): DataFrame = {
     val hc = spark.sparkContext.hadoopConfiguration
     paths.foreach(p => graft.core.DirSwap.recoverAt(spark, p))
-    val live = paths.filter { p =>
-      val lp = new org.apache.hadoop.fs.Path(p)
-      layoutHasData(lp.getFileSystem(hc), lp)
-    }
+    val live = paths.filter(p => Tombstones.hasData(spark, p, "cluster="))
     require(live.nonEmpty,
       "every segment root is absent or data-less — nothing to serve")
     live.foreach { p =>
@@ -1050,12 +1006,7 @@ object Ivf {
         new org.apache.hadoop.fs.Path(p).getName.matches("seg=\\d+")) &&
       live.map(p =>
         new org.apache.hadoop.fs.Path(p).getParent.toString).distinct.sizeIs == 1 &&
-      live.forall { p =>
-        val tp = new org.apache.hadoop.fs.Path(tombPath(p))
-        val fs = tp.getFileSystem(hc)
-        graft.core.DirSwap.recover(fs, tp)
-        !fs.exists(tp)
-      }
+      live.forall(p => !Tombstones.present(spark, p))
     if (fastEligible) {
       val parent = new org.apache.hadoop.fs.Path(live.head).getParent.toString
       try {
@@ -1069,7 +1020,7 @@ object Ivf {
           val first = spark.read.parquet(live.head)
           first +: live.tail.map(p => spark.read.schema(first.schema).parquet(p))
         } finally spark.conf.set(discKey, prevDisc)
-      frames.zip(live).map { case (f, p) => maskTombstones(spark, f, p, idCol) }
+      frames.zip(live).map { case (f, p) => Tombstones.mask(spark, f, p, idCol) }
         .reduce(_ unionByName _)
     }
   }
@@ -1147,13 +1098,14 @@ object Ivf {
       .where(filter.getOrElse(lit(true)))
       .agg(count(lit(1)).as("cnt"))
 
-  /** Retire the tombstone set: fold the masked ids into a physical
-    * [[deleteVectors]] rewrite (crash-safe swap; the hidden-dir
-    * carry-over keeps `_tombstones` WITH the rewritten copy), then
-    * drop the sidecar. Idempotent under any crash point: a crash
-    * after the promote but before the sidecar delete leaves
-    * already-folded tombstones whose anti-join masks nothing — the
-    * next fold (or read) is correct either way.
+  /** Retire the tombstone set ([[graft.core.Tombstones.fold]]): the
+    * masked ids fold into a physical [[deleteVectors]]-shaped rewrite
+    * (crash-safe swap) that sheds the sidecar atomically with the swap
+    * (dropHidden — a stale carried-over mask would merely re-mask
+    * already-deleted ids, but shedding it spares every serve until
+    * the next fold the anti-join), then the sidecar drops. A
+    * data-less layout (the foldVersions short-circuit) retires the
+    * sidecar without the rewrite, whose schema inference would fail.
     *
     * PAYLOAD-PARTITIONED layouts fold too (the one maintenance op
     * the rebuild-only guard family admits): the rewrite re-partitions
@@ -1167,29 +1119,11 @@ object Ivf {
   def foldTombstones(spark: SparkSession, path: String,
                      idCol: String): Unit = {
     graft.core.DirSwap.recoverAt(spark, path)
-    val tp = new org.apache.hadoop.fs.Path(tombPath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.DirSwap.recover(fs, tp) // a revive swap can park it
-    if (!fs.exists(tp)) return
-    // data-less layout (the foldVersions short-circuit): the masked
-    // ids are already physically gone — retire the sidecar without
-    // the rewrite (whose schema inference would fail loudly)
-    if (!layoutHasData(fs, new org.apache.hadoop.fs.Path(path))) {
-      fs.delete(tp, true)
-      return
+    Tombstones.fold(spark, path, idCol,
+        Tombstones.hasData(spark, path, "cluster=")) { ids =>
+      rewriteWithout(spark, path, ids, idCol,
+        "cluster" +: payloadColsOf(spark, path), Set(Tombstones.Name))
     }
-    val ids = spark.read.parquet(tombPath(path)).select(col(idCol))
-      .distinct().localCheckpoint(true)
-    // the tombstone sidecar is shed atomically with the swap
-    // (dropHidden): a stale carried-over mask would merely re-mask
-    // already-deleted ids (a no-op), but shedding it in the swap
-    // spares every serve until the next fold the anti-join entirely
-    graft.core.ParquetCompact.rewrite(spark, path,
-      partitionCols = "cluster" +: payloadColsOf(spark, path),
-      transform = p => p.join(ids, Seq(idCol), "left_anti"),
-      dropHidden = Set("_tombstones"))
-    graft.core.Pinned.release(ids)
-    fs.delete(tp, true) // heal pre-dropHidden crash leftovers
   }
 
   /** Canonical location of a codes layout's CODEC marker: a `_codec`
@@ -1240,8 +1174,7 @@ object Ivf {
       case None =>
         val d = new org.apache.hadoop.fs.Path(codecPath(path))
         val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(fresh ||
-            !layoutHasData(fs, new org.apache.hadoop.fs.Path(path)),
+        require(fresh || !Tombstones.hasData(spark, path, "cluster="),
           s"$path holds codes with NO _codec marker (a pre-marker or " +
             s"foreign layout) — refusing to assume they are ${codec.marker}; " +
             "rebuild with writeIndexCodes, which stamps")
@@ -1301,8 +1234,7 @@ object Ivf {
     graft.core.DirSwap.recoverAt(spark, path)
     deleteVectors(spark, path, df.select(col(idCol)), idCol)
     appendToIndex(df, vecCol, model, path)
-    graft.core.TombstoneSidecar.revive(spark, tombPath(path),
-      df.select(col(idCol)), idCol)
+    Tombstones.revive(spark, path, df.select(col(idCol)), idCol)
   }
 
   /** Canonical location of a versioned layout's latest-sequence
@@ -1362,8 +1294,7 @@ object Ivf {
     // any live tombstone mask (the upsertVectors contract — without
     // it, tombstone(X) → upsertVersioned(X) hides every seq of X and
     // the next fold physically erases them all, the new copy included)
-    graft.core.TombstoneSidecar.revive(spark, tombPath(path),
-      df.select(col(idCol)), idCol)
+    Tombstones.revive(spark, path, df.select(col(idCol)), idCol)
   }
 
   private def mergeLatest(spark: SparkSession, path: String,
@@ -1808,12 +1739,7 @@ object Ivf {
     val total =
       if (!exists) 0L
       else readIndex(spark, path).groupBy().count().head().getLong(0)
-    val tp = new org.apache.hadoop.fs.Path(tombPath(path))
-    graft.core.DirSwap.recover(fs, tp) // a revive swap can park it
-    val masked =
-      if (!fs.exists(tp)) 0L
-      else spark.read.parquet(tombPath(path)).select(col(idCol))
-        .distinct().count()
+    val masked = Tombstones.masked(spark, path, idCol).fold(0L)(_.count())
     // live = the serving anti-join counted exactly — the one number
     // needing the id column; a tight maintenance loop can difference
     // postings - tombstoned instead when tombstones are known-resident
@@ -1945,10 +1871,8 @@ object Ivf {
     // paired hybrid shard whose id range held no vectors) is an empty
     // index: nothing to fold, schema-check, or move — and reading it
     // for schema inference would die on UNABLE_TO_INFER_SCHEMA
-    def hasData(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(p) && fs.listStatus(p).exists(f =>
-        f.isDirectory && f.getPath.getName.startsWith("cluster="))
-    if (!hasData(src)) {
+    def hasData(p: String) = Tombstones.hasData(spark, p, "cluster=")
+    if (!hasData(srcPath)) {
       fs.delete(src, true) // consume the empty shard wholesale
       fs.delete(new org.apache.hadoop.fs.Path(s"${srcPath}__ledger"), true)
       return
@@ -1971,12 +1895,12 @@ object Ivf {
     // _SUCCESS-only dir (ParquetCompact.rewrite's empty contract) —
     // so re-check and consume it wholesale like the data-less shard;
     // reading its schema below would die on PATH_NOT_FOUND
-    if (!hasData(src)) {
+    if (!hasData(srcPath)) {
       fs.delete(src, true)
       fs.delete(new org.apache.hadoop.fs.Path(s"${srcPath}__ledger"), true)
       return
     }
-    if (hasData(dst)) {
+    if (hasData(dstPath)) {
       val sFields = spark.read.parquet(srcPath).schema.fieldNames.toSet
       val dFields = spark.read.parquet(dstPath).schema.fieldNames.toSet
       require(sFields == dFields,

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Tombstones
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,7 +107,7 @@ object MultiVector {
 
   /** Canonical location of the pair's persisted coarse quantizer —
     * `_model` at the ROOT, beside `ivf/` and `docs/` (the
-    * [[tombPath]] placement argument: it governs BOTH sub-layouts
+    * tombstone sidecar's placement argument: it governs BOTH sub-layouts
     * and must survive their compaction swaps). Written by
     * [[writeIndex]], verified-or-saved by [[appendDocs]], REQUIRED
     * by [[searchSegments]] and [[mergeInto]] — the witness that
@@ -172,8 +173,7 @@ object MultiVector {
     */
   def appendDocs(spark: SparkSession, docVecs: DataFrame,
                  model: IvfModel, root: String): Unit = {
-    graft.core.DirSwap.recoverAt(spark, s"$root/ivf")
-    graft.core.DirSwap.recoverAt(spark, s"$root/docs")
+    recoverPair(spark, root)
     ensureModel(spark, model, root)
     val assigned = docVecs.select(col("doc"), col("vec"))
       .withColumn("cluster", Ivf.nearestCol(col("vec"), model, 1).getItem(0))
@@ -218,39 +218,36 @@ object MultiVector {
     graft.core.Pinned.release(del)
   }
 
-  /** Canonical location of the pair's tombstone set: `_tombstones`
-    * under the ROOT — it masks docs across BOTH sub-layouts, and
-    * living beside (not inside) ivf/ and docs/ keeps it naturally
-    * out of their compaction swaps' file indexes.
+  /** The pair's recovery preamble: both sub-layouts swap
+    * independently, so every reader/writer heals each first.
     */
-  def tombPath(root: String): String = s"$root/_tombstones"
+  private def recoverPair(spark: SparkSession, root: String): Unit = {
+    graft.core.DirSwap.recoverAt(spark, s"$root/ivf")
+    graft.core.DirSwap.recoverAt(spark, s"$root/docs")
+  }
+
+  /** The pair's data witness: the candidate side's cluster= dirs (both
+    * sub-layouts are written and deleted together; ivf/ is what a
+    * serve probes first).
+    */
+  private def pairHasData(spark: SparkSession, root: String): Boolean =
+    Tombstones.hasData(spark, s"$root/ivf", "cluster=")
 
   /** TOMBSTONE deletes at serving latency for the late-interaction
-    * tier ([[Ivf.tombstoneVectors]]'s model): O(|ids|) sidecar
-    * append; [[searchIndex]] masks the docs at candidate generation
-    * on every serve until [[foldTombstones]] retires them into the
-    * physical [[deleteDocs]] rewrite. Exact for the same reason the
-    * dense mask is: late-interaction scores are per-(query, doc) —
-    * masking a doc moves no other doc's Σ max-cos.
+    * tier ([[Ivf.tombstoneVectors]]'s model): O(|ids|)
+    * [[graft.core.Tombstones]] sidecar append under the ROOT — it
+    * masks docs across BOTH sub-layouts and stays out of their
+    * compaction swaps; [[searchIndex]] masks the docs at candidate
+    * generation on every serve until [[foldTombstones]] retires them
+    * into the physical [[deleteDocs]] rewrite. Exact for the same
+    * reason the dense mask is: late-interaction scores are
+    * per-(query, doc) — masking a doc moves no other doc's Σ max-cos.
+    * A data-less pair takes no sidecar.
     */
   def tombstoneDocs(spark: SparkSession, root: String,
                     ids: DataFrame): Unit = {
-    graft.core.DirSwap.recoverAt(spark, s"$root/ivf")
-    graft.core.DirSwap.recoverAt(spark, s"$root/docs")
-    graft.core.DirSwap.recoverAt(spark, tombPath(root)) // a revive swap can park it
-    // data-less pair: nothing to mask — appending would conjure a
-    // sidecar-only root that later reads die on (the empty-layout
-    // landmine); heal any stale sidecar instead
-    val ip = new org.apache.hadoop.fs.Path(s"$root/ivf")
-    val fs = ip.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(ip) && fs.listStatus(ip).exists(f =>
-      f.isDirectory && f.getPath.getName.startsWith("cluster="))
-    if (!hasData) {
-      fs.delete(new org.apache.hadoop.fs.Path(tombPath(root)), true)
-      return
-    }
-    ids.select(col(ids.columns.head).as("doc"))
-      .write.mode(SaveMode.Append).parquet(tombPath(root))
+    recoverPair(spark, root)
+    Tombstones.add(spark, root, ids, "doc", pairHasData(spark, root))
   }
 
   /** Retire the mask into the physical [[deleteDocs]] rewrite of both
@@ -259,22 +256,9 @@ object MultiVector {
     * leaves a mask whose anti-joins remove nothing further.
     */
   def foldTombstones(spark: SparkSession, root: String): Unit = {
-    graft.core.DirSwap.recoverAt(spark, s"$root/ivf")
-    graft.core.DirSwap.recoverAt(spark, s"$root/docs")
-    val tp = new org.apache.hadoop.fs.Path(tombPath(root))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.DirSwap.recover(fs, tp) // a revive swap can park it
-    if (!fs.exists(tp)) return
-    val ip = new org.apache.hadoop.fs.Path(s"$root/ivf")
-    // data-less pair: the masked docs are already physically gone
-    if (!(fs.exists(ip) && fs.listStatus(ip).exists(f =>
-        f.isDirectory && f.getPath.getName.startsWith("cluster=")))) {
-      fs.delete(tp, true)
-      return
-    }
-    deleteDocs(spark, root, spark.read.parquet(tombPath(root))
-      .select(col("doc")).distinct())
-    fs.delete(tp, true)
+    recoverPair(spark, root)
+    Tombstones.fold(spark, root, "doc", pairHasData(spark, root))(
+      deleteDocs(spark, root, _))
   }
 
   /** UPSERT — replace-by-id for RE-EMBEDDED documents (the most
@@ -286,7 +270,7 @@ object MultiVector {
     * Grown ≡ one-shot over (corpus \ ids) ∪ batch (oracle-pinned);
     * idempotent under crash+re-run like [[Sparse.upsertDocs]]. The
     * batch's ids also REVIVE from any live tombstone mask
-    * ([[graft.core.TombstoneSidecar]]): an upsert is an explicit
+    * ([[graft.core.Tombstones.revive]]): an upsert is an explicit
     * re-add, which supersedes a pending tombstone — without the
     * revive, tombstone(X) → upsert(X) leaves the fresh copy masked
     * at serve and the next [[foldTombstones]] physically ERASES it.
@@ -295,8 +279,8 @@ object MultiVector {
                  model: IvfModel): Unit = {
     deleteDocs(spark, root, docVecs.select(col("doc")).distinct())
     appendDocs(spark, docVecs, model, root)
-    graft.core.TombstoneSidecar.revive(spark, tombPath(root),
-      docVecs.select(col("doc")).distinct(), "doc")
+    Tombstones.revive(spark, root, docVecs.select(col("doc")).distinct(),
+      "doc")
   }
 
   /** EXACT count of live (served) documents, optionally filtered over
@@ -310,9 +294,11 @@ object MultiVector {
     */
   def countDocs(spark: SparkSession, root: String,
                 filter: Option[org.apache.spark.sql.Column] = None)
-      : DataFrame =
-    graft.core.LiveDocs.count(spark,
-      maskedLiveDocs(spark, root, filter.getOrElse(lit(true))), "doc")
+      : DataFrame = {
+    recoverPair(spark, root)
+    Tombstones.count(spark, root, s"$root/docs", pairHasData(spark, root),
+      filter)
+  }
 
   /** KEYSET pagination over the pair — [[Ivf.scroll]]'s doc-listing
     * semantics on the late-interaction tier: one id-ordered page of
@@ -326,31 +312,10 @@ object MultiVector {
   def scroll(spark: SparkSession, root: String, afterId: Option[Long],
              limit: Int,
              filter: Option[org.apache.spark.sql.Column] = None)
-      : DataFrame =
-    graft.core.LiveDocs.page(spark,
-      maskedLiveDocs(spark, root,
-        filter.getOrElse(lit(true)) &&
-          afterId.map(a => col("doc") > a).getOrElse(lit(true))),
-      "doc", limit)
-
-  /** The filtered, tombstone-masked (doc) column of the docs/ gather
-    * layout — the live-doc prefix [[scroll]] and [[countDocs]] share
-    * (the [[graft.core.LiveDocs]] mask core under this tier's
-    * recovery preamble and db= data witness). None when the pair is
-    * missing or data-less (a sidecar-only crash leftover must
-    * classify as empty, not die on schema inference).
-    */
-  private def maskedLiveDocs(spark: SparkSession, root: String,
-                             pred: org.apache.spark.sql.Column)
-      : Option[DataFrame] = {
-    graft.core.DirSwap.recoverAt(spark, s"$root/docs")
-    val dp = new org.apache.hadoop.fs.Path(s"$root/docs")
-    val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(dp) && fs.listStatus(dp).exists(f =>
-      f.isDirectory && f.getPath.getName.startsWith("db="))
-    if (!hasData) None
-    else Some(graft.core.LiveDocs.masked(spark, s"$root/docs",
-      tombPath(root), "doc", pred))
+      : DataFrame = {
+    recoverPair(spark, root)
+    Tombstones.page(spark, root, s"$root/docs", pairHasData(spark, root),
+      afterId, limit, filter)
   }
 
   /** SEGMENT MERGE: per-doc rows under ONE frozen quantizer —
@@ -366,10 +331,8 @@ object MultiVector {
     */
   def mergeInto(spark: SparkSession, dstRoot: String,
                 srcRoot: String): Unit = {
-    Seq("ivf", "docs").foreach { sub =>
-      graft.core.DirSwap.recoverAt(spark, s"$dstRoot/$sub")
-      graft.core.DirSwap.recoverAt(spark, s"$srcRoot/$sub")
-    }
+    recoverPair(spark, dstRoot)
+    recoverPair(spark, srcRoot)
     val src = new org.apache.hadoop.fs.Path(srcRoot)
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(src)) return // absent src IS an empty layout
@@ -457,10 +420,7 @@ object MultiVector {
                   docFilter: Option[org.apache.spark.sql.Column])
       : (DataFrame, DataFrame) = {
     val hc = spark.sparkContext.hadoopConfiguration
-    roots.foreach { r =>
-      graft.core.DirSwap.recoverAt(spark, s"$r/ivf")
-      graft.core.DirSwap.recoverAt(spark, s"$r/docs")
-    }
+    roots.foreach(recoverPair(spark, _))
     // FAST PATH (r17): ONE relation per sub-layout for multi-segment
     // tombstone-free serves — the dense tier's r16 single-relation
     // lesson (Ivf.readSegmentsServing) adapted to this tier's pair
@@ -493,12 +453,7 @@ object MultiVector {
     // per-segment path performs runs in the eligibility check too,
     // so the crash-window heal is never skipped.
     val fastEligible = roots.sizeIs > 1 &&
-      roots.forall { r =>
-        val tp = new org.apache.hadoop.fs.Path(tombPath(r))
-        val fs = tp.getFileSystem(hc)
-        graft.core.DirSwap.recover(fs, tp)
-        !fs.exists(tp)
-      }
+      roots.forall(r => !Tombstones.present(spark, r))
     // relation construction batched like the bm25/dense serves
     // (2 relations × N segments: schema inference + listing each —
     // reuse the head's inferred schemas, sound because ONE writeIndex
@@ -627,16 +582,8 @@ object MultiVector {
           case Some(p) => !p(col("qid"), col("doc"))
           case None => lit(true)
         })
-      val tp = new org.apache.hadoop.fs.Path(tombPath(root))
-      val tombFs = tp.getFileSystem(hc)
-      // recover a revive-swap-parked sidecar before the exists check,
-      // or the crash window between its two renames serves unmasked
-      graft.core.DirSwap.recover(tombFs, tp)
-      val cand1 =
-        if (!tombFs.exists(tp)) cand0
-        else cand0.join(spark.read.parquet(tombPath(root))
-          .select(col("doc")).distinct(), Seq("doc"), "left_anti")
-      cand1.select(lit(i).as("__seg"), col("qid"), col("doc"))
+      Tombstones.mask(spark, cand0, root, "doc")
+        .select(lit(i).as("__seg"), col("qid"), col("doc"))
     }
     val cand = candLegs.reduce(_ unionByName _)
       .distinct()
@@ -722,12 +669,8 @@ object MultiVector {
     // sidecar-only dir must classify as empty, not die on schema
     // inference (the empty-layout landmine)
     val live = roots.filter { r =>
-      graft.core.DirSwap.recoverAt(spark, s"$r/ivf")
-      graft.core.DirSwap.recoverAt(spark, s"$r/docs")
-      val ip = new org.apache.hadoop.fs.Path(s"$r/ivf")
-      val fs = ip.getFileSystem(hc)
-      fs.exists(ip) && fs.listStatus(ip).exists(f =>
-        f.isDirectory && f.getPath.getName.startsWith("cluster="))
+      recoverPair(spark, r)
+      pairHasData(spark, r)
     }
     require(live.nonEmpty,
       "every segment root is absent or data-less — nothing to serve")

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Tombstones
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -221,16 +222,12 @@ object Sparse {
                                queries: DataFrame, excludeSelf: Boolean,
                                docFilter: Option[Column])
       : Option[(DataFrame, DataFrame)] = {
-    val hc = spark.sparkContext.hadoopConfiguration
     paths.foreach(p => graft.core.DirSwap.recoverAt(spark, p))
     // a missing OR data-less layout IS an empty index/segment (the
     // family contract — a delete-everything pass removes the
     // directory, and crash leftovers can leave a dir holding only
     // sidecars, which schema inference would die on)
-    val live = paths.filter { p =>
-      val lp = new org.apache.hadoop.fs.Path(p)
-      layoutHasData(lp.getFileSystem(hc), lp)
-    }
+    val live = paths.filter(p => Tombstones.hasData(spark, p, "dbk="))
     if (live.isEmpty) return None
     val q = queries.select(col("doc").as("qid"), col("dim"),
       col("w").as("qw")).localCheckpoint(true)
@@ -259,14 +256,7 @@ object Sparse {
         .where(graft.core.PartitionIn.inSet(idx0, "dbk", buckets) &&
           col("dim").isInCollection(dims))
         .where(docFilter.getOrElse(lit(true)))
-      val tp = new org.apache.hadoop.fs.Path(tombPath(path))
-      val tombFs = tp.getFileSystem(hc)
-      // recover a revive-swap-parked sidecar before the exists check,
-      // or the crash window between its two renames serves unmasked
-      graft.core.DirSwap.recover(tombFs, tp)
-      if (!tombFs.exists(tp)) idx1
-      else idx1.join(spark.read.parquet(tombPath(path))
-        .select(col("doc")).distinct(), Seq("doc"), "left_anti")
+      Tombstones.mask(spark, idx1, path, "doc")
     }.reduce(_ unionByName _)
     val scored = idx.join(broadcast(q), Seq("dim"))
       .where(if (excludeSelf) col("doc") =!= col("qid") else lit(true))
@@ -275,67 +265,31 @@ object Sparse {
     Some((q, scored))
   }
 
-  def tombPath(indexPath: String): String = s"$indexPath/_tombstones"
-
   /** TOMBSTONE deletes at serving latency (the family's Lucene
     * live-docs model, [[Ivf.tombstoneVectors]]'s twin): O(|ids|)
-    * sidecar append; [[searchIndex]] masks the ids on every serve
-    * until [[foldTombstones]] retires them into a physical rewrite.
+    * [[graft.core.Tombstones]] sidecar append; [[searchIndex]] masks
+    * the ids on every serve until [[foldTombstones]] retires them into
+    * a physical rewrite. The data witness is the dbk= dirs: an absent
+    * or emptied layout takes no sidecar.
     */
   def tombstoneDocs(spark: SparkSession, path: String,
                     ids: DataFrame): Unit = {
     graft.core.DirSwap.recoverAt(spark, path) // sidecar beside the live copy
-    graft.core.DirSwap.recoverAt(spark, tombPath(path)) // a revive swap can park it
-    // data-less layout (absent, or a delete-everything pass removed
-    // every dbk= dir): nothing to mask — appending would conjure a
-    // sidecar-only dir that later reads die on (the empty-layout
-    // landmine, [[Ivf.tombstoneVectors]]'s guard); heal any stale
-    // sidecar instead
-    val lp = new org.apache.hadoop.fs.Path(path)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!layoutHasData(fs, lp)) {
-      fs.delete(new org.apache.hadoop.fs.Path(tombPath(path)), true)
-      return
-    }
-    ids.select(col(ids.columns.head).as("doc"))
-      .write.mode(SaveMode.Append).parquet(tombPath(path))
+    Tombstones.add(spark, path, ids, "doc",
+      Tombstones.hasData(spark, path, "dbk="))
   }
 
-  /** dbk= data-dir witness — absent/sidecar-only layouts hold no
-    * postings ([[Ivf.layoutHasData]]'s shape for this layout).
-    */
-  private def layoutHasData(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(p) && fs.listStatus(p).exists(f =>
-      f.isDirectory && f.getPath.getName.startsWith("dbk="))
-
   /** Retire the mask into a physical [[deleteDocs]]-shaped rewrite;
-    * the sidecar is shed atomically with the swap (dropHidden), and
-    * the trailing delete heals a pre-dropHidden crash leftover —
+    * the sidecar is shed atomically with the swap (dropHidden) and
+    * then dropped, which heals a pre-dropHidden crash leftover —
     * idempotent at any crash point (the [[Ivf.foldTombstones]]
     * argument verbatim).
     */
   def foldTombstones(spark: SparkSession, path: String): Unit = {
     graft.core.DirSwap.recoverAt(spark, path)
-    val tp = new org.apache.hadoop.fs.Path(tombPath(path))
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.DirSwap.recover(fs, tp) // a revive swap can park it
-    if (!fs.exists(tp)) return
-    // data-less layout: the masked docs are already physically gone —
-    // retire the sidecar without the rewrite ([[Ivf.foldTombstones]])
-    if (!layoutHasData(fs, new org.apache.hadoop.fs.Path(path))) {
-      fs.delete(tp, true)
-      return
-    }
-    val ids = spark.read.parquet(tombPath(path)).select(col("doc"))
-      .distinct().localCheckpoint(true)
-    graft.core.ParquetCompact.rewrite(spark, path,
-      partitionCols = Seq("dbk"), sortCols = Seq("dim", "doc"),
-      options = Map("parquet.page.row.count.limit" -> "512"),
-      transform = p => p.join(ids, Seq("doc"), "left_anti"),
-      dropHidden = Set("_tombstones"))
-    graft.core.Pinned.release(ids)
-    fs.delete(tp, true)
+    Tombstones.fold(spark, path, "doc",
+      Tombstones.hasData(spark, path, "dbk="))(
+      rewriteWithout(spark, path, _, Set(Tombstones.Name)))
   }
 
   /** Crash-safe in-place compaction; contents-invariant, restores the
@@ -349,12 +303,21 @@ object Sparse {
     * tier): postings are doc-keyed, one anti-join filter inside the
     * crash-safe rewrite swap. Deleting every doc removes the layout.
     */
-  def deleteDocs(spark: SparkSession, path: String, docs: DataFrame): Unit = {
+  def deleteDocs(spark: SparkSession, path: String, docs: DataFrame): Unit =
+    rewriteWithout(spark, path, docs)
+
+  /** The physical delete under both [[deleteDocs]] and
+    * [[foldTombstones]]: one crash-safe rewrite anti-joining ONE
+    * pinned id set.
+    */
+  private def rewriteWithout(spark: SparkSession, path: String,
+                             docs: DataFrame,
+                             dropHidden: Set[String] = Set.empty): Unit = {
     val del = docs.select(col(docs.columns.head).as("doc"))
       .localCheckpoint(true)
     graft.core.ParquetCompact.rewrite(spark, path, Seq("dbk"),
       Seq("dim", "doc"), Map("parquet.page.row.count.limit" -> "512"),
-      p => p.join(del, Seq("doc"), "left_anti"))
+      p => p.join(del, Seq("doc"), "left_anti"), dropHidden = dropHidden)
     graft.core.Pinned.release(del)
   }
 
@@ -367,7 +330,7 @@ object Sparse {
     * postings, or the first run's already-committed replacements) and
     * the append re-lands the one correct copy — any crash point
     * converges to the same final layout. The batch's ids also REVIVE
-    * from any live tombstone mask ([[graft.core.TombstoneSidecar]] —
+    * from any live tombstone mask ([[graft.core.Tombstones.revive]] —
     * an explicit re-add supersedes a pending tombstone; a masked
     * fresh copy would vanish at the next fold).
     */
@@ -376,8 +339,7 @@ object Sparse {
                  scale: Double = DefaultScale): Unit = {
     deleteDocs(spark, path, df.select(col(idCol).as("doc")))
     appendToIndex(spark, sparsify(df, vecCol, idCol, tau, scale), path)
-    graft.core.TombstoneSidecar.revive(spark, tombPath(path),
-      df.select(col(idCol)), "doc")
+    Tombstones.revive(spark, path, df.select(col(idCol)), "doc")
   }
 
   /** EXACT count of live (served) documents, optionally filtered
@@ -389,9 +351,11 @@ object Sparse {
     * family's missing-layout = empty-index convention).
     */
   def countIndex(spark: SparkSession, path: String,
-                 filter: Option[Column] = None): DataFrame =
-    graft.core.LiveDocs.count(spark,
-      maskedLiveDocs(spark, path, filter.getOrElse(lit(true))), "doc")
+                 filter: Option[Column] = None): DataFrame = {
+    graft.core.DirSwap.recoverAt(spark, path)
+    Tombstones.count(spark, path, path,
+      Tombstones.hasData(spark, path, "dbk="), filter)
+  }
 
   /** KEYSET pagination over the sparse layout — [[Ivf.scroll]]'s
     * doc-listing semantics on this tier (the lexical tier's
@@ -408,28 +372,10 @@ object Sparse {
     * empty page.
     */
   def scroll(spark: SparkSession, path: String, afterId: Option[Long],
-             limit: Int, filter: Option[Column] = None): DataFrame =
-    graft.core.LiveDocs.page(spark,
-      maskedLiveDocs(spark, path,
-        filter.getOrElse(lit(true)) &&
-          afterId.map(a => col("doc") > a).getOrElse(lit(true))),
-      "doc", limit)
-
-  /** The filtered, tombstone-masked (doc) column of the postings —
-    * the live-doc prefix [[scroll]] and [[countIndex]] share
-    * (the [[graft.core.LiveDocs]] mask core under this tier's
-    * recovery preamble and dbk= data witness). None when the layout
-    * is missing or data-less (the family's empty-index convention —
-    * schema inference would die on a sidecar-only dir).
-    */
-  private def maskedLiveDocs(spark: SparkSession, path: String,
-                             pred: Column): Option[DataFrame] = {
+             limit: Int, filter: Option[Column] = None): DataFrame = {
     graft.core.DirSwap.recoverAt(spark, path)
-    val lp = new org.apache.hadoop.fs.Path(path)
-    val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!layoutHasData(fs, lp)) None
-    else Some(graft.core.LiveDocs.masked(spark, path, tombPath(path),
-      "doc", pred))
+    Tombstones.page(spark, path, path,
+      Tombstones.hasData(spark, path, "dbk="), afterId, limit, filter)
   }
 
   /** SEGMENT MERGE — the shard-parallel build topology: postings are
@@ -438,7 +384,7 @@ object Sparse {
     * is a pure [[graft.core.SegmentMerge]] file move: zero rows
     * rewritten, search over the merged layout bit-identical to a
     * one-shot build over the union (oracle-pinned). Crash-safe by
-    * per-file rename idempotence. A src `_tombstones` sidecar moves
+    * per-file rename idempotence. A src tombstone sidecar moves
     * with the tree — the merged mask is the union, and the moved
     * postings stay masked exactly as they were in the shard.
     */

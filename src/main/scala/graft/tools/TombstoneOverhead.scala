@@ -36,7 +36,7 @@ object TombstoneOverhead {
     val qs = emb0.where(col("vec_id") < 10).localCheckpoint(true)
 
     Seq(0, 1000, 8000, 32000).foreach { m =>
-      val tp = new org.apache.hadoop.fs.Path(Ivf.tombPath(idx))
+      val tp = new org.apache.hadoop.fs.Path(graft.core.Tombstones.path(idx))
       val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(tp, true)
       // mask ids that are the corpus's ACTUAL ids (replica r = id/n0,

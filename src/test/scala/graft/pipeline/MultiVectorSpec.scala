@@ -119,7 +119,7 @@ class MultiVectorSpec extends SparkTestBase {
     val fsA = new org.apache.hadoop.fs.Path(rootA)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fsA.exists(
-      new org.apache.hadoop.fs.Path(MultiVector.tombPath(rootA))))
+      new org.apache.hadoop.fs.Path(graft.core.Tombstones.path(rootA))))
     assert(rows(MultiVector.searchIndex(spark, rootA, queryVecs, model,
       k = 5, nprobe = 16, excludeDoc = exclude)) == clean)
     // a src shard with LIVE tombstones folds them before the move —

@@ -71,7 +71,7 @@ class PayloadPartitionSpec extends SparkTestBase {
       "tombstoned decoys must not serve through the payload layout")
     Ivf.foldTombstones(spark, idx, "vec_id")
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Path.of(Ivf.tombPath(idx))),
+      java.nio.file.Path.of(graft.core.Tombstones.path(idx))),
       "the fold must retire the sidecar")
     assert(serve() == masked, "fold must not change served results")
     // the rebuild kept the SECONDARY partition dirs: the payload

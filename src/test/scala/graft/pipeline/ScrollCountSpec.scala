@@ -95,6 +95,13 @@ class ScrollCountSpec extends SparkTestBase {
       want.size.toLong)
     assert(Bm25.countDocs(spark, idx).head().getLong(0) ==
       docs.where(col("doc_id") % 5 =!= 1).count())
+    // a missing index, and one emptied by a delete-everything pass,
+    // count zero and page empty (the family's missing-layout convention)
+    assert(Bm25.countDocs(spark, idx + "_missing").head().getLong(0) == 0L)
+    assert(Bm25.scroll(spark, idx + "_missing", None, 5).count() == 0L)
+    Bm25.deleteDocs(spark, idx, docs.select(col("doc_id")))
+    assert(Bm25.countDocs(spark, idx).head().getLong(0) == 0L)
+    assert(Bm25.scroll(spark, idx, None, 5).count() == 0L)
   }
 
   test("sparse countIndex: live distinct docs under filter + mask; " +
@@ -224,5 +231,7 @@ class ScrollCountSpec extends SparkTestBase {
       Some(col("doc") % 3 === 0)).collect().map(_.getLong(0)).toSeq
     assert(p1 == p1.sorted && p1.nonEmpty && p1.forall(d =>
       d % 3 == 0 && d % 5 != 1))
+    assert(Hybrid.countDocs(spark, root + "_missing").head().getLong(0) == 0L)
+    assert(Hybrid.scroll(spark, root + "_missing", None, 5).count() == 0L)
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkTestBase
+import graft.core.Tombstones
 import org.apache.spark.sql.functions._
 
 /** LSM-style tombstone deletion for the vector index: an O(|ids|)
@@ -18,7 +19,7 @@ class TombstoneSpec extends SparkTestBase {
     try {
       import scala.jdk.CollectionConverters._
       s.iterator().asScala.filter(f => f.toString.endsWith(".parquet") &&
-        !f.toString.contains("_tombstones")).map(_.toString).toSeq
+        !f.toString.contains(Tombstones.Name)).map(_.toString).toSeq
     } finally s.close()
   }
 
@@ -47,7 +48,7 @@ class TombstoneSpec extends SparkTestBase {
     // physically gone, sidecar retired, serving unchanged
     assert(Ivf.readIndex(spark, idx).count() == total - decoys.count())
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Path.of(Ivf.tombPath(idx))))
+      java.nio.file.Path.of(Tombstones.path(idx))))
     assert(Ivf.readIndexServing(spark, idx, "vec_id").count() ==
       total - decoys.count())
     // idempotent: fold with no sidecar is a no-op
@@ -55,54 +56,93 @@ class TombstoneSpec extends SparkTestBase {
     assert(Ivf.readIndex(spark, idx).count() == total - decoys.count())
   }
 
-  test("tombstoning a data-less layout is a no-op that heals stale sidecars") {
-    val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
-    val idx = java.nio.file.Files.createTempDirectory("tomb_empty")
-      .resolve("index").toString
+  /** The data-less layout checks, on each tier whose name passes `runs`. */
+  private def checkDataLess(runs: String => Boolean): Unit = {
+    lazy val model = Ivf.train(emb, "embedding", "vec_id", nlist = 8, iters = 2)
     val some = emb.where(col("vec_id") < 20)
-    Ivf.writeIndex(Ivf.assign(some, "embedding", model), idx)
-    // delete EVERYTHING — the layout holds no cluster dirs afterwards
-    Ivf.deleteVectors(spark, idx, some.select(col("vec_id")), "vec_id")
-    val fs = new org.apache.hadoop.fs.Path(idx)
+    val someIds = some.select(col("vec_id").as("doc"))
+    val someDocs = spark.read.parquet(sf() + "/documents.parquet")
+      .where(col("doc_id") < 20).select(col("doc_id"), col("text"))
+    val someVecs = some.select((col("vec_id") / 4).cast("long").as("doc"),
+      col("embedding").as("vec"))
+    val fs = new org.apache.hadoop.fs.Path(sf())
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(idx)) ||
-      !fs.listStatus(new org.apache.hadoop.fs.Path(idx))
-        .exists(f => f.getPath.getName.startsWith("cluster=")))
-    // a late erasure request (StreamingForget shape) must NOT conjure
-    // a sidecar-only directory that later reads die on
-    Ivf.tombstoneVectors(spark, idx, some.select(col("vec_id")), "vec_id")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(Ivf.tombPath(idx))),
-      "tombstone append on a data-less layout must not conjure a sidecar")
-    // fold is a guarded no-op too — including against a MANUALLY
-    // planted stale sidecar (crash leftovers)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Ivf.tombPath(idx)))
-    Ivf.foldTombstones(spark, idx, "vec_id")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(Ivf.tombPath(idx))))
-    // and a tombstone append HEALS the planted sidecar instead of
-    // growing it
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Ivf.tombPath(idx)))
-    Ivf.tombstoneVectors(spark, idx, some.select(col("vec_id")), "vec_id")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(Ivf.tombPath(idx))))
+    // per tier: build a layout and delete EVERYTHING; tombstone; fold;
+    // and a read that must see the empty index (a serve or count must
+    // answer empty, never die on schema inference)
+    case class Tier(name: String, emptied: String => Unit,
+                    tombstone: String => Unit, fold: String => Unit,
+                    readsEmpty: String => Boolean)
+    val tiers = Seq(
+      Tier("ivf",
+        idx => {
+          Ivf.writeIndex(Ivf.assign(some, "embedding", model), idx)
+          Ivf.deleteVectors(spark, idx, some.select(col("vec_id")), "vec_id")
+        },
+        Ivf.tombstoneVectors(spark, _, some.select(col("vec_id")), "vec_id"),
+        Ivf.foldTombstones(spark, _, "vec_id"),
+        // the layout holds no cluster dirs afterwards
+        idx => !fs.exists(new org.apache.hadoop.fs.Path(idx)) ||
+          !fs.listStatus(new org.apache.hadoop.fs.Path(idx))
+            .exists(f => f.getPath.getName.startsWith("cluster="))),
+      Tier("sparse",
+        idx => {
+          Sparse.writeIndex(Sparse.sparsify(some, "embedding", "vec_id"), idx)
+          Sparse.deleteDocs(spark, idx, someIds)
+        },
+        Sparse.tombstoneDocs(spark, _, someIds),
+        Sparse.foldTombstones(spark, _),
+        idx => Sparse.searchIndex(spark, idx,
+          Sparse.sparsify(emb.where(col("vec_id") < 2), "embedding", "vec_id"),
+          k = 5).isEmpty),
+      Tier("bm25",
+        idx => {
+          Bm25.writeIndex(spark, someDocs, "text", "doc_id", idx)
+          Bm25.deleteDocs(spark, idx, someDocs.select(col("doc_id")))
+        },
+        Bm25.tombstoneDocs(spark, _, someDocs.select(col("doc_id"))),
+        Bm25.foldTombstones(spark, _),
+        idx => Bm25.countDocs(spark, idx).head().getLong(0) == 0L),
+      Tier("multivec",
+        root => {
+          MultiVector.writeIndex(spark, someVecs, model, root)
+          MultiVector.deleteDocs(spark, root, someVecs.select(col("doc")))
+        },
+        MultiVector.tombstoneDocs(spark, _, someVecs.select(col("doc"))),
+        MultiVector.foldTombstones(spark, _),
+        root => MultiVector.countDocs(spark, root).head().getLong(0) == 0L))
+    tiers.filter(t => runs(t.name)).foreach { t =>
+      val idx = java.nio.file.Files.createTempDirectory(s"tomb_empty_${t.name}")
+        .resolve("index").toString
+      val tp = new org.apache.hadoop.fs.Path(Tombstones.path(idx))
+      t.emptied(idx)
+      assert(t.readsEmpty(idx), s"${t.name}: the emptied layout reads empty")
+      // a late erasure request (StreamingForget shape) must NOT conjure
+      // a sidecar-only directory that later reads die on
+      t.tombstone(idx)
+      assert(!fs.exists(tp),
+        s"${t.name}: tombstone append on a data-less layout must not " +
+          "conjure a sidecar")
+      // fold is a guarded no-op too — including against a MANUALLY
+      // planted stale sidecar (crash leftovers)
+      fs.mkdirs(tp)
+      t.fold(idx)
+      assert(!fs.exists(tp), s"${t.name}: fold must retire a stale sidecar")
+      // and a tombstone append HEALS the planted sidecar instead of
+      // growing it
+      fs.mkdirs(tp)
+      t.tombstone(idx)
+      assert(!fs.exists(tp), s"${t.name}: tombstone must heal a stale sidecar")
+      assert(t.readsEmpty(idx), s"${t.name}: the healed layout reads empty")
+    }
+  }
+
+  test("tombstoning a data-less layout is a no-op that heals stale sidecars") {
+    checkDataLess(_ != "sparse")
   }
 
   test("sparse: tombstoning a data-less layout is a no-op that heals sidecars") {
-    val idx = java.nio.file.Files.createTempDirectory("tomb_empty_sp")
-      .resolve("index").toString
-    val some = emb.where(col("vec_id") < 20)
-    Sparse.writeIndex(Sparse.sparsify(some, "embedding", "vec_id"), idx)
-    Sparse.deleteDocs(spark, idx, some.select(col("vec_id").as("doc")))
-    val fs = new org.apache.hadoop.fs.Path(idx)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Sparse.tombstoneDocs(spark, idx, some.select(col("vec_id").as("doc")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(Sparse.tombPath(idx))),
-      "tombstone append on a data-less sparse layout must not conjure a sidecar")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(Sparse.tombPath(idx)))
-    Sparse.foldTombstones(spark, idx)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(Sparse.tombPath(idx))))
-    // the serve still answers (empty), never crashes on inference
-    assert(Sparse.searchIndex(spark, idx,
-      Sparse.sparsify(emb.where(col("vec_id") < 2), "embedding", "vec_id"),
-      k = 5).isEmpty)
+    checkDataLess(_ == "sparse")
   }
 
   test("search over the tombstoned layout equals search over a physically deleted one") {
@@ -293,7 +333,7 @@ class TombstoneSpec extends SparkTestBase {
     Bm25.foldTombstones(spark, withD)
     assert(rows(Bm25.searchIndex(spark, withD, qs, k = 10)) == freshScores)
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Path.of(Bm25.tombPath(withD))))
+      java.nio.file.Path.of(Tombstones.path(withD))))
   }
 
   test("hybrid tombstones mask both sides; fold equals the decoy-free paired build") {
@@ -452,10 +492,10 @@ class TombstoneSpec extends SparkTestBase {
     Ivf.tombstoneVectors(spark, idx, decoys.select(col("vec_id")), "vec_id")
     // crash between the revive swap's two renames: mask parked at
     // __old, live sidecar missing
-    val tp = new org.apache.hadoop.fs.Path(Ivf.tombPath(idx))
+    val tp = new org.apache.hadoop.fs.Path(Tombstones.path(idx))
     val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(tp, new org.apache.hadoop.fs.Path(
-      Ivf.tombPath(idx) + "__old")))
+      Tombstones.path(idx) + "__old")))
     assert(Ivf.readIndexServing(spark, idx, "vec_id")
         .where(col("vec_id") >= 100000L).count() == 0,
       "a parked mask must be recovered and applied, not read as absent")
