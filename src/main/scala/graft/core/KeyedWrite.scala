@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Hash-distribute rows by their partition-dir keys, with an EXPLICIT
-  * partition count, before a dynamic `partitionBy` write.
+  * partition count, before a dynamic `partitionBy` write — the one
+  * place a write's partition count is decided.
   *
   * Why: a dynamic-partition write pays a per-FILE fixed cost (writer
   * init, footer flush, commit rename) for every (task × touched dir)
@@ -17,19 +18,25 @@ import org.apache.spark.sql.functions.col
   * every dir's file sequentially — the per-file fixed cost is
   * byte-blind. An explicit count pins the spread at the session's
   * configured shuffle parallelism (scale-adaptive via conf, not a
-  * local constant), giving each dir exactly one writer task and one
-  * output file: the layout's max write parallelism at every scale —
-  * the same discipline the bucketed writers (`IndexBuckets` et al.)
-  * have always used.
+  * local constant): every dir's rows hash to exactly one writer task,
+  * so each pass writes one file per dir.
+  *
+  * `buckets` is a bucketed writer's dir count (`Bm25.IndexBuckets` et
+  * al.): a count above it only adds empty tasks, so the spread is
+  * `min(buckets, shuffle partitions)`. One task per bucket whatever
+  * the session's parallelism would pay a task launch and a writer
+  * open per small file — 64 tasks for a 250-doc append on a 4-core
+  * host; at shuffle partitions ≥ buckets it is exactly that plan.
   *
   * Contents-invariant: every row of a dir hashes to the same shuffle
   * partition either way, so the one-file-per-dir shape and the row
   * SET per dir are unchanged; only which task writes a dir moves.
   */
 object KeyedWrite {
-  def spread(df: DataFrame, keys: Seq[String]): DataFrame = {
-    val n = math.max(1,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
+  def spread(df: DataFrame, keys: Seq[String],
+             buckets: Int = Int.MaxValue): DataFrame = {
+    val n = math.max(1, math.min(buckets,
+      df.sparkSession.sessionState.conf.numShufflePartitions))
     df.repartition(n, keys.map(col): _*)
   }
 }

@@ -94,17 +94,10 @@ object ParquetCompact {
     val survived0 = transform(spark.read.parquet(path))
     val survived =
       if (pinResult) survived0.localCheckpoint(true) else survived0
-    // EXPLICIT partition count: a bare repartition(cols) lets AQE
-    // coalesce the (usually small-byte) shuffle down to ONE task,
-    // which then opens/closes every partition dir's file
-    // SEQUENTIALLY — the write cost is per-FILE fixed cost that
-    // AQE's byte-based sizing cannot see. Pinning the count at the
-    // session's shuffle parallelism spreads the dirs over the
-    // cluster; the one-file-per-dir shape is unchanged (all rows of
-    // a dir hash to one partition either way).
-    val n = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    survived
-      .repartition(n, partitionCols.map(col): _*)
+    // KeyedWrite's explicit count, uncapped (the partition columns are
+    // the caller's, so no bucket count is known here): one file per
+    // dir, the dirs spread over the session's shuffle parallelism
+    KeyedWrite.spread(survived, partitionCols)
       .sortWithinPartitions(keyCols: _*)
       .write.mode(SaveMode.Overwrite)
       .options(options)

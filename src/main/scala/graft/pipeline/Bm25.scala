@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Tombstones
+import graft.core.{KeyedWrite, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -134,15 +134,21 @@ object Bm25 {
                  idCol: String, path: String): Unit =
     writeLayout(spark, docs, textCol, idCol, path, "overwrite")
 
+  /** The bucket-keyed spread of both [[writeLayout]] writes. */
+  private def spread(rows: DataFrame): DataFrame =
+    KeyedWrite.spread(rows, Seq("bucket"), IndexBuckets)
+
   /** One write pass shared by build and append. The corpus is
     * scanned ONCE for postings: the df table is then derived by
     * re-reading the just-written postings (a column-pruned
     * (bucket, term) scan of the small index, not a second corpus
-    * explode), and stats is a map-side-only corpus agg. Postings are
-    * repartitioned on the bucket column before the
-    * dynamic-partition write, so every bucket's rows land in exactly
-    * one task — one file per bucket directory per pass, instead of
-    * (tasks x buckets) small files.
+    * explode), and stats is a map-side-only corpus agg. Postings and
+    * df are spread on the bucket column ([[KeyedWrite.spread]], capped
+    * at [[IndexBuckets]]) before each dynamic-partition write, so
+    * every bucket's rows land in exactly one task — one file per
+    * bucket directory per pass, instead of (tasks x buckets) small
+    * files — and a small append runs as many writer tasks as the
+    * session's shuffle parallelism, not one per bucket.
     */
   private def writeLayout(spark: SparkSession, docs0: DataFrame,
                           textCol: String, idCol: String, path: String,
@@ -152,14 +158,13 @@ object Bm25 {
     // file = one scan task (graft.core.Parallelize: no-op at scale).
     // Both corpus passes (postings explode, stats agg) ride it.
     val docs = graft.core.Parallelize.ensure(docs0)
-    val postingsPlan = docs
+    val postingsPlan = spread(docs
       .select(col(idCol).as("doc"),
         TextAnalysis.tokenCount(col(textCol)).as("len"),
         explode(TextAnalysis.tokens(col(textCol))).as("term"))
       .groupBy(col("term"), col("doc"))
       .agg(count(lit(1)).as("tf"), max(col("len")).as("len"))
-      .withColumn("bucket", bucketOf(col("term")))
-      .repartition(IndexBuckets, col("bucket"))
+      .withColumn("bucket", bucketOf(col("term"))))
     // In append mode the postings plan feeds TWO writes (postings and
     // df below) — pin it once so the increment corpus is exploded and
     // aggregated exactly once, not re-run per consumer (the same
@@ -191,9 +196,8 @@ object Bm25 {
     val dfSource =
       if (mode == "overwrite") spark.read.parquet(s"$path/postings")
       else postings
-    dfSource.groupBy(col("bucket"), col("term")).count()
-      .withColumnRenamed("count", "df")
-      .repartition(IndexBuckets, col("bucket"))
+    spread(dfSource.groupBy(col("bucket"), col("term")).count()
+        .withColumnRenamed("count", "df"))
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.mode(mode)
       .option("parquet.page.row.count.limit", "512")

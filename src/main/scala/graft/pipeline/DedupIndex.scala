@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.KeyedWrite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -63,11 +64,11 @@ object DedupIndex {
     // schema inference; a missing dir IS an empty index (the family's
     // empty-guard, [[probeIndexRead]]/[[mergeInto]] honor it)
     if (docs.isEmpty) return
-    docs.select(TextAnalysis.fingerprint(col(textCol)).as("fp"),
+    val fps = docs.select(TextAnalysis.fingerprint(col(textCol)).as("fp"),
         col(idCol).as("doc"))
       .groupBy(col("fp")).agg(min(col("doc")).as("doc"))
       .withColumn("bucket", bucketOf(col("fp")))
-      .repartition(IndexBuckets, col("bucket"))
+    KeyedWrite.spread(fps, Seq("bucket"), IndexBuckets)
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
   }
 
@@ -252,7 +253,7 @@ object DedupIndex {
       .groupBy(col("fp")).agg(min(col("batch_keep")).as("doc"))
       .withColumn("bucket", bucketOf(col("fp")))
     if (!novel.isEmpty)
-      novel.repartition(IndexBuckets, col("bucket"))
+      KeyedWrite.spread(novel, Seq("bucket"), IndexBuckets)
         .write.mode("append").partitionBy("bucket").parquet(path)
   }
 
@@ -309,9 +310,9 @@ object DedupIndex {
         coalesce(col("idx_keep"), col("doc")).as("keep_id"),
         col("idx_keep").isNotNull.as("dup"))
       .localCheckpoint(true)
-    srcRows.join(dstIdx, Seq("fp"), "left_anti")
+    val novel = srcRows.join(dstIdx, Seq("fp"), "left_anti")
       .withColumn("bucket", bucketOf(col("fp")))
-      .repartition(IndexBuckets, col("bucket"))
+    KeyedWrite.spread(novel, Seq("bucket"), IndexBuckets)
       .write.mode("append").partitionBy("bucket").parquet(dstPath)
     graft.core.Pinned.release(srcRows)
     fs.delete(src, true)

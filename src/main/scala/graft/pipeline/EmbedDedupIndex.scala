@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.KeyedWrite
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,7 +64,7 @@ object EmbedDedupIndex {
     // create schema-inference landmines; a missing layout IS an
     // empty index — the family's empty-guard)
     if (sg.isEmpty) return
-    sg.repartition(Cells, col("kb"))
+    KeyedWrite.spread(sg, Seq("kb"), Cells)
       .sortWithinPartitions(col("kb"), col("bucket"), col("doc"))
       .write.mode("append")
       .option("parquet.page.row.count.limit", "512")

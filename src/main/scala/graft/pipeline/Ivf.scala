@@ -908,10 +908,6 @@ object Ivf {
         s"segment $p has no persisted _model (Ivf.saveModel/ensurePair)" +
           " — it is the only witness that the segments share one quantizer")
     }
-    // ONE batched read of every segment's _model, grouped back by
-    // source file — O(1) Spark jobs for the witness check instead of
-    // O(segments) (measured: the per-segment loadModel job was the
-    // dominant serve cost at small corpus sizes, ~0.3 s/segment)
     verifyModelWitnesses(spark, live.map(modelPath), model)
     // quantized-sidecar PARITY: an int8 segment mixed with a PQ
     // segment passes the name-level schema check (both expose a
@@ -1072,12 +1068,16 @@ object Ivf {
     * TakeOrderedAndProject — O(page) rows cross the driver, never
     * the layout; each next page re-enters with the previous page's
     * last id, so no OFFSET scan-and-discard at any depth (the
-    * keyset-vs-offset argument the vdb scroll documents).
+    * keyset-vs-offset argument the vdb scroll documents). A missing
+    * or data-less layout pages empty (the family's missing-layout
+    * convention, [[graft.core.Tombstones.page]]).
     */
   def scroll(spark: SparkSession, path: String, idCol: String,
              afterId: Option[Long], limit: Int,
              filter: Option[Column] = None): DataFrame = {
     require(limit > 0, "scroll limit must be positive")
+    import spark.implicits._
+    if (!servable(spark, path)) return Seq.empty[Long].toDF(idCol)
     readIndexServing(spark, path, idCol)
       .where(filter.getOrElse(lit(true)))
       .where(afterId.map(a => col(idCol) > a).getOrElse(lit(true)))
@@ -1090,13 +1090,25 @@ object Ivf {
     * the Qdrant count-API semantics on the persisted layout: what a
     * dashboard or a quota check reads without a search. One
     * map-side-counted scan over the pruned, pushed-down, masked
-    * serving read; returns a one-row (cnt) frame.
+    * serving read; returns a one-row (cnt) frame, 0 on a missing or
+    * data-less layout.
     */
   def countIndex(spark: SparkSession, path: String, idCol: String,
-                 filter: Option[Column] = None): DataFrame =
-    readIndexServing(spark, path, idCol)
+                 filter: Option[Column] = None): DataFrame = {
+    import spark.implicits._
+    if (!servable(spark, path)) Seq(0L).toDF("cnt")
+    else readIndexServing(spark, path, idCol)
       .where(filter.getOrElse(lit(true)))
       .agg(count(lit(1)).as("cnt"))
+  }
+
+  /** Does the layout hold postings (after the swap recovery every
+    * serving read runs)? The listings' data witness.
+    */
+  private def servable(spark: SparkSession, path: String): Boolean = {
+    graft.core.DirSwap.recoverAt(spark, path)
+    Tombstones.hasData(spark, path, "cluster=")
+  }
 
   /** Retire the tombstone set ([[graft.core.Tombstones.fold]]): the
     * masked ids fold into a physical [[deleteVectors]]-shaped rewrite
@@ -1630,55 +1642,37 @@ object Ivf {
     */
   def loadModel(spark: SparkSession, path: String): IvfModel = {
     import spark.implicits._
-    modelFromRows(spark.read.parquet(path)
+    val rows = spark.read.parquet(path)
       .select(col("level"), col("idx"), col("vec"), col("child"))
       .as[(Int, Int, Array[Float], Array[Int])]
-      .collect())
+      .collect()
+    def table(level: Int): Array[Array[Float]] =
+      rows.filter(_._1 == level).sortBy(_._2).map(_._3)
+    IvfModel(table(0), table(1),
+      rows.filter(_._1 == 2).sortBy(_._2).map(_._4))
   }
 
-  /** Batched model-witness verification — the multi-segment trust
-    * check shared by [[readSegmentsServing]] and
-    * [[MultiVector.searchSegments]]: every `_model` sidecar in
-    * `dirs` must hold a quantizer bit-identical to the serving
-    * `model`. ONE multi-path parquet read grouped back by source
-    * file — O(1) Spark jobs however many segments (measured: a
-    * per-segment loadModel job costs ~0.3 s of fixed driver overhead,
-    * the dominant serve cost at small corpus sizes).
+  /** Model-witness verification — the multi-segment trust check
+    * shared by [[readSegmentsServing]] and
+    * [[MultiVector.searchSegments]]: every `_model` sidecar in `dirs`
+    * must hold a quantizer bit-identical to the serving `model`, by
+    * [[modelMatchesPersisted]]'s one rule (digest compare, one FS read
+    * and no Spark job; full parquet compare only for a pre-digest
+    * `_model`).
     */
   private[pipeline] def verifyModelWitnesses(spark: SparkSession,
-      dirs: Seq[String], model: IvfModel): Unit = {
-    if (dirs.isEmpty) return
-    val hc = spark.sparkContext.hadoopConfiguration
-    import spark.implicits._
-    // input_file_name() is a URI — '=' in a segment name (the
-    // streaming seg=<batchId> convention) arrives as %3D — so both
-    // sides compare as DECODED absolute paths
-    val rows = spark.read.parquet(dirs: _*)
-      .select(input_file_name().as("f"), col("level"), col("idx"),
-        col("vec"), col("child"))
-      .as[(String, Int, Int, Array[Float], Array[Int])]
-      .collect()
-      .map { case (f, l, i, v, c) => (new java.net.URI(f).getPath, l, i, v, c) }
+      dirs: Seq[String], model: IvfModel): Unit =
     dirs.foreach { d =>
-      val dp = new org.apache.hadoop.fs.Path(d)
-      val abs = dp.getFileSystem(hc).makeQualified(dp).toUri.getPath
-      // `$abs/` suffix-anchors on the dir itself: a sibling dir
-      // whose name extends this one ("seg1" vs "seg12") can never
-      // match
-      val mine = rows.filter(_._1.contains(s"$abs/"))
-        .map { case (_, l, i, v, c) => (l, i, v, c) }
-      require(mine.nonEmpty, s"segment model at $d read back empty")
-      require(sameModel(modelFromRows(mine), model),
-        s"segment at $d is assigned under a DIFFERENT coarse " +
-          "quantizer than the serving model — rebuild it or serve " +
-          "it separately")
+      require(modelMatchesPersisted(spark, d, model),
+        s"segment at $d is assigned under a DIFFERENT coarse quantizer " +
+          "than the serving model — rebuild it or serve it separately")
     }
-  }
 
   /** Batched codebook-parity verification for PQ-coded segments:
     * every `_pq` sidecar in `dirs` must hold codebooks bit-identical
-    * to the first's ([[verifyModelWitnesses]]' one-read shape on the
-    * (sub, code, vec, dsub) rows [[Pq.saveModel]] persists).
+    * to the first's. ONE multi-path read of the (sub, code, vec,
+    * dsub) rows [[Pq.saveModel]] persists, grouped back by source
+    * file — O(1) Spark jobs however many segments.
     */
   private def verifyPqWitnesses(spark: SparkSession,
       dirs: Seq[String]): Unit = {
@@ -1706,18 +1700,6 @@ object Ivf {
           s"${dirs.head} — their codes bytes are mutually meaningless; " +
           "rebuild or serve them separately")
     }
-  }
-
-  /** Assemble a quantizer from its persisted (level, idx, vec,
-    * child) rows — shared by [[loadModel]] and the batched
-    * multi-segment witness read.
-    */
-  private def modelFromRows(
-      rows: Array[(Int, Int, Array[Float], Array[Int])]): IvfModel = {
-    def table(level: Int): Array[Array[Float]] =
-      rows.filter(_._1 == level).sortBy(_._2).map(_._3)
-    IvfModel(table(0), table(1),
-      rows.filter(_._1 == 2).sortBy(_._2).map(_._4))
   }
 
   /** Operational HEALTH surface for a persisted index — the one-row

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Tombstones
+import graft.core.{KeyedWrite, Tombstones}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -134,6 +134,13 @@ object MultiVector {
     else Ivf.saveModel(spark, model, modelPath(root))
   }
 
+  /** The docs/ side's rows: the assignment minus its cluster, keyed
+    * by doc bucket.
+    */
+  private def byDoc(assigned: DataFrame): DataFrame =
+    assigned.drop("cluster")
+      .withColumn("db", pmod(col("doc"), lit(DocBuckets.toLong)))
+
   /** Build both sub-layouts from one (doc, vec) frame: per-vector
     * IVF postings for candidate generation, doc-bucketed copies for
     * the gather — plus the `_model` witness the segment paths verify.
@@ -150,12 +157,10 @@ object MultiVector {
     // mid-writeIndex must not leave a witnessed root whose data dirs
     // are half-written.
     graft.core.Par.all(
-      () => graft.core.KeyedWrite.spread(assigned, Seq("cluster"))
+      () => KeyedWrite.spread(assigned, Seq("cluster"))
         .write.mode(SaveMode.Overwrite).partitionBy("cluster")
         .parquet(s"$root/ivf"),
-      () => assigned.drop("cluster")
-        .withColumn("db", pmod(col("doc"), lit(DocBuckets.toLong)))
-        .repartition(DocBuckets, col("db"))
+      () => KeyedWrite.spread(byDoc(assigned), Seq("db"), DocBuckets)
         .write.mode(SaveMode.Overwrite).partitionBy("db")
         .parquet(s"$root/docs"))
     Ivf.saveModel(spark, model, modelPath(root))
@@ -186,12 +191,10 @@ object MultiVector {
     // marker is only written after BOTH complete, so a replay re-runs
     // the whole batch exactly as before.
     graft.core.Par.all(
-      () => graft.core.KeyedWrite.spread(assigned, Seq("cluster"))
+      () => KeyedWrite.spread(assigned, Seq("cluster"))
         .write.mode(SaveMode.Append).partitionBy("cluster")
         .parquet(s"$root/ivf"),
-      () => assigned.drop("cluster")
-        .withColumn("db", pmod(col("doc"), lit(DocBuckets.toLong)))
-        .repartition(DocBuckets, col("db"))
+      () => KeyedWrite.spread(byDoc(assigned), Seq("db"), DocBuckets)
         .write.mode(SaveMode.Append).partitionBy("db")
         .parquet(s"$root/docs"))
     graft.core.Pinned.release(assigned)

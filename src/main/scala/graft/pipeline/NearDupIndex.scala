@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.KeyedWrite
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -134,7 +135,7 @@ object NearDupIndex {
     // empty-microbatch guard); probeBands treats a missing layout as
     // an empty index, which is exactly what it is
     if (sh.isEmpty) return
-    // repartition on the partition columns before the dynamic write:
+    // spread on the partition columns before the dynamic write:
     // each (band, kb) cell's rows land in one task — one file per
     // touched cell per pass, not (tasks × cells) small files. Rows
     // are BUCKET-SORTED within each file with small (512-row) pages
@@ -144,16 +145,16 @@ object NearDupIndex {
     // partitionBy write REQUIRES that order, and a sort that doesn't
     // satisfy it is silently replaced by the writer's partition-only
     // sort, destroying the key order the page pruning depends on).
-    banded(sh, bands, rows, seed)
-      .repartition(bands * BandBuckets, col("band"), col("kb"))
+    KeyedWrite.spread(banded(sh, bands, rows, seed), Seq("band", "kb"),
+        bands * BandBuckets)
       .sortWithinPartitions(col("band"), col("kb"), col("bucket"))
       .write.mode(mode)
       .option("parquet.page.row.count.limit", "512")
       .partitionBy("band", "kb")
       .parquet(s"$path/bands")
-    sh.select(col("doc"), col("hs"))
+    val sets = sh.select(col("doc"), col("hs"))
       .withColumn("db", dbOf(col("doc")))
-      .repartition(SetBuckets, col("db"))
+    KeyedWrite.spread(sets, Seq("db"), SetBuckets)
       .write.mode(mode).partitionBy("db")
       .parquet(s"$path/sets")
   }

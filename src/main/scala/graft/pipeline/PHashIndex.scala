@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.KeyedWrite
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -89,8 +90,7 @@ object PHashIndex {
     // empty increment: write nothing (the family's empty-guard; a
     // missing layout IS an empty index)
     if (bnd.isEmpty) return
-    bnd
-      .repartition(Bands * KeyBuckets, col("band"), col("kb"))
+    KeyedWrite.spread(bnd, Seq("band", "kb"), Bands * KeyBuckets)
       .sortWithinPartitions(col("band"), col("kb"), col("key"), col("doc"))
       .write.mode(mode)
       .option("parquet.page.row.count.limit", "512")

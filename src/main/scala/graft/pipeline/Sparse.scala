@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.core.Tombstones
+import graft.core.{KeyedWrite, Tombstones}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -114,9 +114,9 @@ object Sparse {
   private def writeLayout(postings: DataFrame, path: String,
                           mode: SaveMode): Unit = {
     if (postings.isEmpty) return // missing layout IS an empty index
-    postings.select(col("doc"), col("dim"), col("w"))
+    val rows = postings.select(col("doc"), col("dim"), col("w"))
       .withColumn("dbk", dbkOf(col("dim")))
-      .repartition(DimBuckets, col("dbk"))
+    KeyedWrite.spread(rows, Seq("dbk"), DimBuckets)
       .sortWithinPartitions(col("dbk"), col("dim"), col("doc"))
       .write.mode(mode)
       .option("parquet.page.row.count.limit", "512")

@@ -134,14 +134,15 @@ private[streaming] object Staging {
     val span = math.max(1L, (hi - lo) / n + 1L) // ceil width, >= 1
     // ONE corpus pass: dynamic-partition write on the batch id (the
     // partition column never reaches file contents, so the split
-    // schema equals the source schema), hash-repartitioned so each
-    // batch lands as a single file in its directory — vs a
-    // scan-per-split loop, which reads the source n times
+    // schema equals the source schema), hash-spread on it
+    // ([[graft.core.KeyedWrite]]) so each batch lands as a single
+    // file in its directory — vs a scan-per-split loop, which reads
+    // the source n times
     val tmp = java.nio.file.Files.createTempDirectory("graft_stage_w")
     try {
-      df.withColumn("__b",
-          least(lit(n - 1), expr(s"(`$idCol` - $lo) div $span").cast("int")))
-        .repartition(n, col("__b"))
+      graft.core.KeyedWrite.spread(df.withColumn("__b",
+          least(lit(n - 1), expr(s"(`$idCol` - $lo) div $span").cast("int"))),
+          Seq("__b"), n)
         .write.partitionBy("__b").mode("overwrite").parquet(tmp.toString)
       for (i <- 0 until n) {
         val dir = tmp.resolve(s"__b=$i")

@@ -62,9 +62,12 @@ object StreamingDedup {
     */
   val ProbeKeyChunk = 256
 
+  /** 16-bit bands per 64-bit signature. */
+  private val Bands = 4
+
   private def banded(sigs: DataFrame): DataFrame =
     sigs.select(col("doc"), col("sh"),
-      posexplode(array((0 until 4).map(b =>
+      posexplode(array((0 until Bands).map(b =>
         shiftrightunsigned(col("sh"), b * 16).bitwiseAND(lit(0xffffL))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "key")
       .withColumn("kb", col("key") % IndexBuckets)
@@ -183,7 +186,7 @@ object StreamingDedup {
   /** Append banded signature rows to the on-disk index. One file per
     * touched (band, kb) dir per batch: repartition on the partition
     * keys first, or partitionBy fans every write task out across all
-    * 256 dirs (task-count × dirs tiny files). Rows are KEY-SORTED
+    * 64 dirs (task-count × dirs tiny files). Rows are KEY-SORTED
     * within each file and pages kept small (512 rows) so probe-time
     * per-key filters prune at the parquet column-index level — the
     * piece that keeps a large batch's probe sublinear in index size.
@@ -195,13 +198,9 @@ object StreamingDedup {
     // doesn't already satisfy it gets replaced by the writer's own
     // (band, kb)-only sort — silently destroying the key order the
     // probe's page pruning depends on (measured: zero pruning)
-    // explicit count (KeyedWrite discipline): a bare keyed
-    // repartition lets AQE coalesce the small shuffle to ONE task,
-    // which then opens every touched (band, kb) dir's file
-    // sequentially — per-file cost is byte-blind
-    banded.repartition(
-        math.max(1, banded.sparkSession.sessionState.conf.numShufflePartitions),
-        col("band"), col("kb"))
+    // explicit count (KeyedWrite), capped at the layout's dir count
+    graft.core.KeyedWrite.spread(banded, Seq("band", "kb"),
+        Bands * IndexBuckets)
       .sortWithinPartitions(col("band"), col("kb"), col("key"))
       .write.mode(SaveMode.Append)
       .option("parquet.page.row.count.limit", "512")

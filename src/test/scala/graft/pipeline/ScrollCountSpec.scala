@@ -53,6 +53,13 @@ class ScrollCountSpec extends SparkTestBase {
     assert(got == want && want > 0)
     assert(Ivf.countIndex(spark, idx, "vec_id").head().getLong(0) ==
       emb.where(col("vec_id") % 5 =!= 1).count())
+    // a missing or emptied layout pages empty and counts zero
+    assert(Ivf.countIndex(spark, idx + "_missing", "vec_id")
+      .head().getLong(0) == 0L)
+    assert(Ivf.scroll(spark, idx + "_missing", "vec_id", None, 5).count() == 0L)
+    Ivf.deleteVectors(spark, idx, emb.select(col("vec_id")), "vec_id")
+    assert(Ivf.countIndex(spark, idx, "vec_id").head().getLong(0) == 0L)
+    assert(Ivf.scroll(spark, idx, "vec_id", None, 5).count() == 0L)
   }
 
   test("scroll rejects a non-positive limit") {

@@ -283,6 +283,19 @@ class SegmentServeSpec extends SparkTestBase {
       Ivf.readSegmentsServing(spark, Seq(a, b), "vec_id", m1)
     }
     assert(e.getMessage.contains("DIFFERENT coarse quantizer"))
+    // layouts saved before the digest sidecar are checked by their
+    // parquet: a still serves, b is still refused
+    val fs = new org.apache.hadoop.fs.Path(a)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(a, b).foreach(p => assert(fs.delete(
+      new org.apache.hadoop.fs.Path(Ivf.modelPath(p), "_digest"), false)))
+    assert(Ivf.readSegmentsServing(spark, Seq(a), "vec_id", m1).count() ==
+      emb.count())
+    val e2 = intercept[IllegalArgumentException] {
+      Ivf.readSegmentsServing(spark, Seq(a, b), "vec_id", m1)
+    }
+    assert(e2.getMessage.contains("DIFFERENT coarse quantizer") &&
+      e2.getMessage.contains(b))
   }
 
   test("ivf segments serve requires a model witness per segment") {
